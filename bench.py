@@ -396,8 +396,7 @@ def layer_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
     medians, dispersion = {bronze: {n, median, spread}, silver: ...}
     where spread = max−min rate across the measured passes.
     """
-    from spaceparts_data_pipeline_spark.plans import bronze as bronze_plan
-    from spaceparts_data_pipeline_spark.plans import silver as silver_plan
+    from spaceparts_data_pipeline_spark.plans.runner import run_bronze_layer, run_silver_layer
     from spaceparts_data_pipeline_spark.sources.parquet import load_table
 
     n_rows = 0
@@ -414,28 +413,20 @@ def layer_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
         prev = spark.catalog.currentDatabase()
         spark.catalog.setCurrentDatabase(db)
         try:
-            tables = ["lineitem", "orders", "events"]
-            sources = {t: load_table(spark, sf_dir, t) for t in tables}
+            sources = {t: load_table(spark, sf_dir, t) for t in ("lineitem", "orders", "events")}
             n_rows = sum(df.count() for df in sources.values())
 
-            from spaceparts_data_pipeline_spark.plans.logs import LogBuffer
-
-            # one buffered log append per layer pass — the orchestrated
-            # path (plans/runner.py) the production CLI runs; flush is
-            # inside the timed region, it IS part of the pass
+            # the orchestrated layer passes the production CLI runs; the
+            # log flush is inside the timed region, it IS part of the pass
             start = time.perf_counter()
-            buf = LogBuffer(spark, "bronze_execution_log")
-            for t, df in sources.items():
-                bronze_plan.run_full(spark, df, t, log_buffer=buf)
-            buf.flush()
+            b = run_bronze_layer(spark, sources)
             bronze_sec = time.perf_counter() - start
 
             start = time.perf_counter()
-            buf = LogBuffer(spark, "silver_execution_log")
-            for t in tables:
-                silver_plan.run_full(spark, t, log_buffer=buf)
-            buf.flush()
+            s = run_silver_layer(spark)
             silver_sec = time.perf_counter() - start
+            assert all(r["status"] == "success" and "log_flush_error" not in r
+                       for r in (b, s)), (b, s)
             if attempt > 0:
                 samples["bronze"].append(n_rows / bronze_sec * 3600)
                 samples["silver"].append(n_rows / silver_sec * 3600)

@@ -806,6 +806,49 @@ def overwrite_via_staging(
         spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
 
 
+def overwrite_partitions(spark: SparkSession, phys: str, df) -> None:
+    """Dynamic partition overwrite of the physical table ``phys``: only
+    the partitions ``df`` holds are replaced. ``df`` is checkpointed
+    first, so a frame that reads ``phys`` itself (a merge of the touched
+    partitions) is materialized before the write deletes its inputs.
+
+    The session conf is toggled around the write: ``insertInto`` ignores
+    the per-write ``partitionOverwriteMode`` option and would run a
+    STATIC overwrite that wipes every untouched partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        df.localCheckpoint(eager=True).write.mode("overwrite").insertInto(phys)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def append_with_evolution(spark: SparkSession, incoming, target: str) -> None:
+    """Append with schema evolution (the reference's Delta `mergeSchema`
+    semantic, K2, re-expressed for plain Parquet tables).
+
+    - incoming ⊆ existing columns: plain append (missing cols → NULL).
+    - incoming adds columns: one-time table rewrite with the union
+      schema (existing rows get NULLs), then the append is part of the
+      rewrite. On Delta-capable clusters this whole helper collapses to
+      `option("mergeSchema", "true")`.
+    """
+    existing = spark.table(target)
+    new_cols = [c for c in incoming.columns if c not in existing.columns]
+    if not new_cols:
+        # append to the PHYSICAL table — version-managed targets front a
+        # view, and views accept no appends
+        safe_save_as_table(
+            incoming.unionByName(existing.limit(0), allowMissingColumns=True),
+            resolve_physical(spark, target), mode="append")
+        return
+    merged = existing.unionByName(incoming, allowMissingColumns=True)
+    # staged swap materializes the union-schema rewrite before the old
+    # table drops — crash-safe, no executor-memory checkpoint
+    overwrite_via_staging(spark, target, merged)
+
+
 def compact_table(
     spark: SparkSession,
     table: str,
@@ -836,13 +879,7 @@ def compact_table(
         sub = df.filter(F.col(pcol).isin(partition_values))
         # one shuffle keyed by partition value → one writer task per
         # value → one file per compacted partition (AQE coalesces)
-        out = sub.repartition(F.col(pcol)).localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").insertInto(phys)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        overwrite_partitions(spark, phys, sub.repartition(F.col(pcol)))
     elif stats["n_files"] > target_files:
         if pcols:
             overwrite_via_staging(

@@ -167,16 +167,11 @@ def merge_into_table(
         # spark.spaceparts.filesPerPartition salt relieves a skewed /
         # oversized touched month here too.
         from spaceparts_data_pipeline_spark.operators.maintenance import (
-            align_writers_to_partitions,
+            align_writers_to_partitions, overwrite_partitions,
         )
 
-        merged = align_writers_to_partitions(spark, merged, [partition_col])
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.localCheckpoint(eager=True).write.mode("overwrite").insertInto(phys)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        overwrite_partitions(
+            spark, phys, align_writers_to_partitions(spark, merged, [partition_col]))
     else:
         from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 

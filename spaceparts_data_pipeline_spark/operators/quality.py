@@ -35,6 +35,22 @@ def _value_columns(df: DataFrame) -> list[str]:
     return [c for c, t in df.dtypes if "value" in c.lower() and t in ("double", "float")]
 
 
+def future_horizon(horizon: dt.date | str | None = None) -> Column:
+    """Silver's future-date cutoff: ``current_date() + FUTURE_DAYS``, or
+    the pinned ``horizon`` (deterministic tests). Rows dated past it are
+    quarantined, and incremental watermarks ignore them."""
+    if horizon is None:
+        return F.date_add(F.current_date(), FUTURE_DAYS)
+    return F.lit(str(horizon)).cast("date")
+
+
+def watermark_max(col: str, horizon: dt.date | str | None = None) -> Column:
+    """``max(col)`` over the rows at or before :func:`future_horizon`.
+    A quarantined future-dated row must not become the next scan's
+    watermark: one year-2200 row would skip every later drop."""
+    return F.max(F.when(F.col(col).cast("date") <= future_horizon(horizon), F.col(col)))
+
+
 def quarantine_predicates(
     df: DataFrame,
     horizon: dt.date | str | None = None,
@@ -50,9 +66,7 @@ def quarantine_predicates(
     names don't follow them. ``horizon`` pins the future-date cutoff for
     deterministic tests; defaults to current_date()+730 like the reference.
     """
-    horizon_col = (
-        F.date_add(F.current_date(), FUTURE_DAYS) if horizon is None else F.lit(str(horizon)).cast("date")
-    )
+    horizon_col = future_horizon(horizon)
     preds: list[tuple[Column, str]] = []
     for c in (date_cols if date_cols is not None else _date_columns(df)):
         preds.append((F.col(c).cast("date") > horizon_col, f"future_date:{c}"))

@@ -16,39 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spaceparts_data_pipeline_spark.operators.identifiers import clean_columns
+from spaceparts_data_pipeline_spark.operators.quality import watermark_max
 from spaceparts_data_pipeline_spark.plans import logs
 from spaceparts_data_pipeline_spark.sources.parquet import DEFAULT_OVERLAP, watermark_scan
 
 SOURCE_SYSTEM = "spaceparts"
-
-
-def _append_with_evolution(spark: SparkSession, incoming: DataFrame, target: str) -> None:
-    """Append with schema evolution (the reference's Delta `mergeSchema`
-    semantic, K2, re-expressed for plain Parquet tables).
-
-    - incoming ⊆ existing columns: plain append (missing cols → NULL).
-    - incoming adds columns: one-time table rewrite with the union
-      schema (existing rows get NULLs), then the append is part of the
-      rewrite. On Delta-capable clusters this whole helper collapses to
-      `option("mergeSchema", "true")`.
-    """
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        overwrite_via_staging, resolve_physical, safe_save_as_table,
-    )
-
-    existing = spark.table(target)
-    new_cols = [c for c in incoming.columns if c not in existing.columns]
-    if not new_cols:
-        # append to the PHYSICAL table — version-managed targets front a
-        # view, and views accept no appends
-        safe_save_as_table(
-            incoming.unionByName(existing.limit(0), allowMissingColumns=True),
-            resolve_physical(spark, target), mode="append")
-        return
-    merged = existing.unionByName(incoming, allowMissingColumns=True)
-    # staged swap materializes the union-schema rewrite before the old
-    # table drops — crash-safe, no executor-memory checkpoint
-    overwrite_via_staging(spark, target, merged)
 
 
 def prepare(df: DataFrame) -> DataFrame:
@@ -60,29 +32,11 @@ def prepare(df: DataFrame) -> DataFrame:
     )
 
 
-def run_full(
-    spark: SparkSession,
-    source: DataFrame,
-    table: str,
-    execution_id: str | None = None,
-    log_table: str = "bronze_execution_log",
-    log_buffer=None,
-) -> dict:
-    """``log_buffer``: a ``logs.LogBuffer`` shared across the layer pass —
-    each 1-row ``append_log`` is a full Spark job (~0.4 s fixed, ~20% of
-    an sf0.1 silver pass per the r15 step profile), so a multi-table run
-    batches success rows into ONE append at the caller's flush. Without
-    it (single-table callers) the row lands immediately as before."""
+def run_full(spark: SparkSession, source: DataFrame, table: str) -> dict:
     from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
-    execution_id = execution_id or logs.new_execution_id()
-    out = prepare(source)
-    overwrite_via_staging(spark, f"bronze_{table}", out)
+    overwrite_via_staging(spark, f"bronze_{table}", prepare(source))
     n = spark.table(f"bronze_{table}").count()
-    if log_buffer is not None:
-        log_buffer.add("bronze", table, execution_id, "success", n)
-    else:
-        logs.append_log(spark, log_table, "bronze", table, execution_id, "success", n)
     return {"table": table, "status": "success", "records": n, "mode": "full"}
 
 
@@ -93,19 +47,21 @@ def run_incremental(
     ts_col: str = "dwcreateddate",
     execution_id: str | None = None,
     control_table: str = "bronze_incremental_control",
-    log_table: str = "bronze_execution_log",
     overlap: dt.timedelta = DEFAULT_OVERLAP,
-    log_buffer=None,
 ) -> dict:
     """Watermarked append: rows above (last watermark − overlap); first
     run falls back to full extraction (S10 semantics).
 
-    ``log_buffer`` batches the success LOG row with the rest of the
-    layer pass (see :func:`run_full`); the CONTROL row always lands
-    immediately — it carries the watermark the next run scans from, and
+    The CONTROL row lands here, per table, as soon as the append is
+    done: it carries the watermark the next run scans from, and
     deferring it would widen the crash window in which the overlap
-    re-append duplicates rows."""
+    re-append duplicates rows. The new watermark ignores rows dated
+    past silver's future-date horizon: silver quarantines them, and one
+    such row (year 2200) would otherwise push the watermark past every
+    later drop."""
     from pyspark.storagelevel import StorageLevel
+
+    from spaceparts_data_pipeline_spark.operators import maintenance
 
     execution_id = execution_id or logs.new_execution_id()
     wm = logs.last_watermark(spark, control_table, table)
@@ -121,22 +77,14 @@ def run_incremental(
     try:
         target = f"bronze_{table}"
         if spark.catalog.tableExists(target):
-            _append_with_evolution(spark, incoming, target)
+            maintenance.append_with_evolution(spark, incoming, target)
         else:
-            from spaceparts_data_pipeline_spark.operators.maintenance import (
-                safe_save_as_table,
-            )
-
-            safe_save_as_table(incoming, target, mode="overwrite")
+            maintenance.safe_save_as_table(incoming, target, mode="overwrite")
         stats = incoming.agg(
-            F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mx")
+            F.count(F.lit(1)).alias("n"), watermark_max(ts_col).alias("mx")
         ).collect()[0]
     finally:
         incoming.unpersist()
     new_wm = stats["mx"] or wm
     logs.append_control(spark, control_table, table, execution_id, new_wm, "success", stats["n"])
-    if log_buffer is not None:
-        log_buffer.add("bronze", table, execution_id, "success", stats["n"])
-    else:
-        logs.append_log(spark, log_table, "bronze", table, execution_id, "success", stats["n"])
     return {"table": table, "status": "success", "records": stats["n"], "mode": "incremental", "watermark": new_wm}

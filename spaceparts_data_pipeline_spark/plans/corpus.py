@@ -424,40 +424,37 @@ def run_corpus_ingest(
         # appends are harmless under the stores' DISTINCT screen semantics).
         corpus_root = os.path.join(out_dir, "corpus")
         manifest_root = os.path.join(out_dir, "manifest")
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            admitted.withColumn("run_id", F.lit(run_id)).write.mode(
-                "overwrite").partitionBy("run_id").parquet(corpus_root)
-            # "No corpus yet" means NO DATA FILES, not "dir missing":
-            # an all-screened first run's empty dynamic overwrite still
-            # creates the (empty) directory, and reading it would raise
-            # UNABLE_TO_INFER_SCHEMA. has_data_files distinguishes that
-            # from a real read failure, which must still raise — the
-            # store appends below being silently skipped with admitted
-            # docs already durable would be a permanent re-admit split.
-            if not dedup.has_data_files(spark, corpus_root):
-                return stats
-            durable = spark.read.parquet(corpus_root).filter(
-                F.col("run_id") == run_id).drop("run_id")
-            if shuffle_seed is not None:
-                order = text.corpus_shuffle(
-                    durable, shuffle_seed, n_shards=shuffle_shards, id_col=id_col)
-                manifest = text.sequence_packing(
-                    durable.join(order, id_col),
-                    capacity=pack_capacity, shard_col="shard",
-                    id_col="position", text_col=text_col,
-                    keep_cols=(id_col,),
-                )
-            else:
-                manifest = text.sequence_packing(
-                    durable, capacity=pack_capacity,
-                    shard_col=shard_col, id_col=id_col, text_col=text_col,
-                )
-            manifest.withColumn("run_id", F.lit(run_id)).write.mode(
-                "overwrite").partitionBy("run_id").parquet(manifest_root)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        admitted.withColumn("run_id", F.lit(run_id)).write.mode(
+            "overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "run_id").parquet(corpus_root)
+        # "No corpus yet" means NO DATA FILES, not "dir missing":
+        # an all-screened first run's empty dynamic overwrite still
+        # creates the (empty) directory, and reading it would raise
+        # UNABLE_TO_INFER_SCHEMA. has_data_files distinguishes that
+        # from a real read failure, which must still raise — the
+        # store appends below being silently skipped with admitted
+        # docs already durable would be a permanent re-admit split.
+        if not dedup.has_data_files(spark, corpus_root):
+            return stats
+        durable = spark.read.parquet(corpus_root).filter(
+            F.col("run_id") == run_id).drop("run_id")
+        if shuffle_seed is not None:
+            order = text.corpus_shuffle(
+                durable, shuffle_seed, n_shards=shuffle_shards, id_col=id_col)
+            manifest = text.sequence_packing(
+                durable.join(order, id_col),
+                capacity=pack_capacity, shard_col="shard",
+                id_col="position", text_col=text_col,
+                keep_cols=(id_col,),
+            )
+        else:
+            manifest = text.sequence_packing(
+                durable, capacity=pack_capacity,
+                shard_col=shard_col, id_col=id_col, text_col=text_col,
+            )
+        manifest.withColumn("run_id", F.lit(run_id)).write.mode(
+            "overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "run_id").parquet(manifest_root)
         stats["sec_write_pack"] = _tick()
 
         append_store(

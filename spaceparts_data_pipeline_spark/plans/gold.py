@@ -209,57 +209,44 @@ MODELS: list[GoldModel] = [
 ]
 
 
-def run_full(spark: SparkSession, execution_id: str | None = None,
-             log_table: str = "gold_execution_log", models: list[GoldModel] | None = None,
-             log_buffer=None) -> dict:
-    """``log_buffer``: a shared ``logs.LogBuffer`` — when the caller owns
-    one (the incremental driver's per-model full-refresh fallback), the
-    success rows batch into ITS flush and this function performs no
-    flush of its own (the owner reports flush failures); without it this
-    run owns the buffer and flushes once at the end."""
-    execution_id = execution_id or logs.new_execution_id()
-    results = {}
-    # one log append per RUN, not per model: each 1-row append is a
-    # full Spark job (~0.4 s fixed), ~2.5 s across a 6-model pass;
-    # failure rows still flush immediately (LogBuffer contract)
-    owns_buffer = log_buffer is None
-    log_buf = log_buffer if log_buffer is not None else logs.LogBuffer(spark, log_table)
-    flush_err = None
-    try:
-        for m in models or MODELS:
-            try:
-                from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
+def _full_model(spark: SparkSession, m: GoldModel) -> dict:
+    from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
-                df = m.builder(spark)
-                if m.partition:
-                    pcol, pexpr = m.partition
-                    overwrite_via_staging(spark, m.name, df.withColumn(pcol, pexpr()),
-                                          partition_by=pcol)
-                else:
-                    overwrite_via_staging(spark, m.name, df)
-                n = spark.table(m.name).count()
-                log_buf.add("gold", m.name, execution_id, "success", n)
-                results[m.name] = {"status": "success", "records": n}
-            except Exception as exc:  # noqa: BLE001 - per-table isolation, §3.2 status accounting
-                log_buf.add("gold", m.name, execution_id, "failed", None, str(exc)[:500])
-                results[m.name] = {"status": "failed", "error": str(exc)}
-    finally:
-        if owns_buffer:
-            flush_err = log_buf.flush_safe()
+    df = m.builder(spark)
+    if m.partition:
+        pcol, pexpr = m.partition
+        overwrite_via_staging(spark, m.name, df.withColumn(pcol, pexpr()), partition_by=pcol)
+    else:
+        overwrite_via_staging(spark, m.name, df)
+    return {"status": "success", "records": spark.table(m.name).count()}
+
+
+def _run_models(spark: SparkSession, models: list[GoldModel] | None, step,
+                execution_id: str) -> dict:
+    """One gold pass through ``logs.run_tables`` (one log append per
+    pass, failure rows at once). A failed log flush surfaces as a
+    failed ``_execution_log`` entry (same shape as a model entry so
+    _status/notify consumers handle it): the log no longer matches
+    table state, which is a completed_with_errors condition, not a
+    silent warning."""
+    by_name = {m.name: m for m in models or MODELS}
+    results, flush_err = logs.run_tables(
+        spark, "gold", by_name, lambda name: step(by_name[name]), execution_id)
     if flush_err:
-        # surface the lost log rows in the layer result (same shape as a
-        # table entry so _status/notify consumers handle it): the log no
-        # longer matches table state, which is a completed_with_errors
-        # condition, not a silent warning
         results["_execution_log"] = {"status": "failed", "error": flush_err}
     return results
+
+
+def run_full(spark: SparkSession, execution_id: str | None = None,
+             models: list[GoldModel] | None = None) -> dict:
+    execution_id = execution_id or logs.new_execution_id()
+    return _run_models(spark, models, lambda m: _full_model(spark, m), execution_id)
 
 
 def run_incremental(
     spark: SparkSession,
     watermark: dt.datetime,
     execution_id: str | None = None,
-    log_table: str = "gold_execution_log",
     models: list[GoldModel] | None = None,
     force_full_refresh: bool = False,
 ) -> dict:
@@ -267,112 +254,90 @@ def run_incremental(
     then MERGE; facts → watermark filter on the rebuilt rows (P6) then
     MERGE on the composite business key (K3). Partitioned models rewrite
     only the partitions the delta touches (dynamic partition overwrite —
-    the Parquet analog of Delta ``MERGE INTO``'s file-level rewrite)."""
+    the Parquet analog of Delta ``MERGE INTO``'s file-level rewrite).
+    A model without a table yet (or ``force_full_refresh``) is rebuilt
+    in full instead."""
     execution_id = execution_id or logs.new_execution_id()
-    results = {}
-    log_buf = logs.LogBuffer(spark, log_table)
+
+    def step(m: GoldModel) -> dict:
+        if force_full_refresh or not spark.catalog.tableExists(m.name):
+            return {**_full_model(spark, m), "mode": "full_refresh"}
+        return _merge_model(spark, m, watermark, execution_id)
+
+    return _run_models(spark, models, step, execution_id)
+
+
+def _merge_model(spark: SparkSession, m: GoldModel, watermark: dt.datetime,
+                 execution_id: str) -> dict:
+    source = spark.table(f"silver_{m.source_tables[0]}")
+    changed = source.filter(F.col(m.watermark_col) >= F.lit(watermark))
+    rebuilt = m.builder(spark)
+    # restrict the rebuild to changed business keys where the source
+    # carries them (J8); models whose keys are derived (e.g. the
+    # calendar's date_key) fall back to a full-delta MERGE.
+    join_keys = [c for c in m.merge_keys if c in changed.columns]
+    # Secondary inputs (joined dims) don't carry the merge keys,
+    # so a fresh row there can only reach gold rows whose PRIMARY
+    # rows didn't change through a FULL-delta merge: a corrected
+    # FX rate must reprice invoices that never changed. "Changed"
+    # is tracked per (model, secondary) in a control table
+    # against the secondary's OWN previously-processed max
+    # watermark — NOT against the loose lookback watermark, which
+    # would condemn the model to full merges for the entire
+    # lookback window after every routine dim refresh. One 1-row
+    # max-agg per secondary per run (dims are the small sides);
+    # the control row lands only after the merge succeeds, so a
+    # failed run re-detects the change next time.
+    pending_controls: dict[str, dt.datetime | None] = {}
+    for t in m.source_tables[1:]:
+        sec = spark.table(f"silver_{t}")
+        if m.watermark_col not in sec.columns:
+            continue
+        cur = sec.agg(F.max(m.watermark_col)).collect()[0][0]
+        key = f"{m.name}:{t}"
+        if cur != logs.last_watermark(spark, SECONDARY_CONTROL_TABLE, key):
+            pending_controls[key] = cur
+    if join_keys and not pending_controls:
+        # Cast the changed-side keys through the rebuilt side's
+        # types (e.g. silver TIMESTAMP → gold DATE): a raw
+        # DATE = TIMESTAMP comparison coerces DATE to midnight,
+        # silently dropping any non-midnight update from the delta.
+        # Null-safe comparison throughout: standardize_key maps
+        # 'UNKNOWN'/'N/A'/'' to NULL, so NULL merge keys are a
+        # real population — a plain equi-semi-join would silently
+        # drop their updates from the delta (merge_into_table
+        # itself matches them with eqNullSafe for the same
+        # reason).
+        from functools import reduce
+
+        rtypes = dict(rebuilt.dtypes)
+        keys_df = changed.select(
+            *[F.col(k).cast(rtypes[k]).alias(k) for k in join_keys]
+        ).distinct()
+        cond = reduce(
+            lambda a, b: a & b,
+            [rebuilt[k].eqNullSafe(keys_df[k]) for k in join_keys],
+        )
+        delta = rebuilt.join(keys_df, cond, "left_semi")
+    else:
+        delta = rebuilt
+    if m.partition:
+        pcol, pexpr = m.partition
+        delta = delta.withColumn(pcol, pexpr())
+    # The delta (bounded: changed keys only) is consumed twice —
+    # once by the merge, once by the record count. Persist +
+    # count FIRST so the merge reads the cache instead of
+    # re-executing the builder joins + semi-join a second time.
+    delta = delta.persist()
     try:
-        return _run_incremental_models(
-            spark, watermark, execution_id, log_table, models,
-            force_full_refresh, log_buf, results)
+        n = delta.count()
+        if m.partition:
+            merge_into_table(spark, m.name, delta, m.merge_keys, partition_col=m.partition[0])
+        else:
+            merge_into_table(spark, m.name, delta, m.merge_keys)
     finally:
-        # try/finally like run_full: a BaseException escaping the loop
-        # (Ctrl-C after 5 of 6 models merged) must not lose the
-        # buffered success rows — the log must match table state.
-        # results is the SAME dict _run_incremental_models returns, so
-        # the flush error lands in the caller's view too
-        flush_err = log_buf.flush_safe()
-        if flush_err:
-            results["_execution_log"] = {"status": "failed", "error": flush_err}
-
-
-def _run_incremental_models(spark, watermark, execution_id, log_table,
-                            models, force_full_refresh, log_buf, results):
-    for m in models or MODELS:
-        try:
-            if force_full_refresh or not spark.catalog.tableExists(m.name):
-                # share THIS run's buffer: a per-model nested buffer would
-                # pay a separate flush job per model, and its flush
-                # failure ('_execution_log' in the nested result) was
-                # silently discarded by the [m.name] projection
-                results[m.name] = run_full(spark, execution_id, log_table,
-                                           models=[m], log_buffer=log_buf)[m.name]
-                results[m.name]["mode"] = "full_refresh"
-                continue
-            source = spark.table(f"silver_{m.source_tables[0]}")
-            changed = source.filter(F.col(m.watermark_col) >= F.lit(watermark))
-            rebuilt = m.builder(spark)
-            # restrict the rebuild to changed business keys where the source
-            # carries them (J8); models whose keys are derived (e.g. the
-            # calendar's date_key) fall back to a full-delta MERGE.
-            join_keys = [c for c in m.merge_keys if c in changed.columns]
-            # Secondary inputs (joined dims) don't carry the merge keys,
-            # so a fresh row there can only reach gold rows whose PRIMARY
-            # rows didn't change through a FULL-delta merge: a corrected
-            # FX rate must reprice invoices that never changed. "Changed"
-            # is tracked per (model, secondary) in a control table
-            # against the secondary's OWN previously-processed max
-            # watermark — NOT against the loose lookback watermark, which
-            # would condemn the model to full merges for the entire
-            # lookback window after every routine dim refresh. One 1-row
-            # max-agg per secondary per run (dims are the small sides);
-            # the control row lands only after the merge succeeds, so a
-            # failed run re-detects the change next time.
-            pending_controls: dict[str, dt.datetime | None] = {}
-            for t in m.source_tables[1:]:
-                sec = spark.table(f"silver_{t}")
-                if m.watermark_col not in sec.columns:
-                    continue
-                cur = sec.agg(F.max(m.watermark_col)).collect()[0][0]
-                key = f"{m.name}:{t}"
-                if cur != logs.last_watermark(spark, SECONDARY_CONTROL_TABLE, key):
-                    pending_controls[key] = cur
-            if join_keys and not pending_controls:
-                # Cast the changed-side keys through the rebuilt side's
-                # types (e.g. silver TIMESTAMP → gold DATE): a raw
-                # DATE = TIMESTAMP comparison coerces DATE to midnight,
-                # silently dropping any non-midnight update from the delta.
-                # Null-safe comparison throughout: standardize_key maps
-                # 'UNKNOWN'/'N/A'/'' to NULL, so NULL merge keys are a
-                # real population — a plain equi-semi-join would silently
-                # drop their updates from the delta (merge_into_table
-                # itself matches them with eqNullSafe for the same
-                # reason).
-                from functools import reduce
-
-                rtypes = dict(rebuilt.dtypes)
-                keys_df = changed.select(
-                    *[F.col(k).cast(rtypes[k]).alias(k) for k in join_keys]
-                ).distinct()
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [rebuilt[k].eqNullSafe(keys_df[k]) for k in join_keys],
-                )
-                delta = rebuilt.join(keys_df, cond, "left_semi")
-            else:
-                delta = rebuilt
-            if m.partition:
-                pcol, pexpr = m.partition
-                delta = delta.withColumn(pcol, pexpr())
-            # The delta (bounded: changed keys only) is consumed twice —
-            # once by the merge, once by the record count. Persist +
-            # count FIRST so the merge reads the cache instead of
-            # re-executing the builder joins + semi-join a second time.
-            delta = delta.persist()
-            try:
-                n = delta.count()
-                if m.partition:
-                    merge_into_table(spark, m.name, delta, m.merge_keys, partition_col=m.partition[0])
-                else:
-                    merge_into_table(spark, m.name, delta, m.merge_keys)
-            finally:
-                delta.unpersist()
-            for key, cur in pending_controls.items():
-                logs.append_control(spark, SECONDARY_CONTROL_TABLE, key,
-                                    execution_id, cur, "success")
-            log_buf.add("gold", m.name, execution_id, "success", n)
-            results[m.name] = {"status": "success", "records": n, "mode": "incremental"}
-        except Exception as exc:  # noqa: BLE001 - per-table isolation, §3.2 status accounting
-            log_buf.add("gold", m.name, execution_id, "failed", None, str(exc)[:500])
-            results[m.name] = {"status": "failed", "error": str(exc)}
-    return results
+        delta.unpersist()
+    for key, cur in pending_controls.items():
+        logs.append_control(spark, SECONDARY_CONTROL_TABLE, key,
+                            execution_id, cur, "success")
+    return {"status": "success", "records": n, "mode": "incremental"}

@@ -95,7 +95,7 @@ class LogBuffer:
              status, record_count, message))
         if status != "success":
             # immediate-flush contract for failure rows — but this add
-            # runs INSIDE the layer runners' per-table except handlers,
+            # runs INSIDE run_tables' per-table except handler,
             # so a log-sink failure here must not escape the isolation
             # either; the rows stay buffered (see flush) and the layer's
             # finally-flush retries and reports them
@@ -119,7 +119,7 @@ class LogBuffer:
 
     def flush_safe(self) -> str | None:
         """``flush()`` that cannot abort the pipeline: the batched flush
-        runs in the layer runners' ``finally``, OUTSIDE the per-table
+        runs in :func:`run_tables`' ``finally``, OUTSIDE the per-table
         isolation — an execution-log write failure there must be
         reported in the layer result, not raised, or a log-table
         problem crashes a run whose data tables all succeeded (the old
@@ -134,6 +134,38 @@ class LogBuffer:
             logging.getLogger(__name__).warning(
                 "execution-log flush to %s failed: %s", self.log_table, exc)
             return str(exc)[:500]
+
+
+def run_tables(spark: SparkSession, layer: str, items, step,
+               execution_id: str) -> tuple[dict, str | None]:
+    """One layer pass under the reference's per-table status rule
+    (bronze_processor.py:531-545, Gold_full_load cell 11): ``step(item)``
+    runs each item in isolation and returns its result dict. An
+    exception becomes a ``failed`` entry whose log row flushes at once
+    (the alert chain reads it); a ``success`` result's row batches into
+    ONE ``{layer}_execution_log`` append per pass. Other statuses
+    (``skipped``) log nothing.
+
+    Returns ``(results, flush_error)``: the final flush runs in
+    ``finally`` so a BaseException escaping mid-pass cannot lose the
+    buffered rows of tables that did land, and its failure is returned,
+    not raised (see :meth:`LogBuffer.flush_safe`)."""
+    buf = LogBuffer(spark, f"{layer}_execution_log")
+    results: dict = {}
+    try:
+        for item in items:
+            try:
+                res = step(item)
+            except Exception as exc:  # noqa: BLE001 - per-table isolation
+                buf.add(layer, item, execution_id, "failed", None, str(exc)[:500])
+                res = {"table": item, "status": "failed", "error": str(exc)}
+            else:
+                if res.get("status") == "success":
+                    buf.add(layer, item, execution_id, "success", res.get("records"))
+            results[item] = res
+    finally:
+        flush_err = buf.flush_safe()
+    return results, flush_err
 
 
 def append_control(

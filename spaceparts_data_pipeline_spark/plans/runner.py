@@ -24,53 +24,31 @@ def _status(results: dict) -> str:
     return "failed"
 
 
-def run_bronze_layer(spark: SparkSession, sources: dict[str, DataFrame]) -> dict:
-    # one log append per LAYER pass, not per table (the gold r14
-    # LogBuffer discipline, extended after the r15 silver step profile
-    # attributed ~20% of an sf0.1 pass to per-table 1-row appends);
-    # failure rows still flush immediately (LogBuffer contract)
-    execution_id = logs.new_execution_id()
-    results = {}
-    log_buf = logs.LogBuffer(spark, "bronze_execution_log")
-    try:
-        for table in sorted(sources):
-            try:
-                results[table] = bronze.run_full(spark, sources[table], table,
-                                                 execution_id, log_buffer=log_buf)
-            except Exception as exc:  # noqa: BLE001 - per-table isolation
-                log_buf.add("bronze", table, execution_id, "failed", None, str(exc)[:500])
-                results[table] = {"table": table, "status": "failed", "error": str(exc)}
-    finally:
-        flush_err = log_buf.flush_safe()
-    out = {"layer": "bronze", "status": _status(results), "tables": results,
+def _layer_result(layer: str, results: dict, flush_err: str | None, execution_id: str) -> dict:
+    out = {"layer": layer, "status": _status(results), "tables": results,
            "execution_id": execution_id}
     if flush_err:
         out["log_flush_error"] = flush_err
     return out
+
+
+def run_bronze_layer(spark: SparkSession, sources: dict[str, DataFrame]) -> dict:
+    execution_id = logs.new_execution_id()
+    results, flush_err = logs.run_tables(
+        spark, "bronze", sorted(sources),
+        lambda t: bronze.run_full(spark, sources[t], t), execution_id)
+    return _layer_result("bronze", results, flush_err, execution_id)
 
 
 def run_silver_layer(spark: SparkSession, horizon=None) -> dict:
     execution_id = logs.new_execution_id()
-    results = {}
-    log_buf = logs.LogBuffer(spark, "silver_execution_log")
-    try:
-        for bronze_table in discover_tables(spark, "bronze_*"):
-            table = bronze_table.removeprefix("bronze_")
-            try:
-                results[table] = silver.run_full(
-                    spark, table, execution_id, source_table=bronze_table,
-                    horizon=horizon, log_buffer=log_buf
-                )
-            except Exception as exc:  # noqa: BLE001
-                log_buf.add("silver", table, execution_id, "failed", None, str(exc)[:500])
-                results[table] = {"table": table, "status": "failed", "error": str(exc)}
-    finally:
-        flush_err = log_buf.flush_safe()
-    out = {"layer": "silver", "status": _status(results), "tables": results,
-           "execution_id": execution_id}
-    if flush_err:
-        out["log_flush_error"] = flush_err
-    return out
+    tables = [t.removeprefix("bronze_") for t in discover_tables(spark, "bronze_*")]
+    results, flush_err = logs.run_tables(
+        spark, "silver", tables,
+        lambda t: silver.run_full(spark, t, execution_id, source_table=f"bronze_{t}",
+                                  horizon=horizon),
+        execution_id)
+    return _layer_result("silver", results, flush_err, execution_id)
 
 
 def check_gold_preconditions(spark: SparkSession, models: list[gold.GoldModel] | None = None) -> tuple[bool, float]:
@@ -105,12 +83,7 @@ def run_pipeline(spark: SparkSession, sources: dict[str, DataFrame], horizon=Non
     b = run_bronze_layer(spark, sources)
     s = run_silver_layer(spark, horizon=horizon)
     g = run_gold_layer(spark, models=models)
-    overall = {"success"}
-    for layer in (b, s, g):
-        overall.add(layer["status"])
-    status = "success" if overall == {"success"} else (
-        "failed" if "success" not in {b["status"], s["status"], g["status"]} else "completed_with_errors"
-    )
+    status = _status({"bronze": b, "silver": s, "gold": g})
     out = {"status": status, "bronze": b, "silver": s, "gold": g}
     if recovered:
         out["recovered"] = recovered

@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 
 from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest, infer_keys
 from spaceparts_data_pipeline_spark.operators.merge import physical_partition_cols, upsert_union_dedup
-from spaceparts_data_pipeline_spark.operators.quality import drop_all_null, quarantine_split
+from spaceparts_data_pipeline_spark.operators.quality import (
+    drop_all_null, quarantine_split, watermark_max,
+)
 from spaceparts_data_pipeline_spark.operators.standardize import standardize_types
 from spaceparts_data_pipeline_spark.plans import logs
 
@@ -127,7 +129,7 @@ def _append_quarantine_dedup(spark: SparkSession, sink: str, quarantined: DataFr
     a small table), and additive schema drift changes the hash basis so
     one overlap window may re-append after a drift.
     """
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+    from spaceparts_data_pipeline_spark.operators.maintenance import append_with_evolution
 
     id_cols = [c for c in quarantined.columns if c not in _QUARANTINE_STAMPS]
     out = quarantined.withColumn("identity_hash", _identity_hash(id_cols))
@@ -150,23 +152,9 @@ def _append_quarantine_dedup(spark: SparkSession, sink: str, quarantined: DataFr
         existing = spark.table(sink)
     fresh = out.join(existing.select("identity_hash"), ["identity_hash"], "left_anti")
     if fresh.isEmpty() is False:
-        new_cols = [c for c in fresh.columns if c not in existing.columns]
-        if new_cols:
-            # schema drift (source grew a column): one-time union-schema
-            # rewrite, same as bronze's append-with-evolution — a plain
-            # append would fail on the physical table's narrower schema
-            from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-            merged = existing.unionByName(fresh, allowMissingColumns=True)
-            overwrite_via_staging(spark, sink, merged)
-        else:
-            from spaceparts_data_pipeline_spark.operators.maintenance import (
-                safe_save_as_table,
-            )
-
-            safe_save_as_table(
-                fresh.unionByName(existing.limit(0), allowMissingColumns=True),
-                resolve_physical(spark, sink), mode="append")
+        # schema drift (source grew a column) rewrites the sink once
+        # with the union schema, as bronze's append does
+        append_with_evolution(spark, fresh, sink)
 
 
 def transform(
@@ -206,25 +194,16 @@ def run_full(
     table: str,
     execution_id: str | None = None,
     source_table: str | None = None,
-    log_table: str = "silver_execution_log",
     horizon=None,
     sort_by: list[str] | None = None,
     order_col: str = "dwcreateddate",
     n_buckets: int = DEFAULT_N_BUCKETS,
-    log_buffer=None,
 ) -> dict:
     """``sort_by``: sort rows within each written file so parquet
     row-group min/max statistics prune downstream key lookups (the
     Parquet analog of the reference's dataSkippingNumIndexedCols +
     OPTIMIZE clustering, SURVEY.md §4). Defaults to the inferred dedup
-    keys — the columns downstream merges and lookups filter on.
-
-    ``log_buffer``: a ``logs.LogBuffer`` shared across the layer pass —
-    the r15 step profile attributed ~1.25 s of a 3-table sf0.1 silver
-    pass (~20%) to the three 1-row log appends (fixed ~0.4 s Spark-job
-    latency each, the same finding that gave gold its LogBuffer in
-    r14); a multi-table run batches success rows into ONE append at the
-    caller's flush. Without it the row lands immediately as before."""
+    keys — the columns downstream merges and lookups filter on."""
     execution_id = execution_id or logs.new_execution_id()
     src = spark.table(source_table or f"bronze_{table}")
     # persist=True: the standardize→dedup plan runs ONCE (cache
@@ -247,10 +226,6 @@ def run_full(
     finally:
         parent.unpersist()
     n = spark.table(f"silver_{table}").count()
-    if log_buffer is not None:
-        log_buffer.add("silver", table, execution_id, "success", n)
-    else:
-        logs.append_log(spark, log_table, "silver", table, execution_id, "success", n)
     return {"table": table, "status": "success", "records": n, "quarantined": n_quarantined}
 
 
@@ -261,9 +236,7 @@ def run_incremental(
     order_col: str = "dwcreateddate",
     execution_id: str | None = None,
     control_table: str = "silver_incremental_control",
-    log_table: str = "silver_execution_log",
     horizon=None,
-    log_buffer=None,
 ) -> dict:
     """Silver upsert: clean the incoming slice, union with the existing
     rows OF THE TOUCHED KEY-HASH BUCKETS only, keep-latest per inferred
@@ -272,9 +245,9 @@ def run_incremental(
     Schema drift (incoming adds columns) falls back to a full rewrite
     with the union schema, like bronze's append-with-evolution.
 
-    ``log_buffer`` batches the success LOG row with the layer pass (see
-    :func:`run_full`); the CONTROL row (next run's watermark) always
-    lands immediately — same rationale as bronze.run_incremental."""
+    The CONTROL row (next run's watermark) lands per table, like
+    bronze.run_incremental's; the watermark skips rows past the
+    quarantine horizon (they never reach silver)."""
     execution_id = execution_id or logs.new_execution_id()
     # Same single-execution pattern as run_full: the incoming slice's
     # clean side feeds a touched-partition collect AND the merge write,
@@ -284,27 +257,27 @@ def run_incremental(
         incoming, table, execution_id, order_col=order_col, horizon=horizon, persist=True
     )
     try:
-        return _run_incremental_inner(
-            spark, table, incoming, clean, quarantined, order_col,
-            execution_id, control_table, log_table, log_buffer
-        )
+        n = _merge_incremental(spark, table, clean, quarantined, order_col)
+        wm = (incoming.agg(watermark_max(order_col, horizon)).collect()[0][0]
+              if order_col in incoming.columns else None)
+        logs.append_control(spark, control_table, table, execution_id, wm, "success", n)
     finally:
         parent.unpersist()
+    return {"table": table, "status": "success", "records": n}
 
 
-def _run_incremental_inner(
+def _merge_incremental(
     spark: SparkSession,
     table: str,
-    incoming: DataFrame,
     clean: DataFrame,
     quarantined: DataFrame,
     order_col: str,
-    execution_id: str,
-    control_table: str,
-    log_table: str,
-    log_buffer=None,
-) -> dict:
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+) -> int:
+    """Merge the cleaned slice into ``silver_<table>``, append its
+    quarantined rows; returns the table's row count."""
+    from spaceparts_data_pipeline_spark.operators.maintenance import (
+        overwrite_partitions, resolve_physical,
+    )
 
     target = f"silver_{table}"
     n_buckets = DEFAULT_N_BUCKETS
@@ -342,14 +315,8 @@ def _run_incremental_inner(
             merged = (merged.select(*existing.columns)
                       .repartition(F.col(PARTITION_COL))
                       .sortWithinPartitions(PARTITION_COL, *keys))
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                # checkpoint materializes only the touched buckets
-                merged.localCheckpoint(eager=True) \
-                    .write.mode("overwrite").insertInto(phys)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            # the checkpoint inside materializes only the touched buckets
+            overwrite_partitions(spark, phys, merged)
         else:
             # schema drift or legacy unpartitioned table: one-time full
             # rewrite with the union schema, re-bucketed going forward.
@@ -363,11 +330,4 @@ def _run_incremental_inner(
         _write_partitioned(clean, target, keys, n_buckets, sort_by=keys)
     if quarantined.isEmpty() is False:
         _append_quarantine_dedup(spark, f"silver_quarantine_{table}", quarantined)
-    n = spark.table(target).count()
-    wm = incoming.agg(F.max(order_col)).collect()[0][0] if order_col in incoming.columns else None
-    logs.append_control(spark, control_table, table, execution_id, wm, "success", n)
-    if log_buffer is not None:
-        log_buffer.add("silver", table, execution_id, "success", n)
-    else:
-        logs.append_log(spark, log_table, "silver", table, execution_id, "success", n)
-    return {"table": table, "status": "success", "records": n}
+    return spark.table(target).count()

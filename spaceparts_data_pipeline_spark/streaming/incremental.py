@@ -50,58 +50,39 @@ def run_incremental_pipeline(
     execution_id = logs.new_execution_id()
     results: dict = {"bronze": {}, "silver": {}, "gold": {},
                      "execution_id": execution_id}
-    # per-table isolation, like runner.py's full-mode layers: one bad
-    # table must not halt the layer, and its failure must land as a
-    # 'failed' execution-log row — that row is what the orchestration
-    # alert chain (the reference's Lookup_Error_* →
-    # Email_Notificacion_Error_*) looks up. Success LOG rows batch into
-    # one append per layer (the r15 silver profile: ~0.4 s fixed job
-    # latency per 1-row append); CONTROL rows stay per-table — they
-    # carry the watermark the next run scans from.
-    log_buf = logs.LogBuffer(spark, "bronze_execution_log")
-    try:
-        for table in sorted(sources):
-            try:
-                results["bronze"][table] = bronze.run_incremental(
-                    spark, sources[table], table, ts_col=ts_col,
-                    execution_id=execution_id, log_buffer=log_buf)
-            except Exception as exc:  # noqa: BLE001 - per-table isolation
-                log_buf.add("bronze", table, execution_id, "failed", None,
-                            str(exc)[:500])
-                results["bronze"][table] = {"table": table, "status": "failed",
-                                            "error": str(exc)}
-    finally:
-        flush_err = log_buf.flush_safe()
-    if flush_err:
-        results.setdefault("log_flush_errors", {})["bronze"] = flush_err
-    log_buf = logs.LogBuffer(spark, "silver_execution_log")
-    try:
-        for table in sorted(sources):
-            if results["bronze"].get(table, {}).get("status") == "failed":
-                # no fresh bronze slice to feed silver; skip, don't crash
-                results["silver"][table] = {"table": table, "status": "skipped",
-                                            "reason": "bronze failed this run"}
-                continue
-            # Feed silver only the bronze slice above its own last control
-            # watermark (minus the standard overlap), not the full history:
-            # keeps the silver stage O(increment) and stops the quarantine
-            # side-sink from re-deriving (and re-appending) old bad rows
-            # every run. First run: no watermark → full scan.
-            try:
-                wm = logs.last_watermark(spark, "silver_incremental_control", table)
-                incoming = watermark_scan(spark.table(f"bronze_{table}"), ts_col, wm)
-                results["silver"][table] = silver.run_incremental(
-                    spark, table, incoming, order_col=ts_col,
-                    execution_id=execution_id, log_buffer=log_buf)
-            except Exception as exc:  # noqa: BLE001 - per-table isolation
-                log_buf.add("silver", table, execution_id, "failed", None,
-                            str(exc)[:500])
-                results["silver"][table] = {"table": table, "status": "failed",
-                                            "error": str(exc)}
-    finally:
-        flush_err = log_buf.flush_safe()
-    if flush_err:
-        results.setdefault("log_flush_errors", {})["silver"] = flush_err
+    # per-table isolation (logs.run_tables): one bad table must not
+    # halt the layer, and its failure must land as a 'failed'
+    # execution-log row — that row is what the orchestration alert
+    # chain (the reference's Lookup_Error_* →
+    # Email_Notificacion_Error_*) looks up. CONTROL rows land per table
+    # inside the steps — they carry the watermark the next run scans
+    # from.
+    results["bronze"], bronze_err = logs.run_tables(
+        spark, "bronze", sorted(sources),
+        lambda t: bronze.run_incremental(spark, sources[t], t, ts_col=ts_col,
+                                         execution_id=execution_id),
+        execution_id)
+
+    def silver_step(table: str) -> dict:
+        if results["bronze"][table]["status"] == "failed":
+            # no fresh bronze slice to feed silver; skip, don't crash
+            return {"table": table, "status": "skipped", "reason": "bronze failed this run"}
+        # Feed silver only the bronze slice above its own last control
+        # watermark (minus the standard overlap), not the full history:
+        # keeps the silver stage O(increment) and stops the quarantine
+        # side-sink from re-deriving (and re-appending) old bad rows
+        # every run. First run: no watermark → full scan.
+        wm = logs.last_watermark(spark, "silver_incremental_control", table)
+        incoming = watermark_scan(spark.table(f"bronze_{table}"), ts_col, wm)
+        return silver.run_incremental(spark, table, incoming, order_col=ts_col,
+                                      execution_id=execution_id)
+
+    results["silver"], silver_err = logs.run_tables(
+        spark, "silver", sorted(sources), silver_step, execution_id)
+    flush_errors = {layer: err for layer, err in
+                    (("bronze", bronze_err), ("silver", silver_err)) if err}
+    if flush_errors:
+        results["log_flush_errors"] = flush_errors
     if not skip_gold:
         wm = effective_watermark(lookback_days, now)
         results["gold"] = gold.run_incremental(

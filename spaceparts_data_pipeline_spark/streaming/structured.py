@@ -86,8 +86,9 @@ def _write_batch_partition(payload: DataFrame, corpus_path: str,
     content either way. The existence probe is a pure FS check — the
     extra pruned read job runs ONLY on the replay path.
 
-    foreachBatch runs under a CLONED session with isolated conf — the
-    dynamic-overwrite conf is set on the batch's own session."""
+    Dynamic overwrite is a per-write option, not a session conf:
+    foreachBatch runs under a CLONED session with isolated conf, where
+    an outer-session conf would silently not apply."""
     from spaceparts_data_pipeline_spark.operators import dedup
 
     sess = payload.sparkSession
@@ -105,13 +106,8 @@ def _write_batch_partition(payload: DataFrame, corpus_path: str,
         # files the commit will replace — localCheckpoint finishes the
         # read and cuts the lineage to a leaf first
         payload = payload.localCheckpoint()
-    prior = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        payload.write.mode("overwrite").partitionBy(
-            "ingest_run", "ingest_batch_id").parquet(corpus_path)
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    payload.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "ingest_run", "ingest_batch_id").parquet(corpus_path)
 
 
 def windowed_counts(

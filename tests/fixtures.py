@@ -134,3 +134,19 @@ def build_fixtures(spark) -> dict:
         "dim_invoice_doctype": dim_invoice_doctype, "fact_invoices": fact_invoices,
         "fact_orders": fact_orders, "fact_budget": fact_budget,
     }
+
+
+def mini_gold_model(gold_plan, F):
+    """A one-fact, one-FX-dim gold model over ``silver_fact_mini`` and
+    ``silver_dim_rate_mini`` (the secondary-source shape)."""
+    def build(spark_):
+        f = spark_.table("silver_fact_mini")
+        r = spark_.table("silver_dim_rate_mini").select(
+            F.col("currency").alias("r_currency"), F.col("rate").alias("eur_rate"))
+        return (
+            f.join(F.broadcast(r), f["currency"] == F.col("r_currency"), "left")
+            .select("k", (F.col("v") * F.coalesce("eur_rate", F.lit(1.0))).alias("v_eur"))
+        )
+
+    return gold_plan.GoldModel("gold_mini_sec", build, ["k"],
+                               source_tables=["fact_mini", "dim_rate_mini"])

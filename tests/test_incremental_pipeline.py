@@ -15,6 +15,7 @@ from pyspark.sql.types import (
 
 from spaceparts_data_pipeline_spark.plans import logs
 from spaceparts_data_pipeline_spark.streaming.incremental import run_incremental_pipeline
+from tests.fixtures import mini_gold_model
 
 #: soak tier (r16 verdict #2): excluded from the default
 #: driver-facing run (see pytest.ini); run with -m soak / -m ""
@@ -37,61 +38,6 @@ def inc_db(spark):
     yield
     spark.catalog.setCurrentDatabase("default")
     spark.sql("DROP DATABASE inc_db CASCADE")
-
-
-def test_incremental_pipeline_batches_log_appends(spark, inc_db, monkeypatch):
-    """r15 silver profile follow-through: the incremental driver batches
-    success LOG rows into one append per layer (same LogBuffer
-    discipline as the full-mode runner), while CONTROL rows — the
-    watermark the next run scans from — still land one per table."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    appends: list[str] = []
-    real = maintenance.safe_save_as_table
-
-    def spy(df, table, mode="overwrite", **kw):
-        if mode == "append":
-            appends.append(table)
-        return real(df, table, mode=mode, **kw)
-
-    monkeypatch.setattr(maintenance, "safe_save_as_table", spy)
-    srcs = {
-        "fact_a": spark.createDataFrame([("a1", 1.0, T0)], SCHEMA),
-        "fact_b": spark.createDataFrame([("b1", 2.0, T0)], SCHEMA),
-    }
-    res = run_incremental_pipeline(spark, srcs, skip_gold=True)
-    assert all(t["status"] == "success" for t in res["bronze"].values())
-    assert all(t["status"] == "success" for t in res["silver"].values())
-    assert appends.count("bronze_execution_log") == 1      # batched
-    assert appends.count("silver_execution_log") == 1
-    assert appends.count("bronze_incremental_control") == 2  # per-table
-    assert appends.count("silver_incremental_control") == 2
-    assert spark.table("bronze_execution_log").count() == 2
-    assert spark.table("silver_execution_log").count() == 2
-
-
-def test_incremental_failed_table_isolates_and_flushes_failure_row(spark, inc_db):
-    """The incremental driver's per-table isolation under the r15
-    LogBuffer: a failing bronze table must not halt the layer, its
-    failure row must land IMMEDIATELY (the alert chain's lookup reads
-    it — LogBuffer flushes on any non-success add, carrying buffered
-    success rows along), and silver must skip the failed table rather
-    than resurrect a stale slice."""
-    srcs = {
-        "fact_ok": spark.createDataFrame([("k1", 1.0, T0)], SCHEMA),
-        "fact_bad": None,            # None source -> bronze raises
-    }
-    res = run_incremental_pipeline(spark, srcs, skip_gold=True)
-    assert res["bronze"]["fact_ok"]["status"] == "success"
-    assert res["bronze"]["fact_bad"]["status"] == "failed"
-    assert res["silver"]["fact_ok"]["status"] == "success"
-    assert res["silver"]["fact_bad"]["status"] == "skipped"
-    rows = {r["table_name"]: r["status"]
-            for r in spark.table("bronze_execution_log").collect()}
-    assert rows == {"fact_ok": "success", "fact_bad": "failed"}
-    failures = logs.latest_failures(
-        spark, "bronze_execution_log", execution_id=res["execution_id"]).collect()
-    assert failures and failures[0]["table_name"] == "fact_bad"
 
 
 def test_two_rounds_with_watermark_overlap(spark, inc_db):
@@ -549,20 +495,6 @@ def test_merge_fallback_preserves_physical_partitioning(spark, inc_db):
     assert spark.table("gold_fb").filter(F.col("k") == 4).collect()[0]["v"] == 444.0
 
 
-def _mini_gold_model(gold_plan, F):
-    def build(spark_):
-        f = spark_.table("silver_fact_mini")
-        r = spark_.table("silver_dim_rate_mini").select(
-            F.col("currency").alias("r_currency"), F.col("rate").alias("eur_rate"))
-        return (
-            f.join(F.broadcast(r), f["currency"] == F.col("r_currency"), "left")
-            .select("k", (F.col("v") * F.coalesce("eur_rate", F.lit(1.0))).alias("v_eur"))
-        )
-
-    return gold_plan.GoldModel("gold_mini_sec", build, ["k"],
-                               source_tables=["fact_mini", "dim_rate_mini"])
-
-
 def test_gold_incremental_propagates_secondary_source_changes(spark, inc_db):
     """r16 review finding: the incremental driver watermarked ONLY
     source_tables[0], so a refreshed joined dim (a corrected FX rate)
@@ -588,7 +520,7 @@ def test_gold_incremental_propagates_secondary_source_changes(spark, inc_db):
         "currency string, rate double, silver_created_date timestamp",
     ).write.mode("overwrite").saveAsTable("silver_dim_rate_mini")
 
-    model = _mini_gold_model(gold_plan, F)
+    model = mini_gold_model(gold_plan, F)
     wm = dtm.datetime(2025, 6, 1)   # far future: primary changed-set empty
 
     # run 1: table absent -> full refresh; run 2: first incremental
@@ -640,7 +572,7 @@ def test_gold_incremental_delta_keeps_null_merge_keys(spark, inc_db):
         "currency string, rate double, silver_created_date timestamp",
     ).write.mode("overwrite").saveAsTable("silver_dim_rate_mini")
 
-    model = _mini_gold_model(gold_plan, F)
+    model = mini_gold_model(gold_plan, F)
     # seed gold + control history so the next run takes the RESTRICTED path
     wm_all = dtm.datetime(2024, 1, 1)
     gold_plan.run_incremental(spark, wm_all, models=[model])
@@ -658,41 +590,6 @@ def test_gold_incremental_delta_keeps_null_merge_keys(spark, inc_db):
     assert got[1] == pytest.approx(90.0)
 
 
-def test_gold_full_refresh_flush_failure_surfaces(spark, inc_db, monkeypatch):
-    """r16 review finding: the force_full_refresh branch ran run_full
-    with its own per-model LogBuffer and kept only result[m.name] —
-    the nested '_execution_log' flush-failure entry was discarded, so
-    N lost log rows looked like all-success. The nested run now shares
-    the incremental driver's buffer, whose finally-flush reports."""
-    import datetime as dtm
-
-    from pyspark.sql import functions as F
-
-    from spaceparts_data_pipeline_spark.plans import gold as gold_plan
-    from spaceparts_data_pipeline_spark.plans.logs import LogBuffer
-
-    spark.createDataFrame(
-        [(1, "USD", 100.0, dtm.datetime(2025, 1, 1))],
-        "k long, currency string, v double, silver_created_date timestamp",
-    ).write.mode("overwrite").saveAsTable("silver_fact_mini")
-    spark.createDataFrame(
-        [("USD", 0.9, dtm.datetime(2025, 1, 1))],
-        "currency string, rate double, silver_created_date timestamp",
-    ).write.mode("overwrite").saveAsTable("silver_dim_rate_mini")
-
-    def boom(self):
-        if self._rows:
-            raise RuntimeError("log table unwritable")
-
-    monkeypatch.setattr(LogBuffer, "flush", boom)
-    model = _mini_gold_model(gold_plan, F)
-    res = gold_plan.run_incremental(
-        spark, dtm.datetime(2025, 6, 1), models=[model], force_full_refresh=True)
-    assert res["gold_mini_sec"]["status"] == "success"   # data landed
-    assert res["_execution_log"]["status"] == "failed"   # lost rows reported
-    assert "log table unwritable" in res["_execution_log"]["error"]
-
-
 def test_bronze_incremental_append_reads_one_snapshot(spark, inc_db, monkeypatch):
     """r16 review finding: the count/watermark agg re-executed the
     incoming scan AFTER the append — on a live (JDBC) source a row
@@ -701,16 +598,17 @@ def test_bronze_incremental_append_reads_one_snapshot(spark, inc_db, monkeypatch
     consumes a persisted snapshot (the agg then reads the same cache)."""
     from pyspark.storagelevel import StorageLevel
 
+    from spaceparts_data_pipeline_spark.operators import maintenance
     from spaceparts_data_pipeline_spark.plans import bronze
 
     seen = []
-    real = bronze._append_with_evolution
+    real = maintenance.append_with_evolution
 
     def spy(spark_, incoming, target):
         seen.append(incoming.storageLevel != StorageLevel.NONE)
         return real(spark_, incoming, target)
 
-    monkeypatch.setattr(bronze, "_append_with_evolution", spy)
+    monkeypatch.setattr(maintenance, "append_with_evolution", spy)
     src1 = spark.createDataFrame([("o1", 1.0, T0)], SCHEMA)
     src2 = spark.createDataFrame([("o2", 2.0, T1)], SCHEMA)
     bronze.run_incremental(spark, src1, "snapfact", overlap=dt.timedelta(0))

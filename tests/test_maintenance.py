@@ -887,75 +887,6 @@ def test_fpp_salt_skips_unhashable_map_columns(spark, maint_db):
     assert out.select(F.col("m")["k"]).first()[0] is not None
 
 
-def test_log_buffer_batches_success_flushes_failures(spark, maint_db):
-    """LogBuffer: success rows land in ONE append at flush(); a failure
-    row flushes immediately together with everything buffered."""
-    from spaceparts_data_pipeline_spark.plans.logs import LogBuffer
-
-    spark.sql("DROP TABLE IF EXISTS lbuf_log")
-    buf = LogBuffer(spark, "lbuf_log")
-    buf.add("gold", "t1", "e1", "success", 10)
-    buf.add("gold", "t2", "e1", "success", 20)
-    assert not spark.catalog.tableExists("lbuf_log")   # still buffered
-    buf.add("gold", "t3", "e1", "failed", None, "boom")  # -> immediate flush
-    rows = {r["table_name"]: r["status"] for r in spark.table("lbuf_log").collect()}
-    assert rows == {"t1": "success", "t2": "success", "t3": "failed"}
-    buf.add("gold", "t4", "e1", "success", 40)
-    buf.flush()
-    buf.flush()                                        # idempotent on empty
-    assert spark.table("lbuf_log").count() == 4
-
-
-def test_log_flush_failure_reported_not_raised(spark, maint_db, monkeypatch):
-    """r15 advice: the batched flush runs in the layer runners'
-    ``finally``, OUTSIDE the per-table isolation — an execution-log
-    write failure there must land in the layer result, not crash a run
-    whose data tables all succeeded."""
-    from spaceparts_data_pipeline_spark.plans import logs, runner
-    from spaceparts_data_pipeline_spark.plans.logs import LogBuffer
-
-    # unit: flush_safe returns the error instead of raising, and the
-    # rows are RETAINED so a later flush can retry (not silently lost)
-    buf = LogBuffer(spark, "lbuf_safe_log")
-    buf._rows.append(("x",) * 7)   # malformed row -> createDataFrame fails
-    err = buf.flush_safe()
-    assert err is not None
-    assert buf._rows                       # kept for retry
-    assert buf.flush_safe() is not None    # retry hits the same rows
-    buf._rows.clear()
-    assert buf.flush_safe() is None        # drained -> no-op
-
-    # layer: a poisoned flush must not abort run_bronze_layer — neither
-    # via the finally-flush nor via a FAILURE row's immediate flush
-    # inside the per-table except handler
-    def boom(self):
-        if self._rows:
-            raise RuntimeError("log table unwritable")
-
-    monkeypatch.setattr(LogBuffer, "flush", boom)
-    src = {"flushfail": spark.range(5).withColumnRenamed("id", "k"),
-           "tablefail": None}    # prepare(None) raises -> per-table except
-    out = runner.run_bronze_layer(spark, src)
-    assert out["tables"]["flushfail"]["status"] == "success"
-    assert out["tables"]["tablefail"]["status"] == "failed"
-    assert out["status"] == "completed_with_errors"
-    assert "log table unwritable" in out["log_flush_error"]
-    assert spark.table("bronze_flushfail").count() == 5
-
-    # gold: a flush failure surfaces as a failed _execution_log entry
-    from spaceparts_data_pipeline_spark.plans import gold as gold_plan
-
-    spark.range(3).withColumnRenamed("id", "k").write \
-        .mode("overwrite").saveAsTable("silver_goldsrc")
-    model = gold_plan.GoldModel(
-        name="gold_flushprobe", builder=lambda s: s.table("silver_goldsrc"),
-        merge_keys=["k"], source_tables=["goldsrc"])
-    res = gold_plan.run_full(spark, models=[model])
-    assert res["gold_flushprobe"]["status"] == "success"
-    assert res["_execution_log"]["status"] == "failed"
-    assert "log table unwritable" in res["_execution_log"]["error"]
-
-
 def test_db_location_always_reflects_current_catalog_state(spark, tmp_path):
     """_db_location must never serve a stale path: a db dropped and
     recreated at a different LOCATION mid-session (either direction)

@@ -176,59 +176,6 @@ def test_precondition_gate(spark):
         spark.sql("DROP DATABASE empty_db CASCADE")
 
 
-def test_failed_table_isolates(spark):
-    spark.sql("CREATE DATABASE IF NOT EXISTS failing")
-    spark.catalog.setCurrentDatabase("failing")
-    try:
-        src = build_fixtures(spark)
-        bad = {"dim_regions": src["dim_regions"], "broken": None}  # None source -> failure
-        out = runner.run_bronze_layer(spark, bad)
-        assert out["status"] == "completed_with_errors"
-        assert out["tables"]["dim_regions"]["status"] == "success"
-        assert out["tables"]["broken"]["status"] == "failed"
-        failures = logs.latest_failures(spark, "bronze_execution_log").collect()
-        assert failures and failures[0]["table_name"] == "broken"
-    finally:
-        spark.catalog.setCurrentDatabase("default")
-        spark.sql("DROP DATABASE failing CASCADE")
-
-
-def test_layer_runs_batch_log_appends(spark, monkeypatch):
-    """r15 silver step profile: per-table 1-row log appends cost ~0.4 s
-    of fixed Spark-job latency each (~20% of an sf0.1 silver pass) —
-    the bronze/silver layer runners must batch success rows into ONE
-    append per layer pass (the gold r14 LogBuffer discipline), while a
-    failure row still lands immediately."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    appends: list[str] = []
-    real = maintenance.safe_save_as_table
-
-    def spy(df, table, mode="overwrite", **kw):
-        if mode == "append" and table.endswith("_execution_log"):
-            appends.append(table)
-        return real(df, table, mode=mode, **kw)
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS logbatch_db")
-    spark.catalog.setCurrentDatabase("logbatch_db")
-    try:
-        monkeypatch.setattr(maintenance, "safe_save_as_table", spy)
-        src = build_fixtures(spark)
-        three = {k: src[k] for k in list(src)[:3]}
-        out = runner.run_bronze_layer(spark, three)
-        assert out["status"] == "success" and len(out["tables"]) == 3
-        assert appends == ["bronze_execution_log"]      # ONE append, 3 tables
-        assert spark.table("bronze_execution_log").count() == 3
-        appends.clear()
-        out = runner.run_silver_layer(spark)
-        assert out["status"] == "success" and len(out["tables"]) == 3
-        assert appends.count("silver_execution_log") == 1
-        assert spark.table("silver_execution_log").count() == 3
-    finally:
-        spark.catalog.setCurrentDatabase("default")
-        spark.sql("DROP DATABASE logbatch_db CASCADE")
-
-
 def test_cli_landing_dir_with_corrupt_lines(spark, sf_small, tmp_path, capsys):
     """Round-5 verdict next-round #7: a landing directory holding parquet
     AND a JSONL drop with corrupt lines flows landing → bronze → silver
