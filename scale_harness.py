@@ -1604,6 +1604,10 @@ def main() -> None:
                          "reading is fixed-overhead-dominated; the rate should "
                          "climb with volume")
     args = ap.parse_args()
+    if args.factor < 2:
+        # x1 and x{factor} share one data directory at factor 1, so the
+        # scaled leg would overwrite the baseline it is compared against
+        ap.error("--factor must be >= 2")
 
     src_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     base = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale")

@@ -133,7 +133,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # crash-state sweep at the entrypoint (the contract SCALING.md
     # documents): with --warehouse a killed PREVIOUS run can leave
-    # staged-swap states on tables this run only reads — most visibly
+    # versioned-swap states on tables this run only reads — most visibly
     # the view-missing state, where the table name doesn't resolve at
     # all. Catalog ops only; no data reads. The library path
     # (plans.runner.run_pipeline) runs the same sweep itself, but this

@@ -112,7 +112,7 @@ def jaccard_pairs(
     union size.
 
     r17 plan change (r16 verdict next-round #3 — d13 step-profiled,
-    tools_r17/profile_d13.py): the tokenize+shingle construction runs
+    OPTIMIZATION_r17.md): the tokenize+shingle construction runs
     ONCE into a materialized (id, shingle-array) base (``stage_cut``,
     the d14 ``_minhash_base`` precedent) and the three consumers (both
     self-join sides + the per-doc counts) derive from the leaf — the
@@ -359,7 +359,7 @@ def connected_components(
     # convergence collect right below it, which materializes the cut
     # inside its own job — previously each round paid a separate eager
     # blocking job before the collect (2 driver jobs per round → 1;
-    # measured on d13/d14/d16, tools_r17/probe_cc_lazy_cut.py). The
+    # measured on d13/d14/d16, OPTIMIZATION_r17.md). The
     # lineage-cut property is unchanged (a lazy localCheckpoint still
     # replaces the logical plan with a leaf at construction — the
     # analyzed-plan-doubling OOM guard). Round blocks are still freed

@@ -51,8 +51,8 @@ def share_mode(df: DataFrame | None = None) -> str:
     slower at single-file sf0.1 bench scale: e06's codebook share and
     the d23/d24 tiny-frame gram-kernel cuts). Read at
     query-CONSTRUCTION time so one session can interleave variants
-    rep-by-rep — the contract tools_r16/probe_share_crossover.py
-    measures the larger-scale / lower-core crossover against. Values
+    rep-by-rep — the contract the interleaved off/on crossover
+    measurement (SCALING.md, SHARE_CROSSOVER_r17.json) relies on. Values
     are identical in every mode (each shared subtree is deterministic
     and the cut is pure materialization); only how many times it is
     computed changes.

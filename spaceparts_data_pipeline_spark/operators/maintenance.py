@@ -1,6 +1,7 @@
 """Table maintenance: small-file compaction (the plain-Parquet analog of
 the reference's Delta ``OPTIMIZE`` / ``optimizeWrite`` / ``autoCompact``
-— Silver_full_load.ipynb:1 cells 6 and 16).
+— Silver_full_load.ipynb:1 cells 6 and 16) and the versioned swap that
+every full overwrite goes through.
 
 Append-flavored incremental layers (bronze K2, quarantine side-sinks)
 add a few files per run; after N runs a scan pays N file-open costs and
@@ -8,10 +9,10 @@ the small row groups defeat min/max skipping. ``compact_table`` rewrites
 the table (or just the listed partitions) into ~``target_file_mb``
 files:
 
-- unpartitioned tables: stage-write to ``<table>__compact`` then swap
-  via catalog rename — no O(table) executor-memory checkpoint, and a
-  crash mid-write leaves the original table intact (the staging table
-  is simply re-created next run).
+- whole-table compaction: a versioned swap (:func:`overwrite_via_staging`)
+  writes the repartitioned rows as the next ``<table>__v{N}`` and
+  repoints the view — no O(table) executor-memory checkpoint, and a
+  crash mid-write leaves the current version intact.
 - partitioned tables with an explicit ``partition_values`` list:
   dynamic-partition-overwrite of only those partitions (bounded
   checkpoint) — the incremental-friendly form: compact the partitions
@@ -60,11 +61,11 @@ _PYSPARK_ANALYSIS_EXCEPTIONS = _pyspark_analysis_exception_types()
 DEFAULT_TARGET_FILE_MB = 128
 
 #: TBLPROPERTIES marker stamped on every physical artifact the versioned
-#: swap creates (``__staging``, ``__old``, ``__v{N}``). The catalog-wide
-#: recovery sweep acts ONLY on bases showing this marker (or a live
-#: version view), so a user's legitimately-named ``report__old`` or
-#: ``foo__staging`` is never renamed/dropped by a pipeline it doesn't
-#: belong to.
+#: swap creates (``__v{N}``, and ``__old`` during a legacy migration).
+#: The catalog-wide recovery sweep acts ONLY on bases showing this
+#: marker (or a live version view), so a user's legitimately-named
+#: ``report__old`` or ``foo__v1`` is never renamed/dropped by a pipeline
+#: it doesn't belong to.
 MANAGED_PROP = "spaceparts.pipeline.managed"
 
 
@@ -102,7 +103,7 @@ def get_pipeline_prop(spark: SparkSession, table: str, key: str) -> str | None:
 
 def set_pipeline_prop(spark: SparkSession, table: str, key: str, value) -> None:
     """Stamp a ``spaceparts.*`` property on a physical table. Durable
-    across staged swaps and compactions: :func:`overwrite_via_staging`
+    across versioned swaps and compactions: :func:`overwrite_via_staging`
     carries every ``spaceparts.*`` property (except the managed marker,
     re-stamped fresh) from the outgoing physical version onto the new
     one."""
@@ -110,7 +111,7 @@ def set_pipeline_prop(spark: SparkSession, table: str, key: str, value) -> None:
 
 
 def _copy_pipeline_props(spark: SparkSession, src_table: str, dst_table: str) -> None:
-    """Carry custom ``spaceparts.*`` properties across a staged swap —
+    """Carry custom ``spaceparts.*`` properties across a versioned swap —
     a property stamped on one physical version (e.g. silver's bucket
     count) must survive overwrites and compactions of the table, which
     create a fresh physical table each time."""
@@ -165,9 +166,7 @@ def _db_location(spark: SparkSession, db: str) -> str | None:
     and recreated at a different LOCATION mid-session (either
     direction: default→custom or custom→default) would leave
     orphan-clearing aimed at a stale path, and a missed crumb wedges
-    every subsequent overwrite on LOCATION_ALREADY_EXISTS. Callers that
-    probe several artifact names of ONE overwrite amortize the probe by
-    passing the result through ``_clear_orphan_location(loc=...)``."""
+    every subsequent overwrite on LOCATION_ALREADY_EXISTS."""
     loc = None
     for row in spark.sql(f"DESCRIBE DATABASE {db}").collect():
         if row[0] == "Location":
@@ -177,39 +176,34 @@ def _db_location(spark: SparkSession, db: str) -> str | None:
 
 def _clear_orphan_location(spark: SparkSession, table: str, *,
                            force: bool = False,
-                           min_age_s: float = 0.0,
-                           loc: str | None = None) -> bool:
+                           min_age_s: float = 0.0) -> bool:
     """Delete ``table``'s default warehouse DIRECTORY iff the catalog
     has no such table but the directory exists — the object-store crumb
     a crash leaves between a catalog drop and its location cleanup (or
     a kill mid-``saveAsTable``). Safe BY THE LAYOUT'S OWN INVARIANT:
-    a ``__staging`` / ``__v{N}`` table only becomes complete by a
-    catalog operation (rename / saveAsTable commit), so a catalog-less
-    directory under one of those names is always an incomplete crumb,
-    never live data. Spark 3.4+ refuses to create a managed table over
-    an existing location (LOCATION_ALREADY_EXISTS), so without this
-    sweep one crumb wedges every subsequent overwrite. Returns True if
-    a directory was removed.
+    a ``__v{N}`` table only enters the catalog after ``saveAsTable`` has
+    written all of its files, so a catalog-less directory under such a
+    name is always an incomplete crumb, never live data. Spark 3.4+
+    refuses to create a managed table over an existing location
+    (LOCATION_ALREADY_EXISTS), so without this sweep one crumb wedges
+    every subsequent overwrite. Returns True if a directory was removed.
 
     The safety invariant is ENFORCED, not assumed: the bare table name
-    must look like a swap artifact (``__staging`` / ``__compact`` /
-    ``__old`` / ``__v{N}``) or the call raises — a future caller cannot
+    must look like a swap artifact (``__compact`` / ``__old`` /
+    ``__v{N}``) or the call raises — a future caller cannot
     accidentally point this at a legitimate unmanaged directory.
     ``force=True`` waives the name check for :func:`safe_save_as_table`,
     whose own precondition (a just-raised LOCATION_ALREADY_EXISTS on a
     catalog-less table) proves the directory is the same kind of crumb."""
     _, bare = _split_db(table)
-    if not force and not re.search(r"(__staging|__compact|__old|__v\d+)$", bare):
+    if not force and not re.search(r"(__compact|__old|__v\d+)$", bare):
         raise ValueError(
             f"_clear_orphan_location refuses non-artifact table name {table!r}; "
             "use safe_save_as_table for plain sinks")
     if spark.catalog.tableExists(table):
         return False
     db, t = _split_db(table)
-    db = db or spark.catalog.currentDatabase()
-    # loc may be passed in by a caller probing several artifact names of
-    # one overwrite (amortizes the DESCRIBE); a fresh probe otherwise
-    loc = loc if loc is not None else _db_location(spark, db)
+    loc = _db_location(spark, db or spark.catalog.currentDatabase())
     if not loc:
         return False
     jvm = spark._jvm
@@ -290,9 +284,8 @@ def safe_save_as_table(df, table: str, mode: str = "overwrite",
     wedge (VERDICT r11 "What's wrong #2"): a SIGKILL mid-``saveAsTable``
     leaves a catalog-less warehouse directory, and every LATER create of
     the same table dies with LOCATION_ALREADY_EXISTS. The versioned swap
-    already self-heals via :func:`_clear_orphan_location`; this gives the
-    plain control/log/bronze sinks the same property without adopting
-    versioning.
+    writes each ``__v{N}`` through here, and so do the plain
+    control/log/bronze sinks.
 
     Recovery is reactive, not proactive: we attempt the write first and
     only clear the location after Spark itself raises the
@@ -339,7 +332,7 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
     """Sorted physical version numbers (``{table}__v{N}``) in the
     catalog. One ``SHOW TABLES LIKE`` round-trip: ``catalog.
     listTables`` materializes full metadata for EVERY table in the
-    database (it ran twice per staged overwrite — the dominant catalog
+    database (it ran twice per versioned overwrite — the dominant catalog
     cost of a gold pass once the log appends were batched). The
     ``__v{N}`` suffix is reserved for physical version tables by
     construction (:func:`overwrite_via_staging` is the only creator),
@@ -549,49 +542,54 @@ def recover_staged_swap(
     complete". Returns a short action tag (or None if nothing to do).
 
     Crash states of the VERSIONED layout (physical ``{table}__v{N}`` +
-    ``{table}`` view; see :func:`overwrite_via_staging`):
+    ``{table}`` view; see :func:`overwrite_via_staging`). A ``__v{N}``
+    table is complete as soon as it exists: ``saveAsTable`` writes every
+    file before it creates the catalog entry.
 
-    - version tables exist, view missing → crash mid-migration between
-      the legacy rename and the view create: recreate the view at the
-      max version (a ``__v{N}`` table only comes into existence by
-      renaming a COMPLETE staging write, so max is always safe).
-    - view behind the max version → crash between the version rename and
-      the view repoint: finish the promote.
-    - staging / ``__old`` / versions ≤ current−``retain_versions``
-      lying around → drop (the most recent ``retain_versions``
-      generations are retained deliberately — grace copies for
-      in-flight readers; see :data:`DEFAULT_RETAIN_VERSIONS`).
+    - versions exist, view missing → crash mid-migration between
+      ``live → __old`` and the view create: recreate the view at the
+      max version and drop ``__old``.
+    - versions exist, the legacy real table still live → a migration
+      died after writing its first version: that version is
+      unreferenced, so drop it (the next swap migrates again).
+    - view behind the max version → crash between the version write and
+      the view repoint: finish the promote (mark + carry properties,
+      then repoint).
+    - ``__old`` / versions ≤ current−``retain_versions`` lying around →
+      drop (the most recent ``retain_versions`` generations are retained
+      deliberately — grace copies for in-flight readers; see
+      :data:`DEFAULT_RETAIN_VERSIONS`).
 
-    Crash states of the legacy real-table layout, by where the swap died:
+    A version is partition-repaired (MSCK) before it is promoted: a kill
+    between ``saveAsTable``'s catalog create and its own partition
+    registration leaves a partitioned version that reads empty.
 
-    - staging exists, live exists → crash during/after the staging write
-      but before the live table moved aside: the live table is current;
-      drop the (possibly incomplete) staging.
-    - staging exists, live missing → crash after ``live → __old``: the
-      staging write had completed (it only renames after), so FINISH the
-      swap: promote staging, repair partitions, drop ``__old``.
-    - only ``__old`` exists, live missing → cannot happen in order (the
-      promote precedes the drop of old), but restore old defensively.
-    - ``__old`` exists, live exists → crash before the final drop: the
-      promote (and any MSCK) may or may not have completed — MSCK is
-      idempotent, so repair partitions and drop old.
+    Crash states of the pre-versioned real-table layout:
+
+    - only ``__old`` exists, live missing → restore old.
+    - ``__old`` exists, live exists → crash before the final drop:
+      repair partitions (MSCK is idempotent) and drop old.
     """
-    staging, old = f"{table}__staging", f"{table}__old"
+    old = f"{table}__old"
     keep = _retain_versions(spark, retain_versions)
     has = spark.catalog.tableExists
 
     def _msck(t):
-        # Also REQUIRED before dropping a renamed partitioned table: a
-        # rename moves the data directory but partition entries keep
-        # their pre-rename locations, so an un-repaired DROP would
-        # delete directories that now belong to the promoted table.
+        # Registers the partitions of a version saveAsTable was killed
+        # before registering. Also REQUIRED before dropping a renamed
+        # partitioned table: a rename moves the data directory but
+        # partition entries keep their pre-rename locations, so an
+        # un-repaired DROP would delete directories that now belong to
+        # the renamed table.
         if physical_partition_cols(spark, t):
             spark.sql(f"MSCK REPAIR TABLE {t}")
 
     def _drop_old():
-        if has(old):
-            _msck(old)
-            spark.sql(f"DROP TABLE {old}")
+        if not has(old):
+            return None
+        _msck(old)
+        spark.sql(f"DROP TABLE {old}")
+        return "dropped_old"
 
     versions = list_versions(spark, table)
     if versions:
@@ -600,45 +598,35 @@ def recover_staged_swap(
             vmax = versions[-1]
             _msck(f"{table}__v{vmax}")
             spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{vmax}")
-            spark.sql(f"DROP TABLE IF EXISTS {staging}")
             _drop_old()
             for v in versions[:-keep]:  # keep the newest ``keep`` generations
                 spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
             return "recreated_view"
-        if cur is not None:
-            acted = None
-            vmax = versions[-1]
-            if vmax > cur:
-                _msck(f"{table}__v{vmax}")
-                spark.sql(
-                    f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{vmax}"
-                )
-                cur, acted = vmax, "promoted_version"
-            if has(staging):
-                spark.sql(f"DROP TABLE IF EXISTS {staging}")
-                acted = acted or "dropped_incomplete_staging"
-            _drop_old()
-            stale = [v for v in versions if v <= cur - keep]
-            for v in stale:
+        if cur is None:
+            # without this drop the next swap's saveAsTable(__v1,
+            # "overwrite") would silently reuse the unreferenced name
+            for v in versions:
                 spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
-            return acted or ("pruned_versions" if stale else None)
-        # cur is None but a legacy real table coexists with version
-        # tables: fall through to the legacy logic (the versions are
-        # unreferenced leftovers; the next successful swap prunes them).
+            return "dropped_unreferenced_versions"
+        acted = None
+        vmax = versions[-1]
+        if vmax > cur:
+            nxt = f"{table}__v{vmax}"
+            _msck(nxt)
+            _mark_managed(spark, nxt)
+            _copy_pipeline_props(spark, f"{table}__v{cur}", nxt)
+            spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {nxt}")
+            cur, acted = vmax, "promoted_version"
+        dropped = _drop_old()
+        stale = [v for v in versions if v <= cur - keep]
+        for v in stale:
+            spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
+        return acted or dropped or ("pruned_versions" if stale else None)
 
-    if has(staging):
-        if has(table):
-            spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            return "dropped_incomplete_staging"
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        _msck(table)
-        _drop_old()
-        return "promoted_staging"
     if has(old):
         if has(table):
             _msck(table)
-            _drop_old()
-            return "dropped_old"
+            return _drop_old()
         spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
         _msck(table)
         return "restored_old"
@@ -683,7 +671,7 @@ def align_writers_to_partitions(spark, df, pcols: list[str]):
     computed over the xxhash64-hashable NON-partition columns —
     map/variant columns can't feed a hash and partition columns are
     constant within the value being spread; if nothing hashable
-    remains, spark_partition_id is the deterministic fallback). Shared by the staged
+    remains, spark_partition_id is the deterministic fallback). Shared by the versioned
     full overwrite and the incremental merge path so both have the
     same skew relief. Callers that pre-align AND order their writers
     (silver's bucket sort) skip this to keep their shape."""
@@ -727,15 +715,16 @@ def overwrite_via_staging(
     view-indirection stand-in for plain Parquet). Steps:
 
     1. recover any prior crash state (:func:`recover_staged_swap`);
-    2. write ``{table}__staging`` fully (crash → current version
-       untouched; a ``__v{N}`` table can only come into existence by
-       renaming a COMPLETE staging write, so "version exists" always
-       implies "version complete");
-    3. rename staging → ``{table}__v{N+1}`` + MSCK if partitioned (the
-       rename moves the data directory but the catalog's partition
-       entries keep their pre-rename locations);
+    2. write ``{table}__v{N+1}`` in place (crash → current version
+       untouched; ``saveAsTable`` creates the catalog entry only after
+       every file is written and registers the partitions itself, so
+       "version exists" always implies "version complete", and a kill
+       mid-write leaves only a catalog-less directory, cleared by
+       :func:`safe_save_as_table`'s retry);
+    3. mark it managed and carry the outgoing version's ``spaceparts.*``
+       properties onto it;
     4. ``CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{N+1}``
-       — the atomic promote;
+       — the atomic promote, and the swap's only commit step;
     5. drop versions ≤ N+1−``retain_versions``. The most recent
        ``retain_versions`` generations (default 2: the new version plus
        one grace copy) are RETAINED for readers that resolved the view
@@ -754,52 +743,39 @@ def overwrite_via_staging(
     or read through :func:`read_with_retry`, which re-resolves the view
     and re-runs the action when the race's failure signature fires.
 
-    No step ever leaves zero complete copies, and (unlike the previous
-    rename-pair layout) no step ever makes ``{table}`` unresolvable. A
+    No step ever leaves zero complete copies, no step ever makes
+    ``{table}`` unresolvable, and no step renames a data directory. A
     crash anywhere is repaired by :func:`recover_staged_swap` on the
     next run. Legacy real tables migrate on their first overwrite: the
-    pre-versioned rename window occurs once, at migration, never again.
+    live table is renamed to ``{table}__old`` just before the view takes
+    its name — the only rename window, once per table.
     Write paths must address :func:`resolve_physical` — appends,
     ``insertInto`` and compaction don't work against a view.
     """
-    staging, old = f"{table}__staging", f"{table}__old"
+    old = f"{table}__old"
     keep = _retain_versions(spark, retain_versions)
     pcols = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     recover_staged_swap(spark, table, retain_versions=retain_versions)
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    # one DESCRIBE DATABASE serves both artifact probes of this swap
-    _swap_db, _ = _split_db(table)
-    _db_loc = _db_location(spark, _swap_db or spark.catalog.currentDatabase())
-    _clear_orphan_location(spark, staging, loc=_db_loc)
     if pcols and align_writers:
         df = align_writers_to_partitions(spark, df, pcols)
-    w = df.write.mode("overwrite")
-    if pcols:
-        w = w.partitionBy(*pcols)
-    w.saveAsTable(staging)
-    _mark_managed(spark, staging)
     cur = current_version(spark, table)
-    src_phys = (f"{table}__v{cur}" if cur is not None
-                else (table if spark.catalog.tableExists(table) else None))
-    if src_phys:
-        _copy_pipeline_props(spark, src_phys, staging)
-    if cur is None and spark.catalog.tableExists(table):
+    legacy = cur is None and spark.catalog.tableExists(table)
+    nxt = (cur or 0) + 1
+    vt = f"{table}__v{nxt}"
+    # single writer of vt: a colliding directory is always a crash crumb
+    safe_save_as_table(df, vt, mode="overwrite", partition_by=pcols or None,
+                       orphan_grace_s=0.0)
+    _mark_managed(spark, vt)
+    if cur is not None or legacy:
+        _copy_pipeline_props(spark, f"{table}__v{cur}" if cur is not None else table, vt)
+    if legacy:
         # one-time migration from the legacy real-table layout: move the
-        # old table aside so the view can take its name. A crash in here
-        # lands in a legacy recovery state (staging is complete, so the
-        # worst case re-promotes it as a real table; the next overwrite
-        # migrates again).
+        # old table aside so the view can take its name
         was_partitioned = bool(physical_partition_cols(spark, table))
         spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
         _mark_managed(spark, old)
         if was_partitioned:
             spark.sql(f"MSCK REPAIR TABLE {old}")
-    nxt = (cur or 0) + 1
-    vt = f"{table}__v{nxt}"
-    _clear_orphan_location(spark, vt, loc=_db_loc)
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {vt}")
-    if pcols:
-        spark.sql(f"MSCK REPAIR TABLE {vt}")
     spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {vt}")
     spark.sql(f"DROP TABLE IF EXISTS {old}")
     for v in [v for v in list_versions(spark, table) if v <= nxt - keep]:
@@ -844,8 +820,8 @@ def append_with_evolution(spark: SparkSession, incoming, target: str) -> None:
             resolve_physical(spark, target), mode="append")
         return
     merged = existing.unionByName(incoming, allowMissingColumns=True)
-    # staged swap materializes the union-schema rewrite before the old
-    # table drops — crash-safe, no executor-memory checkpoint
+    # the versioned swap materializes the union-schema rewrite before
+    # the old version drops — crash-safe, no executor-memory checkpoint
     overwrite_via_staging(spark, target, merged)
 
 
@@ -898,7 +874,7 @@ def compact_table(
 
 def recover_all(spark: SparkSession, db: str | None = None) -> dict[str, str]:
     """Catalog-wide crash-state sweep: find every base table with swap
-    leftovers (``__staging`` / ``__old`` / ``__v{N}`` entries) and run
+    leftovers (``__old`` / ``__v{N}`` entries) and run
     :func:`recover_staged_swap` on it. Returns {table: action} for the
     tables where recovery acted.
 
@@ -924,7 +900,7 @@ def recover_all(spark: SparkSession, db: str | None = None) -> dict[str, str]:
         return {}
     names = {t.name for t in tables}
     suspects: dict[str, list[str]] = {}
-    pat = re.compile(r"^(?P<base>.+?)(?:__staging|__old|__v\d+)$")
+    pat = re.compile(r"^(?P<base>.+?)(?:__old|__v\d+)$")
     for n in names:
         m = pat.match(n)
         if m:

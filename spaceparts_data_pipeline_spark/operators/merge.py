@@ -146,7 +146,7 @@ def merge_into_table(
     """
     from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
 
-    # Version-managed tables (reader-isolated staged swap) store data in
+    # Version-managed tables (reader-isolated versioned swap) store data in
     # `{table}__v{N}` behind a view — the partition-metadata probe and
     # the insertInto must address the physical table.
     phys = resolve_physical(spark, table)
@@ -176,12 +176,12 @@ def merge_into_table(
         from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
         merged = merge_upsert(target, source.select(*target.columns), keys, order_col=order_col)
-        # staged swap: materializes the merge before the old table drops,
+        # versioned swap: materializes the merge before the old version drops,
         # so no executor-memory checkpoint and a crash can't lose the table.
         # Preserve the target's REAL partition layout (re-probed: this
         # branch is also reached when the first metadata probe failed
         # transiently, or when partition_col names a column the table is
-        # not actually partitioned on) — a bare staged rewrite would
+        # not actually partitioned on) — a bare full rewrite would
         # silently promote an UNPARTITIONED new version, and every later
         # merge would permanently take this full-rewrite path.
         overwrite_via_staging(spark, table, merged,

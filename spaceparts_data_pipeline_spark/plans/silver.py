@@ -73,7 +73,8 @@ def _write_partitioned(clean: DataFrame, target: str, keys: list[str],
         # its OWN sort (destroying this one) unless the incoming ordering
         # already satisfies that requirement as a prefix.
         out = out.sortWithinPartitions(PARTITION_COL, *sort_by)
-    # staged swap: a crash mid-write leaves the previous table intact;
+    # versioned swap: the new version is written in place and the view
+    # repoint commits it, so a crash mid-write leaves the current one intact;
     # align_writers=False — the bucket repartition + sort above IS the
     # alignment, and a second repartition would destroy the sort
     spark = clean.sparkSession
@@ -320,8 +321,8 @@ def _merge_incremental(
         else:
             # schema drift or legacy unpartitioned table: one-time full
             # rewrite with the union schema, re-bucketed going forward.
-            # No checkpoint needed: the staged write inside
-            # _write_partitioned materializes before the old table drops.
+            # No checkpoint needed: the versioned swap inside
+            # _write_partitioned materializes before the old version drops.
             base = existing.drop(PARTITION_COL) if PARTITION_COL in existing.columns else existing
             merged = upsert_union_dedup(base, clean, keys=keys, order_col=order_col)
             _write_partitioned(merged, target, infer_keys(merged.columns, order_col), n_buckets)

@@ -19,12 +19,12 @@ DENYLIST_SUFFIXES = ("_execution_log", "_notebook_execution_summary", "_incremen
 
 #: versioned-swap machinery artifacts (operators/maintenance.py reserves
 #: these suffixes: `{t}__v{N}` physical versions behind the `{t}` view,
-#: `{t}__staging` / `{t}__old` mid-swap). They match layer globs like
+#: `{t}__old` while a legacy table migrates). They match layer globs like
 #: ``bronze_*`` — without this exclusion run_silver_layer processed every
 #: bronze table TWICE (once via its view, once via its physical version
 #: table), doubling the layer's work and littering the catalog with
 #: ``silver_{t}__v1`` outputs (found by the r15 log-batching test).
-_MAINT_ARTIFACT = re.compile(r"__(v\d+|staging|old)$")
+_MAINT_ARTIFACT = re.compile(r"__(v\d+|old)$")
 
 
 def discover_tables(spark: SparkSession, pattern: str = "bronze_*", database: str | None = None) -> list[str]:

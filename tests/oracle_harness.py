@@ -175,7 +175,9 @@ def emit_parity_attestation(repo_dir: str | None = None) -> str | None:
     """Write ``PARITY_LOCAL_r{N}.json`` from :data:`PARITY_RECORDS` —
     only when this run covered the FULL registry (both tiers), so a
     partial ``-k``-filtered run can never publish a misleadingly thin
-    attestation. Returns the path written, or None when skipped."""
+    attestation. A record equal to the one on disk except for
+    ``generated_at`` is not rewritten, so a re-run leaves the tree
+    clean. Returns the path written, or None when skipped."""
     from spaceparts_data_pipeline_spark.queries import LOCAL_ONLY, all_queries
 
     repo_dir = repo_dir or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -208,6 +210,17 @@ def emit_parity_attestation(repo_dir: str | None = None) -> str | None:
         "driver_tier": driver,
     }
     path = os.path.join(repo_dir, f"PARITY_LOCAL_r{out['round']}{suffix}.json")
+    try:
+        with open(path) as f:
+            prev = json.load(f)
+    except (OSError, ValueError):
+        prev = None
+    fresh = json.loads(json.dumps(out, default=str))
+    fresh.pop("generated_at")
+    if isinstance(prev, dict):
+        prev.pop("generated_at", None)
+    if prev == fresh:
+        return None
     with open(path, "w") as f:
         json.dump(out, f, indent=1, default=str)
     return path

@@ -1879,10 +1879,10 @@ class TestTableStore:
             self._cleanup(spark, table)
 
     def test_interrupted_swap_recovered_on_read(self, spark):
-        """Crash windows are recover_staged_swap's: an incomplete
-        __staging leftover is dropped on the next read; a complete but
-        unpromoted __v{N} is promoted — the read never resolves a
-        half-swapped store (which would silently widen the screen)."""
+        """Crash windows are recover_staged_swap's: a complete but
+        unpromoted __v{N} is promoted on the next read — the read never
+        resolves a half-swapped store (which would silently widen the
+        screen)."""
         from spaceparts_data_pipeline_spark.operators import dedup, maintenance
         table = "fp_store_tbl_cr"
         self._cleanup(spark, table)
@@ -1890,13 +1890,7 @@ class TestTableStore:
             dedup.update_store_table(
                 spark, spark.createDataFrame([("a",), ("a",), ("b",)], ["fingerprint"]),
                 table)
-            # window 1: compaction wrote staging, crash before the rename
-            spark.table(table).distinct().write.saveAsTable(f"{table}__staging")
-            store = dedup.read_store_table(spark, table)
-            assert store.count() == 3                      # pre-compaction state
-            assert not spark.catalog.tableExists(f"{table}__staging")
-
-            # window 2: version table complete, view not yet repointed
+            # version table complete, view not yet repointed
             cur = maintenance.current_version(spark, table)
             spark.table(table).distinct().write.saveAsTable(f"{table}__v{cur + 1}")
             store = dedup.read_store_table(spark, table)

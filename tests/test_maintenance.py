@@ -99,9 +99,9 @@ def test_partition_scoped_compaction(spark, maint_db):
 
 
 def test_staged_overwrite_swaps_and_cleans_up(spark, maint_db):
-    """Full-load writes go through <table>__staging + rename: the final
-    catalog has the live table only, with the new data, even when the
-    new data is derived from the table being replaced."""
+    """Full-load writes go through the versioned swap: the table holds
+    the new data, even when the new data is derived from the table
+    being replaced, and the migrated legacy table is gone."""
     from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
     spark.range(10).write.mode("overwrite").saveAsTable("swap_t")
@@ -110,17 +110,15 @@ def test_staged_overwrite_swaps_and_cleans_up(spark, maint_db):
     overwrite_via_staging(spark, "swap_t", doubled)
     vals = sorted(r["id"] for r in spark.table("swap_t").collect())
     assert vals == [i * 2 for i in range(10)]
-    assert not spark.catalog.tableExists("swap_t__staging")
+    assert not spark.catalog.tableExists("swap_t__old")
 
 
 class TestStagedSwapCrashRecovery:
-    """Kill the swap between every pair of steps; assert no state loses
-    the table and recovery restores a complete copy (new data when the
-    staging write had finished, old data otherwise)."""
+    """Crash states of the pre-versioned real-table layout (the versioned
+    swap's own kill points live in test_swap_kill_points.py)."""
 
     def _fresh(self, spark, name, vals):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"DROP TABLE IF EXISTS {name}__staging")
         spark.sql(f"DROP TABLE IF EXISTS {name}__old")
         spark.createDataFrame([(v,) for v in vals], "id long") \
             .write.mode("overwrite").saveAsTable(name)
@@ -128,70 +126,16 @@ class TestStagedSwapCrashRecovery:
     def _ids(self, spark, name):
         return sorted(r["id"] for r in spark.table(name).collect())
 
-    def test_crash_after_staging_write(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import recover_staged_swap
-
-        self._fresh(spark, "cr_t", [1, 2])
-        # crash state: staging written, live not yet moved aside
-        spark.createDataFrame([(10,), (20,)], "id long") \
-            .write.mode("overwrite").saveAsTable("cr_t__staging")
-        assert recover_staged_swap(spark, "cr_t") == "dropped_incomplete_staging"
-        assert self._ids(spark, "cr_t") == [1, 2]          # old data intact
-        assert not spark.catalog.tableExists("cr_t__staging")
-
-    def test_crash_after_live_moved_aside(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import recover_staged_swap
-
-        self._fresh(spark, "cr_t", [1, 2])
-        spark.createDataFrame([(10,), (20,)], "id long") \
-            .write.mode("overwrite").saveAsTable("cr_t__staging")
-        spark.sql("ALTER TABLE cr_t RENAME TO cr_t__old")
-        # crash state: live missing, staging complete → finish the swap
-        assert recover_staged_swap(spark, "cr_t") == "promoted_staging"
-        assert self._ids(spark, "cr_t") == [10, 20]        # new data promoted
-        assert not spark.catalog.tableExists("cr_t__old")
-        assert not spark.catalog.tableExists("cr_t__staging")
-
     def test_crash_before_old_dropped(self, spark, maint_db):
         from spaceparts_data_pipeline_spark.operators.maintenance import recover_staged_swap
 
         self._fresh(spark, "cr_t", [1, 2])
-        spark.createDataFrame([(10,), (20,)], "id long") \
-            .write.mode("overwrite").saveAsTable("cr_t__staging")
         spark.sql("ALTER TABLE cr_t RENAME TO cr_t__old")
-        spark.sql("ALTER TABLE cr_t__staging RENAME TO cr_t")
+        spark.createDataFrame([(10,), (20,)], "id long") \
+            .write.mode("overwrite").saveAsTable("cr_t")
         # crash state: swap done, orphan __old remains
         assert recover_staged_swap(spark, "cr_t") == "dropped_old"
         assert self._ids(spark, "cr_t") == [10, 20]
-        assert not spark.catalog.tableExists("cr_t__old")
-
-    def test_partitioned_promote_repairs_partitions(self, spark, maint_db):
-        """Promoting a PARTITIONED staging table re-registers partition
-        entries (MSCK) — without it the renamed table reads empty."""
-        from spaceparts_data_pipeline_spark.operators.maintenance import recover_staged_swap
-
-        spark.sql("DROP TABLE IF EXISTS cr_p")
-        spark.sql("DROP TABLE IF EXISTS cr_p__staging")
-        spark.sql("DROP TABLE IF EXISTS cr_p__old")
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, part string") \
-            .write.mode("overwrite").partitionBy("part").saveAsTable("cr_p")
-        spark.createDataFrame([(10, "a"), (20, "b")], "id long, part string") \
-            .write.mode("overwrite").partitionBy("part").saveAsTable("cr_p__staging")
-        spark.sql("ALTER TABLE cr_p RENAME TO cr_p__old")
-        assert recover_staged_swap(spark, "cr_p") == "promoted_staging"
-        assert sorted(r["id"] for r in spark.table("cr_p").collect()) == [10, 20]
-
-    def test_next_run_self_heals(self, spark, maint_db):
-        """A normal overwrite_via_staging after a crash state first runs
-        recovery, then completes its own swap."""
-        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-        self._fresh(spark, "cr_t", [1, 2])
-        spark.createDataFrame([(99,)], "id long") \
-            .write.mode("overwrite").saveAsTable("cr_t__staging")  # orphan
-        overwrite_via_staging(spark, "cr_t", spark.createDataFrame([(7,)], "id long"))
-        assert self._ids(spark, "cr_t") == [7]
-        assert not spark.catalog.tableExists("cr_t__staging")
         assert not spark.catalog.tableExists("cr_t__old")
 
 
@@ -442,19 +386,6 @@ class TestVersionedSwap:
         assert current_version(spark, "crm_t") == 2
         assert [r["id"] for r in spark.table("crm_t").collect()] == [2]
 
-    def test_incomplete_staging_dropped_current_version_kept(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            overwrite_via_staging, recover_staged_swap,
-        )
-
-        spark.sql("DROP VIEW IF EXISTS crs_t")
-        overwrite_via_staging(spark, "crs_t", spark.createDataFrame([(1,)], "id long"))
-        spark.createDataFrame([(99,)], "id long") \
-            .write.mode("overwrite").saveAsTable("crs_t__staging")
-        assert recover_staged_swap(spark, "crs_t") == "dropped_incomplete_staging"
-        assert [r["id"] for r in spark.table("crs_t").collect()] == [1]
-        assert not spark.catalog.tableExists("crs_t__staging")
-
 
 class TestRecoverAll:
     """Catalog-wide startup sweep: crash states on tables a run only
@@ -466,23 +397,22 @@ class TestRecoverAll:
         )
 
         # table A: mid-migration crash — versions exist, view missing.
-        # A real __v{N} always comes from renaming a marked staging
-        # table, so the marker travels with it — stamp it here too.
+        # The swap marks every __v{N} it writes — stamp it here too.
         spark.createDataFrame([(1,)], "id long") \
             .write.mode("overwrite").saveAsTable("sw_a__v1")
         _mark_managed(spark, "sw_a__v1")
-        # table B: healthy versioned table with an orphan staging
+        # table B: versioned table whose next version was written but
+        # the view not yet repointed
         spark.sql("DROP VIEW IF EXISTS sw_b")
         overwrite_via_staging(spark, "sw_b", spark.createDataFrame([(2,)], "id long"))
         spark.createDataFrame([(99,)], "id long") \
-            .write.mode("overwrite").saveAsTable("sw_b__staging")
+            .write.mode("overwrite").saveAsTable("sw_b__v2")
 
         actions = recover_all(spark)
         assert actions.get("sw_a") == "recreated_view"
-        assert actions.get("sw_b") == "dropped_incomplete_staging"
+        assert actions.get("sw_b") == "promoted_version"
         assert [r["id"] for r in spark.table("sw_a").collect()] == [1]
-        assert [r["id"] for r in spark.table("sw_b").collect()] == [2]
-        assert not spark.catalog.tableExists("sw_b__staging")
+        assert [r["id"] for r in spark.table("sw_b").collect()] == [99]
 
     def test_pipeline_entry_runs_the_sweep(self, spark, maint_db):
         from spaceparts_data_pipeline_spark.operators.maintenance import _mark_managed
@@ -499,24 +429,24 @@ class TestRecoverAll:
     def test_sweep_never_touches_user_tables_matching_the_convention(self, spark, maint_db):
         """A user table that merely LOOKS like a swap artifact — no
         managed marker, no version view — must survive the sweep intact:
-        renaming report__old to report or dropping foo__staging would be
+        renaming report__old to report or dropping foo__v1 would be
         destructive actions on tables the pipeline never managed."""
         from spaceparts_data_pipeline_spark.operators.maintenance import recover_all
 
         # user table named like an orphan grace copy, with no base table
         spark.createDataFrame([(1,)], "id long") \
             .write.mode("overwrite").saveAsTable("report__old")
-        # user staging-convention table next to a real user table
+        # user version-convention table next to a real user table
         spark.range(3).write.mode("overwrite").saveAsTable("foo")
         spark.createDataFrame([(9,)], "id long") \
-            .write.mode("overwrite").saveAsTable("foo__staging")
+            .write.mode("overwrite").saveAsTable("foo__v1")
 
         actions = recover_all(spark)
         assert "report" not in actions and "foo" not in actions
         assert spark.catalog.tableExists("report__old")
         assert not spark.catalog.tableExists("report")
-        assert spark.catalog.tableExists("foo__staging")
-        assert [r["id"] for r in spark.table("foo__staging").collect()] == [9]
+        assert spark.catalog.tableExists("foo__v1")
+        assert [r["id"] for r in spark.table("foo__v1").collect()] == [9]
 
     def test_sweep_still_acts_on_marked_artifacts(self, spark, maint_db):
         """The inverse guard: the same crash shapes ARE repaired when the
@@ -527,17 +457,18 @@ class TestRecoverAll:
 
         spark.range(4).write.mode("overwrite").saveAsTable("mk")
         spark.createDataFrame([(9,)], "id long") \
-            .write.mode("overwrite").saveAsTable("mk__staging")
-        _mark_managed(spark, "mk__staging")
+            .write.mode("overwrite").saveAsTable("mk__old")
+        _mark_managed(spark, "mk__old")
         actions = recover_all(spark)
-        assert actions.get("mk") == "dropped_incomplete_staging"
-        assert not spark.catalog.tableExists("mk__staging")
+        assert actions.get("mk") == "dropped_old"
+        assert not spark.catalog.tableExists("mk__old")
+        assert spark.table("mk").count() == 4
 
 
 def test_overwrite_survives_orphan_locations(spark, maint_db):
     """A crash between a catalog drop and its location cleanup (or a
     kill mid-saveAsTable) leaves a catalog-less warehouse DIRECTORY
-    under a __staging / __v{N} name; Spark refuses to create a managed
+    under a __v{N} name; Spark refuses to create a managed
     table over it (LOCATION_ALREADY_EXISTS), wedging every later
     overwrite (observed live: a killed harness run wedged the table-
     backend funnel). overwrite_via_staging must clear such crumbs —
@@ -552,12 +483,11 @@ def test_overwrite_survives_orphan_locations(spark, maint_db):
         if row[0] == "Location":
             loc = row[1].replace("file:", "")
     assert loc
-    # plant crumbs for BOTH names the overwrite will want
-    for crumb in ("orph_t__staging", "orph_t__v1"):
-        d = os.path.join(loc, crumb)
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "part-zombie.parquet"), "w") as f:
-            f.write("not parquet")
+    # plant a crumb under the version name the overwrite will write
+    d = os.path.join(loc, "orph_t__v1")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, "part-zombie.parquet"), "w") as f:
+        f.write("not parquet")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     overwrite_via_staging(spark, "orph_t", df)
     got = {(r["id"], r["v"]) for r in spark.table("orph_t").collect()}
@@ -619,7 +549,7 @@ def test_safe_save_as_table_does_not_clobber_live_tables(spark, maint_db):
 
 def test_clear_orphan_location_refuses_plain_names(spark, maint_db):
     """The proactive sweep only ever deletes swap-artifact names
-    (__staging/__compact/__old/__v{N}); a plain name raises (ADVICE
+    (__compact/__old/__v{N}); a plain name raises (ADVICE
     r11) — the reactive force path is reserved for safe_save_as_table's
     proven-wedge precondition."""
     from spaceparts_data_pipeline_spark.operators.maintenance import (
@@ -628,7 +558,7 @@ def test_clear_orphan_location_refuses_plain_names(spark, maint_db):
     with pytest.raises(ValueError):
         _clear_orphan_location(spark, "totally_normal_table")
     # artifact names pass the check (nothing to delete → False)
-    assert _clear_orphan_location(spark, "nope__staging") is False
+    assert _clear_orphan_location(spark, "nope__old") is False
     assert _clear_orphan_location(spark, "nope__v3") is False
 
 
@@ -926,11 +856,11 @@ def test_recover_all_scopes_recovery_to_the_given_db(spark, maint_db):
     )
 
     # decoy in the CURRENT db (maint_db): a healthy user layout whose
-    # names collide with the target db's crashed table — the old
-    # unqualified recovery dropped this staging table
+    # names collide with the target db's crashed table — an unqualified
+    # recovery would drop this __old table
     spark.range(3).write.mode("overwrite").saveAsTable("sw_x")
     spark.createDataFrame([(9,)], "id long").write.mode("overwrite") \
-        .saveAsTable("sw_x__staging")
+        .saveAsTable("sw_x__old")
     spark.sql("CREATE DATABASE IF NOT EXISTS maint_db_other")
     try:
         # crashed mid-migration state in the TARGET db: version exists,
@@ -944,7 +874,7 @@ def test_recover_all_scopes_recovery_to_the_given_db(spark, maint_db):
         assert actions == {"maint_db_other.sw_x": "recreated_view"}
         assert [r["id"] for r in spark.table("maint_db_other.sw_x").collect()] == [1]
         # the current db's same-named tables are untouched
-        assert spark.catalog.tableExists("sw_x__staging")
+        assert spark.catalog.tableExists("sw_x__old")
         assert spark.table("sw_x").count() == 3
     finally:
         spark.sql("DROP DATABASE IF EXISTS maint_db_other CASCADE")
