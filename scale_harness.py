@@ -37,7 +37,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import shutil
 import sys
 import time
@@ -1392,134 +1391,6 @@ def recall_e03b(spark, base: str, factor: int) -> dict:
     return out
 
 
-#: queries whose construction is gated by lineage.scale_share — the
-#: share-crossover measurement set (r16 change 5 / r17 verdict #1+#4)
-SHARE_GATED_OPS = [
-    "d23_charlm_quality",
-    "d24_dsir_importance",
-    "e06_knn_ivf_pq",
-    "e06b_knn_ivf_pq_residual",
-]
-
-
-def measure_share_crossover(spark, base: str, factor: int,
-                            names: list[str] | None = None,
-                            reps: int = 4, rounds: int = 2,
-                            control: str = "x29_contamination_check") -> dict:
-    """Per-round re-measurement of the shared-subtree flip points (r16
-    verdict next-round #4: the 16×-data / multi-file crossover legs were
-    one-off session logs; this makes them a committed JSON artifact).
-
-    Interleaved A/B at the x1 and xN multi-file layouts (the
-    ``build_data`` 32-file scale layout a production lake has): per
-    round, each gated query runs ``reps`` times with
-    ``spark.spaceparts.shareSubtrees=off`` then ``reps`` times ``on``
-    (same cache-clear+GC isolation as bench.py), a control query tags
-    machine-noise windows, and values are equality-gated (sorted
-    collect) once per (query, scale) before any timing. The artifact
-    also records what ``auto`` RESOLVES to at each layout
-    (lineage.scale_share's signal) so the adaptive default is checked
-    against the measured winner, not assumed.
-
-    Writes SHARE_CROSSOVER_r{N}.json at the repo root when
-    $SPARK_GRAFT_ROUND is set (e.g. r17), else prints only.
-    """
-    from spaceparts_data_pipeline_spark.operators.lineage import scale_share
-    from spaceparts_data_pipeline_spark.queries import all_queries
-
-    queries = all_queries()
-    names = names or SHARE_GATED_OPS
-
-    def _isolate():
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
-    def timed(name: str, mode: str, sf_dir: str, n: int) -> list[float]:
-        spark.conf.set("spark.spaceparts.shareSubtrees", mode)
-        _isolate()
-        out = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir) \
-                .write.format("noop").mode("overwrite").save()
-            out.append(round(time.perf_counter() - t0, 3))
-        return out
-
-    doc: dict = {"factor": factor, "reps": reps, "rounds": rounds,
-                 "cores": spark.sparkContext.defaultParallelism,
-                 "scales": {}}
-    prev = spark.conf.get("spark.spaceparts.shareSubtrees", None)
-    try:
-        for scale in ("x1", f"x{factor}"):
-            sf_dir = os.path.join(base, scale)
-            docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-            auto_signal = scale_share(docs)
-            # equality gate: on ≡ off row lists (sorted — multiplicity
-            # drift must fail too) before any timing at this scale
-            for name in names:
-                spark.conf.set("spark.spaceparts.shareSubtrees", "off")
-                a = sorted(map(tuple, queries[name](spark, sf_dir).collect()))
-                spark.conf.set("spark.spaceparts.shareSubtrees", "on")
-                b = sorted(map(tuple, queries[name](spark, sf_dir).collect()))
-                if a != b:
-                    only_a = [r for r in a if r not in b][:3]
-                    only_b = [r for r in b if r not in a][:3]
-                    raise AssertionError(
-                        f"{name}@{scale}: ON/OFF outputs differ "
-                        f"({len(a)} vs {len(b)} rows; off-only sample "
-                        f"{only_a}, on-only sample {only_b})")
-                print(f"equality {name}@{scale}: {len(a)} rows identical",
-                      flush=True)
-            table: dict[str, dict] = {}
-            ctrl: list[float] = []
-            for rnd in range(rounds):
-                for name in names:
-                    for mode in ("off", "on"):
-                        ts = timed(name, mode, sf_dir, reps)
-                        table.setdefault(name, {}).setdefault(mode, []).extend(ts)
-                        print(f"{scale} round {rnd} {name:28s} {mode:3s} "
-                              f"min {min(ts):6.2f}  all {ts}", flush=True)
-                if control:
-                    ts = timed(control, "off", sf_dir, max(2, reps - 2))
-                    ctrl.extend(ts)
-                    print(f"{scale} round {rnd} {control:28s} ctl "
-                          f"min {min(ts):6.2f}  all {ts}", flush=True)
-            summary = {}
-            for name, modes in table.items():
-                row = {}
-                for mode, ts in modes.items():
-                    st = sorted(ts)
-                    row[mode] = {"min": st[0], "median": st[len(st) // 2],
-                                 "n": len(st)}
-                row["auto_resolves_to"] = "on" if auto_signal else "off"
-                summary[name] = row
-            doc["scales"][scale] = {
-                "auto_signal": auto_signal,
-                "control": ({"min": min(ctrl), "median": sorted(ctrl)[len(ctrl) // 2],
-                             "n": len(ctrl)} if ctrl else None),
-                "queries": summary,
-            }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-        else:
-            spark.conf.set("spark.spaceparts.shareSubtrees", prev)
-    print(json.dumps(doc), flush=True)
-    round_tag = os.environ.get("SPARK_GRAFT_ROUND", "").strip()
-    m = re.match(r"(r\d+)", round_tag)
-    if m:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            f"SHARE_CROSSOVER_{m.group(1)}.json")
-        with open(path, "w") as fh:
-            json.dump(doc, fh, indent=1)
-        print(f"artifact written: {path}", flush=True)
-    return doc
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=8)
@@ -1589,15 +1460,6 @@ def main() -> None:
                          "the real runners, batched vs per-row appends, "
                          "reporting the measured per-pass append tax")
     ap.add_argument("--wide-tables", type=int, default=50)
-    ap.add_argument("--share-crossover", action="store_true",
-                    help="re-measure the shareSubtrees flip points as a "
-                         "per-round artifact (SHARE_CROSSOVER_r{N}.json "
-                         "when $SPARK_GRAFT_ROUND is set): interleaved "
-                         "off/on A/B over the scale-gated queries at the "
-                         "x1 and xN multi-file layouts, equality-gated, "
-                         "with the auto signal's resolution recorded")
-    ap.add_argument("--crossover-reps", type=int, default=4)
-    ap.add_argument("--crossover-rounds", type=int, default=2)
     ap.add_argument("--gold", action="store_true",
                     help="measure gold-layer throughput (bench.gold_throughput "
                          "protocol) at 1x and Nx fact volume — the sf0.1 bench "
@@ -1660,12 +1522,6 @@ def main() -> None:
 
     if args.wide_layer:
         measure_wide_layer_log(spark, args.wide_tables)
-        return
-
-    if args.share_crossover:
-        measure_share_crossover(spark, base, args.factor,
-                                reps=args.crossover_reps,
-                                rounds=args.crossover_rounds)
         return
 
     if args.gold:

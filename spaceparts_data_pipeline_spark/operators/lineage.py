@@ -22,6 +22,10 @@ plan with a leaf (LogicalRDD), so downstream plans stay O(1) in
 composition depth and cache operations stay milliseconds. Data
 semantics are unchanged — the same rows, computed once.
 
+``scale_share`` decides, per query construction and from the input
+scan's layout alone, whether a share that only pays once cores are busy
+applies (the measured crossover in SCALING.md "share crossover").
+
 Replay trade (same as localCheckpoint everywhere in the engine): local
 checkpoint blocks live on executor block managers; losing an executor
 makes them unrecoverable, which aborts the job rather than corrupting
@@ -40,50 +44,7 @@ from pyspark.sql import DataFrame
 _log = logging.getLogger(__name__)
 
 
-def share_mode(df: DataFrame | None = None) -> str:
-    """Runtime override for the r16 measured shared-subtree decisions:
-    ``spark.spaceparts.shareSubtrees`` = ``auto`` (default — ship the
-    per-query choices A/B-measured in OPTIMIZATION_r16.md, with the
-    scale-gated shares resolved per construction by
-    :func:`scale_share`), ``off`` (disable every conf-gated subtree
-    share, restoring the pre-r16 recompute shapes), or ``on`` (force
-    the full-share variants everywhere, including the paths measured
-    slower at single-file sf0.1 bench scale: e06's codebook share and
-    the d23/d24 tiny-frame gram-kernel cuts). Read at
-    query-CONSTRUCTION time so one session can interleave variants
-    rep-by-rep — the contract the interleaved off/on crossover
-    measurement (SCALING.md, SHARE_CROSSOVER_r17.json) relies on. Values
-    are identical in every mode (each shared subtree is deterministic
-    and the cut is pure materialization); only how many times it is
-    computed changes.
-
-    A value outside {auto, off, on} (after strip+lower) is a probe
-    integrity hazard — a typo would silently time two identical shapes
-    (ADVICE r16) — so it is LOGGED loudly and coerced to ``auto``
-    rather than swallowed."""
-    spark = df.sparkSession if df is not None else None
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    if spark is None:
-        return "auto"
-    try:
-        raw = spark.conf.get("spark.spaceparts.shareSubtrees", "auto") or "auto"
-    except Exception:
-        _log.warning("share_mode: could not read spark.spaceparts."
-                     "shareSubtrees; defaulting to 'auto'", exc_info=True)
-        return "auto"
-    mode = raw.strip().lower()
-    if mode not in ("auto", "off", "on"):
-        _log.warning("share_mode: unrecognized spark.spaceparts."
-                     "shareSubtrees=%r (expected auto|off|on); "
-                     "using 'auto'", raw)
-        return "auto"
-    return mode
-
-
-#: scale_share flip point: share a conf-gated subtree when the input
+#: scale_share flip point: share a scale-gated subtree when the input
 #: frame's scan yields at least this many partitions per core. Measured
 #: r16/r17 (SCALING.md "share crossover"): the duplicated subtrees are
 #: only free while cores sit idle — single-file sf0.1 layouts produce
@@ -97,31 +58,24 @@ def share_mode(df: DataFrame | None = None) -> str:
 SCALE_SHARE_PARTS_PER_CORE = 1.0
 
 
-def scale_share(frame: DataFrame, mode: str | None = None) -> bool:
-    """Resolve whether a SCALE-GATED subtree share applies for this
-    query construction: ``on`` → always, ``off`` → never, ``auto`` →
-    share when ``frame``'s scan parallelism reaches the measured flip
-    point (≥ :data:`SCALE_SHARE_PARTS_PER_CORE` splittable scan units
-    per core). Callers pass the SCAN-LEVEL input frame (the corpus /
-    training table read).
+def scale_share(frame: DataFrame) -> bool:
+    """Whether a scale-gated subtree share applies for this query
+    construction: share when ``frame``'s scan parallelism reaches the
+    measured flip point (≥ :data:`SCALE_SHARE_PARTS_PER_CORE`
+    splittable scan units per core). Callers pass the SCAN-LEVEL input
+    frame (the corpus / training table read). Values are identical
+    either way (each shared subtree is deterministic and the cut is
+    pure materialization); only how many times it is computed changes.
 
     Scan parallelism comes from driver-side metadata only — the
     ``inputFiles()`` listing, then local parquet footers for row-group
     counts (parquet cannot split below row-group granularity), the
     ``similarity._ensure_parallel`` pattern: never a ``df.rdd``
     conversion or a Spark job in live query paths (round-5 verdict).
-    Unknown layouts (remote URI schemes, non-file plans, unreadable
-    footers) keep the unshared shape — a cluster operator at real
-    data-to-core ratios pins ``shareSubtrees=on`` instead.
-
-    ``mode`` lets a caller that already resolved :func:`share_mode`
-    avoid a second conf read (and guarantees one construction can
-    never mix modes if the conf changes mid-build — ADVICE r16)."""
-    mode = share_mode(frame) if mode is None else mode
-    if mode == "on":
-        return True
-    if mode == "off":
-        return False
+    The file-count fast path applies to every URI scheme, so a remote
+    layout with at least one file per core shares. Below that, footers
+    are read only for local files; remote layouts, non-file plans and
+    unreadable footers keep the unshared shape."""
     try:
         cores = frame.sparkSession.sparkContext.defaultParallelism
         files = frame.inputFiles()
@@ -141,8 +95,11 @@ def scale_share(frame: DataFrame, mode: str | None = None) -> bool:
         parsed = urllib.parse.urlparse(f)
         if parsed.scheme not in ("", "file"):
             return False  # remote layout: signal unknown, stay unshared
+        # inputFiles() returns URIs: a space in a directory name reads
+        # back as %20, which the filesystem does not know
         try:
-            n_splits += pq.ParquetFile(parsed.path or f).metadata.num_row_groups
+            with pq.ParquetFile(urllib.parse.unquote(parsed.path) or f) as pf:
+                n_splits += pf.metadata.num_row_groups
         except Exception:
             return False
         if n_splits >= need:

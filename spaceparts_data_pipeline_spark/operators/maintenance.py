@@ -131,20 +131,10 @@ def _copy_pipeline_props(spark: SparkSession, src_table: str, dst_table: str) ->
 
 #: How many complete generations (current + predecessors) the versioned
 #: swap retains. 2 = current + one grace copy for in-flight readers; a
-#: slow consumer (BI extract spanning several refreshes) raises it via
-#: the ``spark.spaceparts.retainVersions`` conf or the explicit
-#: ``retain_versions=`` argument. Depth N means a reader can span N−1
+#: slow consumer (BI extract spanning several refreshes) raises it with
+#: the ``retain_versions=`` argument. Depth N means a reader can span N−1
 #: full swap cycles and still resolve its snapshot.
 DEFAULT_RETAIN_VERSIONS = 2
-
-
-def _retain_versions(spark: SparkSession, retain_versions: int | None) -> int:
-    if retain_versions is None:
-        try:
-            retain_versions = int(spark.conf.get("spark.spaceparts.retainVersions", str(DEFAULT_RETAIN_VERSIONS)))
-        except Exception:
-            retain_versions = DEFAULT_RETAIN_VERSIONS
-    return max(1, retain_versions)
 
 
 def _split_db(table: str) -> tuple[str | None, str]:
@@ -535,7 +525,7 @@ def file_stats(spark: SparkSession, table: str) -> dict:
 
 
 def recover_staged_swap(
-    spark: SparkSession, table: str, retain_versions: int | None = None
+    spark: SparkSession, table: str, retain_versions: int = DEFAULT_RETAIN_VERSIONS
 ) -> str | None:
     """Repair any crash state a previous :func:`overwrite_via_staging`
     left behind, restoring the invariant "``table`` exists and is
@@ -571,7 +561,7 @@ def recover_staged_swap(
       repair partitions (MSCK is idempotent) and drop old.
     """
     old = f"{table}__old"
-    keep = _retain_versions(spark, retain_versions)
+    keep = max(1, retain_versions)
     has = spark.catalog.tableExists
 
     def _msck(t):
@@ -633,76 +623,12 @@ def recover_staged_swap(
     return None
 
 
-def _xxhash64_salt_cols(df, exclude: tuple | list = ()) -> list:
-    """The subset of ``df``'s columns usable in an ``xxhash64`` salt:
-    ``xxhash64`` raises AnalysisException on MapType (and Variant)
-    anywhere in a column's type tree, so those columns are skipped —
-    the salt only needs ENOUGH entropy to spread a partition's rows,
-    not every column. ``exclude`` drops named columns: a salt built
-    from the partition columns themselves is constant WITHIN each
-    partition value, i.e. zero spread exactly where spread is wanted."""
-    from pyspark.sql import types as T
-
-    def hashable(dt) -> bool:
-        if isinstance(dt, T.MapType) or type(dt).__name__ == "VariantType":
-            return False
-        if isinstance(dt, T.ArrayType):
-            return hashable(dt.elementType)
-        if isinstance(dt, T.StructType):
-            return all(hashable(f.dataType) for f in dt.fields)
-        return True
-
-    return [F.col(f.name) for f in df.schema.fields
-            if f.name not in exclude and hashable(f.dataType)]
-
-
-def align_writers_to_partitions(spark, df, pcols: list[str]):
-    """ALIGN WRITERS TO PARTITION DIRS before a partitioned write:
-    without this every map task writes to every partition value's
-    directory — T tasks × P months ≈ T·P tiny files per table
-    (measured: ~2.5k files and 10 s of a 600k-row fact's write at
-    sf0.1; at 100 TB it is the classic small-file explosion). One
-    shuffle keyed on the partition columns gives one writer per
-    value (AQE coalesces small ones — the compact_table pattern).
-    For partition values too large for a single task, raise
-    ``spark.spaceparts.filesPerPartition``: a deterministic row-hash
-    salt then spreads each value over ≤ that many writers
-    (deterministic so a map-task retry re-routes rows identically;
-    computed over the xxhash64-hashable NON-partition columns —
-    map/variant columns can't feed a hash and partition columns are
-    constant within the value being spread; if nothing hashable
-    remains, spark_partition_id is the deterministic fallback). Shared by the versioned
-    full overwrite and the incremental merge path so both have the
-    same skew relief. Callers that pre-align AND order their writers
-    (silver's bucket sort) skip this to keep their shape."""
-    fpp = int(spark.conf.get("spark.spaceparts.filesPerPartition", "1"))
-    parts = [F.col(c) for c in pcols]
-    if fpp > 1:
-        salt_cols = _xxhash64_salt_cols(df, exclude=pcols)
-        if not salt_cols:
-            # an all-map/variant frame has no xxhash64-hashable column;
-            # a constant salt would silently give ZERO writer spread.
-            # spark_partition_id is deterministic per input split (a
-            # map-task retry re-reads the same split), so it still
-            # spreads each partition value over up to fpp writers
-            # (bounded by the input partition count) — and we say so.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "filesPerPartition=%d but no xxhash64-hashable column; "
-                "salting by spark_partition_id (spread capped at the "
-                "input partition count)", fpp)
-            salt_cols = [F.spark_partition_id()]
-        parts.append(F.pmod(F.xxhash64(*salt_cols), F.lit(fpp)))
-    return df.repartition(*parts)
-
-
 def overwrite_via_staging(
     spark: SparkSession,
     table: str,
     df,
     partition_by: str | list[str] | None = None,
-    retain_versions: int | None = None,
+    retain_versions: int = DEFAULT_RETAIN_VERSIONS,
     align_writers: bool = True,
 ) -> None:
     """Crash-safe full overwrite with READER ISOLATION: physical data
@@ -730,8 +656,15 @@ def overwrite_via_staging(
        one grace copy) are RETAINED for readers that resolved the view
        before the repoint; a reader can span ``retain_versions − 1``
        full swap cycles and still resolve its snapshot. Raise the depth
-       per-call or via ``spark.spaceparts.retainVersions`` for slow
-       consumers (BI extracts mid-refresh).
+       per call for slow consumers (BI extracts mid-refresh).
+
+    With ``align_writers`` (default) a partitioned sink's frame is first
+    repartitioned by the partition columns: one writer per partition
+    value (AQE coalesces small ones) instead of every map task writing a
+    file into every value's directory — T tasks × P values tiny files
+    (measured: ~2.5k files and 10 s of a 600k-row fact's write at
+    sf0.1). Callers that pre-align AND order their writers (silver's
+    bucket sort) pass ``align_writers=False`` to keep their shape.
 
     THE GUARANTEE IS DEPTH-BOUNDED: reader isolation holds for any
     single read whose runtime spans at most ``retain_versions − 1``
@@ -753,11 +686,11 @@ def overwrite_via_staging(
     ``insertInto`` and compaction don't work against a view.
     """
     old = f"{table}__old"
-    keep = _retain_versions(spark, retain_versions)
+    keep = max(1, retain_versions)
     pcols = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     recover_staged_swap(spark, table, retain_versions=retain_versions)
     if pcols and align_writers:
-        df = align_writers_to_partitions(spark, df, pcols)
+        df = df.repartition(*pcols)
     cur = current_version(spark, table)
     legacy = cur is None and spark.catalog.tableExists(table)
     nxt = (cur or 0) + 1

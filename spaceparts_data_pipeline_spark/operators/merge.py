@@ -163,15 +163,10 @@ def merge_into_table(
         # value, AQE coalesces) BEFORE the checkpoint: otherwise every
         # checkpoint partition writes a file into every touched dir —
         # tasks × dirs small files accumulating run over run until
-        # compaction. Shared with overwrite_via_staging so the same
-        # spark.spaceparts.filesPerPartition salt relieves a skewed /
-        # oversized touched month here too.
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            align_writers_to_partitions, overwrite_partitions,
-        )
+        # compaction. The same alignment overwrite_via_staging applies.
+        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_partitions
 
-        overwrite_partitions(
-            spark, phys, align_writers_to_partitions(spark, merged, [partition_col]))
+        overwrite_partitions(spark, phys, merged.repartition(partition_col))
     else:
         from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 

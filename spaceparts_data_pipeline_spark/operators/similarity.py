@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spaceparts_data_pipeline_spark.operators.lineage import (
-    scale_share,
-    share_mode,
-)
+from spaceparts_data_pipeline_spark.operators.lineage import scale_share
 
 
 def _ensure_parallel(df: DataFrame, n_hint: int | None = None) -> DataFrame:
@@ -341,16 +338,15 @@ def _share_once(df: DataFrame, share: bool = True,
     here is deterministic (md5-ordered TakeOrdered seeds, decimal-sum
     Lloyd means).
 
-    ``share=False`` makes this a no-op — callers resolve
-    :func:`lineage.share_mode` ONCE at function entry and thread the
-    decision through, so a conf change mid-construction can never
-    build a mixed-mode query (ADVICE r16). ``reliable=True`` writes
-    the cut through the SparkContext checkpoint dir instead of
-    executor-local blocks (requires ``sc.setCheckpointDir``): local
-    checkpoint blocks die with their executor, which ABORTS (never
-    corrupts) a consuming job — fine for the idempotent bench/oracle
-    paths, worth trading for checkpoint-dir I/O on multi-hour cluster
-    runs (the ``lineage.stage_cut`` replay contract)."""
+    ``share=False`` makes this a no-op — the scale-gated callers pass
+    :func:`lineage.scale_share`'s answer for their input scan.
+    ``reliable=True`` writes the cut through the SparkContext
+    checkpoint dir instead of executor-local blocks (requires
+    ``sc.setCheckpointDir``): local checkpoint blocks die with their
+    executor, which ABORTS (never corrupts) a consuming job — fine for
+    the idempotent bench/oracle paths, worth trading for checkpoint-dir
+    I/O on multi-hour cluster runs (the ``lineage.stage_cut`` replay
+    contract)."""
     if not share:
         return df
     if reliable:
@@ -440,7 +436,7 @@ def knn_ivf(
         # r16: cents is consumed by BOTH assign_cells and the probe
         # ranking — unshared, each consumer re-ran the TakeOrdered seed
         # pass over the corpus (refine_centroids already pins).
-        cents = _share_once(cents, share=share_mode(corpus) != "off")
+        cents = _share_once(cents)
     # corpus → nearest centroid (by cosine), one broadcast pass
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
     assigned = assign_cells(c, cents)
@@ -1078,10 +1074,10 @@ def pq_codebooks(
     MEASUREMENT (OPTIMIZATION_r16.md changes 2-3): the residual
     pipeline (e06b) wins with sharing because its training input is
     already a narrow cut leaf, while the plain-corpus pipeline (e06)
-    measured consistently FASTER unshared at bench scale — its
-    duplicated seed subtrees are latency-cheap parallel stages, and
-    the row-based RDD leaf costs more than the vectorized parquet
-    re-scans it replaces.
+    passes :func:`lineage.scale_share` — unshared it measured FASTER on
+    a low-split single-file scan, where the duplicated seed subtrees
+    are latency-cheap parallel stages and the row-based RDD leaf costs
+    more than the vectorized parquet re-scans it replaces.
     """
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
@@ -1199,13 +1195,11 @@ def knn_ivf_pq(
     # parallel stages while cores sit idle, and the row-based RDD
     # leaves forfeit the vectorized parquet scan) but at −18% as soon
     # as the scan has ≥1 split per core (8-core and multi-file legs,
-    # SCALING.md "share crossover"). r17: ``auto`` now resolves that
-    # crossover per construction via lineage.scale_share — single-file
-    # low-split layouts keep the unshared shape, production multi-file
-    # layouts share. Mode is read ONCE here and threaded through so a
-    # conf change mid-construction cannot build a mixed-mode query.
-    mode = share_mode(corpus)
-    full_share = scale_share(corpus, mode)
+    # SCALING.md "share crossover"). lineage.scale_share resolves that
+    # crossover per construction — single-file low-split layouts keep
+    # the unshared shape, production multi-file layouts share. Read once
+    # so the codebook and centroid shares always agree.
+    full_share = scale_share(corpus)
     book = pq_codebooks(corpus, id_col=id_col, vec_col=vec_col, dim=dim,
                         m=m, k_pq=k_pq, kmeans_iters=pq_iters,
                         share=full_share)
@@ -1348,31 +1342,25 @@ def knn_ivf_pq_residual(
     # connected_components machinery, eager=False per the measured
     # serial-job tax — see _share_once): one scan + one assign
     # exchange, then every consumer reads the narrow
-    # (id, cell, residual) leaf. Like _share_once, the lazy cuts here
-    # are disabled under shareSubtrees=off (the probe's pre-r16 leg).
-    # Mode is read ONCE and threaded through (ADVICE r16).
-    share = share_mode(corpus) != "off"
-    _lazy_cut = (
-        (lambda frame: stage_cut(frame, eager=False, reliable=reliable))
-        if share else (lambda frame: frame))
+    # (id, cell, residual) leaf.
     cents = _share_once(select_centroids(corpus, id_col=id_col, vec_col=vec_col,
                                         n_centroids=n_centroids),
-                        share=share, reliable=reliable)
+                        reliable=reliable)
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("__nv"))
     assigned = assign_cells(c, cents)
-    resid = _lazy_cut(
+    resid = stage_cut(
         assigned.join(F.broadcast(cents), "centroid_id")
         .select("neighbor_id", "centroid_id",
                 F.zip_with("__nv", "__cv",
                            lambda x, y: x.cast("double") - y.cast("double"))
                 .alias("__rv")),
+        eager=False, reliable=reliable,
     )
     book = _share_once(pq_codebooks(resid, id_col="neighbor_id", vec_col="__rv",
                                    dim=dim, m=m, k_pq=k_pq,
-                                   kmeans_iters=pq_iters,
-                                   share=share, reliable=reliable),
-                       share=share, reliable=reliable)
+                                   kmeans_iters=pq_iters, reliable=reliable),
+                       reliable=reliable)
 
     enc_ord = F.struct((-F.col("__d")).alias("s"), (-F.col("code")).alias("t"))
     codes = (
@@ -1393,12 +1381,13 @@ def knn_ivf_pq_residual(
         F.desc("__qcos"), F.asc("centroid_id"))
     # probes feed both the residual LUT and the candidate filter; the
     # frame is query-sized (n_q·n_probe) so it takes a lazy stage_cut
-    probes = _lazy_cut(
+    probes = stage_cut(
         q.crossJoin(F.broadcast(cents))
         .withColumn("__qcos", cosine(F.col("__qv"), F.col("__cv")))
         .withColumn("__r", F.row_number().over(probe_w))
         .filter(F.col("__r") <= n_probe)
         .select("query_id", "centroid_id", "__qv", "__cv"),
+        eager=False, reliable=reliable,
     )
     # per-(query, probed cell) residual LUT — 6dp-rounded terms so the
     # downstream m-way sum can go through the decimal pattern

@@ -1123,10 +1123,9 @@ def charlm_nll(
     # costs more than duplicate explosions running concurrently on idle
     # cores) but WINS −14..−18% once the scan has ≥1 split per core
     # (multi-file / larger-data legs, SCALING.md "share crossover") —
-    # r17 resolves that crossover per construction via
-    # lineage.scale_share (on → always, off → never, auto → the scan
-    # parallelism signal). Pure materialization of a deterministic
-    # frame: values identical in every mode.
+    # lineage.scale_share resolves that crossover per construction from
+    # the training scan's parallelism. Pure materialization of a
+    # deterministic frame: values identical either way.
     if scale_share(train):
         model = stage_cut(model, eager=False)
     ctx = model.groupBy(F.substring("g", 1, 1).alias("c1")).agg(
@@ -1225,7 +1224,7 @@ def dsir_importance(
     # of two — the d24 leg of the frame-form gram-kernel share (see
     # charlm_nll above: loses at single-file sf0.1, wins −12..−29% at
     # ≥1 scan split per core; lineage.scale_share resolves the
-    # crossover per construction, values identical in every mode).
+    # crossover per construction, values identical either way).
     if scale_share(docs):
         tcnt = stage_cut(tcnt, eager=False)
         rcnt = stage_cut(rcnt, eager=False)

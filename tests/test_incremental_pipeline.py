@@ -289,43 +289,6 @@ def test_gold_incremental_rewrites_only_touched_months(spark, inc_db):
     assert len(jan_after) <= 2, jan_after
 
 
-def test_gold_incremental_merge_honors_files_per_partition(spark, inc_db):
-    """r14 advice: the incremental merge's writer alignment must have the
-    same spark.spaceparts.filesPerPartition skew relief as the staged
-    full overwrite — one oversized touched month must spread over ≤ fpp
-    writers instead of serializing through a single task."""
-    import datetime as dtm
-
-    from pyspark.sql import functions as F
-
-    from spaceparts_data_pipeline_spark.operators.merge import merge_into_table
-
-    base = spark.range(50_000).select(
-        F.col("id").alias("k"),
-        F.to_date(F.lit("2025-03-15")).alias("billing_date"),
-        (F.col("id") * 1.0).alias("v"),
-    ).withColumn("p_month", F.trunc("billing_date", "month"))
-    base.write.mode("overwrite").partitionBy("p_month").saveAsTable("gold_fpp")
-    delta = spark.createDataFrame(
-        [(7, dtm.date(2025, 3, 20), 777.0)], "k long, billing_date date, v double"
-    ).withColumn("p_month", F.trunc("billing_date", "month"))
-
-    spark.conf.set("spark.spaceparts.filesPerPartition", "4")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        merge_into_table(spark, "gold_fpp", delta, ["k"], partition_col="p_month")
-    finally:
-        spark.conf.unset("spark.spaceparts.filesPerPartition")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
-    files = [p for p in _parquet_files(_table_location(spark, "gold_fpp"))
-             if "p_month=2025-03" in p]
-    assert 2 <= len(files) <= 4, files    # salted spread, still bounded
-    t = spark.table("gold_fpp")
-    assert t.count() == 50_000
-    assert t.filter(F.col("k") == 7).collect()[0]["v"] == 777.0
-
-
 def test_silver_full_single_transform_execution(spark, inc_db, monkeypatch):
     """Round-3 verdict #3: run_full used to execute the heavy
     standardize→window-dedup plan three times (quarantine count,

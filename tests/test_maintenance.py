@@ -338,25 +338,22 @@ class TestVersionedSwap:
         overwrite_via_staging(spark, "ret_t", spark.range(40), retain_versions=3)
         assert list_versions(spark, "ret_t") == [2, 3, 4]
 
-    def test_retain_versions_via_session_conf(self, spark, maint_db):
-        """The conf knob configures depth without threading a parameter
-        through every plan call; the recovery sweep honors it too."""
+    def test_recovery_prunes_when_retain_depth_lowered(self, spark, maint_db):
+        """The recovery sweep honors ``retain_versions`` too: versions
+        kept at depth 3 are pruned to depth 2 on the next recovery
+        pass that asks for 2."""
         from spaceparts_data_pipeline_spark.operators.maintenance import (
             list_versions, overwrite_via_staging, recover_staged_swap,
         )
 
         spark.sql("DROP VIEW IF EXISTS retc_t")
-        spark.conf.set("spark.spaceparts.retainVersions", "3")
-        try:
-            for i in range(1, 5):
-                overwrite_via_staging(spark, "retc_t", spark.range(i * 10))
-            assert list_versions(spark, "retc_t") == [2, 3, 4]
-            # dropping the conf back to 2 prunes on the next recovery pass
-            spark.conf.set("spark.spaceparts.retainVersions", "2")
-            assert recover_staged_swap(spark, "retc_t") == "pruned_versions"
-            assert list_versions(spark, "retc_t") == [3, 4]
-        finally:
-            spark.conf.unset("spark.spaceparts.retainVersions")
+        for i in range(1, 5):
+            overwrite_via_staging(spark, "retc_t", spark.range(i * 10),
+                                  retain_versions=3)
+        assert list_versions(spark, "retc_t") == [2, 3, 4]
+        assert recover_staged_swap(spark, "retc_t", retain_versions=2) \
+            == "pruned_versions"
+        assert list_versions(spark, "retc_t") == [3, 4]
 
     def test_crash_between_rename_and_repoint_promotes(self, spark, maint_db):
         from spaceparts_data_pipeline_spark.operators.maintenance import (
@@ -697,16 +694,6 @@ def test_partitioned_overwrite_aligns_writers_to_dirs(spark, maint_db):
     files = _glob.glob(f"{loc}/p=*/*.parquet")
     assert len(files) <= 24 * 2, f"writer alignment lost: {len(files)} files"
     assert spark.table("align_t").count() == 20_000
-    # the salt escape valve spreads one value over <= filesPerPartition
-    spark.conf.set("spark.spaceparts.filesPerPartition", "4")
-    try:
-        overwrite_via_staging(spark, "align_t", df, partition_by="p")
-    finally:
-        spark.conf.unset("spark.spaceparts.filesPerPartition")
-    loc = table_location(spark, resolve_physical(spark, "align_t"))
-    files = _glob.glob(f"{loc}/p=*/*.parquet")
-    assert len(files) <= 24 * 4
-    assert spark.table("align_t").count() == 20_000
 
 
 def test_list_versions_ignores_views_matching_the_pattern(spark, maint_db):
@@ -754,67 +741,6 @@ def test_list_versions_temp_view_collision_does_not_hide_real_version(spark, mai
         assert list_versions(spark, "lvc_t") == [1, 2]
     finally:
         spark.catalog.dropTempView("lvc_t__v1")
-
-
-def test_fpp_salt_falls_back_when_only_partition_cols_hashable(spark, maint_db):
-    """r15 advice: when the only xxhash64-hashable column is the
-    partition column itself, the salt is constant WITHIN each
-    partition value — silently zero writer spread. The salt must
-    exclude partition columns and fall back to spark_partition_id
-    for an otherwise all-map frame (with a warning), keeping the
-    write working and deterministically spread."""
-    import glob as _glob
-
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        _xxhash64_salt_cols, overwrite_via_staging, resolve_physical,
-        table_location,
-    )
-
-    df = (spark.range(2_000)
-          .withColumn("p", F.pmod("id", F.lit(2)).cast("int"))
-          .withColumn("m", F.create_map(F.lit("k"), F.col("id")))
-          .drop("id")
-          .repartition(8))
-    assert _xxhash64_salt_cols(df, exclude=("p",)) == []
-    spark.conf.set("spark.spaceparts.filesPerPartition", "4")
-    # at this toy size AQE's partition coalescing folds the whole
-    # shuffle into one task (desired in production, hides the spread
-    # here) — turn it off so the salt's writer spread is observable
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        overwrite_via_staging(spark, "mapsalt_t", df, partition_by="p")
-    finally:
-        spark.conf.unset("spark.spaceparts.filesPerPartition")
-        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    assert spark.table("mapsalt_t").count() == 2_000
-    loc = table_location(spark, resolve_physical(spark, "mapsalt_t"))
-    files = _glob.glob(f"{loc}/p=*/*.parquet")
-    # spark_partition_id over 8 input partitions mod 4 -> real spread,
-    # still bounded by the fpp cap per value
-    assert 2 < len(files) <= 2 * 4, files
-
-
-def test_fpp_salt_skips_unhashable_map_columns(spark, maint_db):
-    """r14 advice: the filesPerPartition salt hashed EVERY column via
-    xxhash64, which raises AnalysisException on MapType — enabling the
-    escape valve used to break any partitioned overwrite of a table
-    carrying a map column. The salt must use the hashable subset."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        _xxhash64_salt_cols, overwrite_via_staging,
-    )
-
-    df = (spark.range(1_000)
-          .withColumn("p", F.pmod("id", F.lit(4)).cast("int"))
-          .withColumn("m", F.create_map(F.lit("k"), F.col("id"))))
-    assert len(_xxhash64_salt_cols(df)) == 2           # id, p — not m
-    spark.conf.set("spark.spaceparts.filesPerPartition", "4")
-    try:
-        overwrite_via_staging(spark, "mapcol_t", df, partition_by="p")
-    finally:
-        spark.conf.unset("spark.spaceparts.filesPerPartition")
-    out = spark.table("mapcol_t")
-    assert out.count() == 1_000
-    assert out.select(F.col("m")["k"]).first()[0] is not None
 
 
 def test_db_location_always_reflects_current_catalog_state(spark, tmp_path):

@@ -537,173 +537,67 @@ def test_d07b_det_minhash_buckets_not_shingles_in_exchange(spark, sf_oracle):
     assert "Generate explode" in plan or "Generate posexplode" in plan
 
 
-def test_share_subtrees_conf_toggles_ivf_share_shapes(spark, sf_oracle):
-    """spark.spaceparts.shareSubtrees (r16, the crossover-probe
-    contract): `auto` (default) ships the measured per-query choices —
-    e06b's intermediates are shared RDD leaves; e06's are scale-gated
-    (lineage.scale_share) and stay UNSHARED here because the
-    single-file oracle layout sits below the measured flip point
-    (the multi-file flip is pinned by
-    test_scale_share_auto_flips_on_multifile_layout); `off` restores
-    the pre-r16 recompute shapes everywhere (no RDD leaves in e06b);
-    `on` forces the full-share variant on e06 too. Values are
-    identical in every mode (checked exactly on e06, whose auto/on
-    shapes differ)."""
-    from spaceparts_data_pipeline_spark.queries import llm
-
-    def plans():
-        e06 = llm.QUERIES["e06_knn_ivf_pq"](spark, sf_oracle)
-        e06b = llm.QUERIES["e06b_knn_ivf_pq_residual"](spark, sf_oracle)
-        return (e06, e06._jdf.queryExecution().executedPlan().toString(),
-                e06b._jdf.queryExecution().executedPlan().toString())
-
-    prev = spark.conf.get("spark.spaceparts.shareSubtrees", None)
-    try:
-        spark.conf.unset("spark.spaceparts.shareSubtrees")
-        e06_auto, p06_auto, p06b_auto = plans()
-        assert "Scan ExistingRDD" not in p06_auto      # e06 unshared by measurement
-        assert "Scan ExistingRDD" in p06b_auto         # e06b shared by measurement
-        assert "Scan parquet" not in p06b_auto         # every corpus pass behind the cuts
-
-        spark.conf.set("spark.spaceparts.shareSubtrees", "off")
-        e06_off, p06_off, p06b_off = plans()
-        assert "Scan ExistingRDD" not in p06_off
-        assert "Scan ExistingRDD" not in p06b_off      # pre-r16 recompute shape restored
-        assert "Scan parquet" in p06b_off
-
-        spark.conf.set("spark.spaceparts.shareSubtrees", "on")
-        e06_on, p06_on, _ = plans()
-        assert "Scan ExistingRDD" in p06_on            # full-share variant re-enabled
-
-        # sorted lists, not sets: a duplicate-row multiplicity drift
-        # between modes must fail too (ADVICE r16)
-        rows_auto = sorted(map(tuple, e06_auto.collect()))
-        assert sorted(map(tuple, e06_off.collect())) == rows_auto
-        assert sorted(map(tuple, e06_on.collect())) == rows_auto
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-        else:
-            spark.conf.set("spark.spaceparts.shareSubtrees", prev)
-
-
-def test_share_subtrees_conf_toggles_gram_kernel_cuts(spark, sf_oracle):
-    """The d23/d24 leg of the shareSubtrees contract: mode `on` cuts the
-    tiny model/count frames (plan gains RDD leaves — one gram explosion
-    per training frame instead of one per broadcast consumer); `off`
-    keeps the duplicated-explosion shape, and `auto` resolves the
-    scale_share signal — which is OFF at this single-file layout (the
-    sf0.1-measured winner; the multi-file flip is pinned by
-    test_scale_share_auto_flips_on_multifile_layout). Values identical
-    — the cut frames are deterministic and the cut is pure
-    materialization."""
-    from spaceparts_data_pipeline_spark.queries import llm
-
-    prev = spark.conf.get("spark.spaceparts.shareSubtrees", None)
-    try:
-        rows, plans = {}, {}
-        for mode in ("auto", "off", "on"):
-            spark.conf.set("spark.spaceparts.shareSubtrees", mode)
-            for name in ("d23_charlm_quality", "d24_dsir_importance"):
-                df = llm.QUERIES[name](spark, sf_oracle)
-                plans[(name, mode)] = \
-                    df._jdf.queryExecution().executedPlan().toString()
-                # sorted lists so multiplicity drift fails (ADVICE r16)
-                rows[(name, mode)] = sorted(map(tuple, df.collect()))
-        for name in ("d23_charlm_quality", "d24_dsir_importance"):
-            assert "Scan ExistingRDD" not in plans[(name, "auto")]
-            assert "Scan ExistingRDD" not in plans[(name, "off")]
-            assert "Scan ExistingRDD" in plans[(name, "on")]
-            assert rows[(name, "off")] == rows[(name, "auto")]
-            assert rows[(name, "on")] == rows[(name, "auto")]
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-        else:
-            spark.conf.set("spark.spaceparts.shareSubtrees", prev)
-
-
 def test_scale_share_auto_flips_on_multifile_layout(spark, sf_oracle, tmp_path):
-    """r17 (r16 verdict next-round #1): `auto` is SCALE-ADAPTIVE — the
-    conf-gated subtree shares that lose on a 1-2-split single-file scan
-    flip ON once the input scan has >= 1 splittable unit per core (the
-    measured crossover, SCALING.md r16 5a-5d / r17). Pinned here on the
-    d23 gram kernel: same data written single-file vs one-file-per-core
-    x2, auto mode — the multi-file construction gains the RDD cut leaf,
-    the single-file one stays duplicated-explosion, and the rows are
-    identical (sorted lists: multiplicity drift must fail)."""
+    """The scale-gated subtree shares that lose on a 1-2-split
+    single-file scan flip ON once the input scan has >= 1 splittable
+    unit per core (the measured crossover, SCALING.md "share
+    crossover"). Same data written single-file vs one-file-per-core x2:
+    the d23/d24 gram-kernel cuts and e06's codebook/centroid shares
+    appear as RDD leaves only on the multi-file layout; e06b's
+    intermediates are shared at both; rows are identical across the
+    layouts (sorted lists: multiplicity drift must fail)."""
     import os
 
     from spaceparts_data_pipeline_spark.operators.lineage import scale_share
-    from spaceparts_data_pipeline_spark.operators.text import charlm_nll
+    from spaceparts_data_pipeline_spark.queries import llm
+
+    cores = spark.sparkContext.defaultParallelism
+    mf_dir = tmp_path / "sf_multifile"
+    mf_dir.mkdir()
+    for name in ("documents", "embeddings"):
+        src = spark.read.parquet(os.path.join(sf_oracle, f"{name}.parquet"))
+        src.repartition(cores * 2).write.parquet(str(mf_dir / f"{name}.parquet"))
 
     docs = spark.read.parquet(os.path.join(sf_oracle, "documents.parquet"))
+    docs_mf = spark.read.parquet(str(mf_dir / "documents.parquet"))
+    assert scale_share(docs) is False           # single file, many cores
+    assert scale_share(docs_mf) is True         # >= 1 file per core
+
+    def run(name, sf_dir):
+        df = llm.QUERIES[name](spark, sf_dir)
+        return (df._jdf.queryExecution().executedPlan().toString(),
+                sorted(map(tuple, df.collect())))
+
+    for name in ("d23_charlm_quality", "d24_dsir_importance",
+                 "e06_knn_ivf_pq", "e06b_knn_ivf_pq_residual"):
+        p_single, r_single = run(name, sf_oracle)
+        p_multi, r_multi = run(name, str(mf_dir))
+        shared_single = name == "e06b_knn_ivf_pq_residual"
+        assert ("Scan ExistingRDD" in p_single) is shared_single, name
+        assert "Scan ExistingRDD" in p_multi, name   # shares at scale
+        if shared_single:                            # every corpus pass behind the cuts
+            assert "Scan parquet" not in p_single and "Scan parquet" not in p_multi
+        assert r_multi == r_single, name
+
+
+def test_scale_share_reads_footers_under_escaped_paths(spark, tmp_path):
+    """Below one file per core the signal counts parquet row groups
+    from the footers. inputFiles() returns URIs, so a directory name
+    with a space arrives as %20 and must be decoded before the footer
+    is opened: one file with >= defaultParallelism row groups shares."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spaceparts_data_pipeline_spark.operators.lineage import scale_share
+
     cores = spark.sparkContext.defaultParallelism
-    mf_path = str(tmp_path / "documents_multifile.parquet")
-    docs.repartition(cores * 2).write.mode("overwrite").parquet(mf_path)
-    docs_mf = spark.read.parquet(mf_path)
-
-    prev = spark.conf.get("spark.spaceparts.shareSubtrees", None)
-    try:
-        spark.conf.unset("spark.spaceparts.shareSubtrees")
-        assert scale_share(docs) is False           # single file, many cores
-        assert scale_share(docs_mf) is True         # >= 1 file per core
-
-        single = charlm_nll(docs, docs)
-        multi = charlm_nll(docs_mf, docs_mf)
-        p_single = single._jdf.queryExecution().executedPlan().toString()
-        p_multi = multi._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" not in p_single   # below the flip point
-        assert "Scan ExistingRDD" in p_multi        # auto shares at scale
-
-        assert sorted(map(tuple, multi.collect())) == \
-            sorted(map(tuple, single.collect()))
-
-        # off still disables the share even on the multi-file layout
-        spark.conf.set("spark.spaceparts.shareSubtrees", "off")
-        assert scale_share(docs_mf) is False
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-        else:
-            spark.conf.set("spark.spaceparts.shareSubtrees", prev)
-
-
-def test_share_mode_validates_conf_values(spark):
-    """share_mode (ADVICE r16): whitespace/case-normalize valid values;
-    unknown values coerce to auto WITH a warning, never silently pick a
-    wrong A/B leg."""
-    import logging
-
-    from spaceparts_data_pipeline_spark.operators.lineage import share_mode
-
-    prev = spark.conf.get("spark.spaceparts.shareSubtrees", None)
-    try:
-        for raw, want in ((" ON ", "on"), ("Off", "off"), ("AUTO", "auto")):
-            spark.conf.set("spark.spaceparts.shareSubtrees", raw)
-            assert share_mode(spark.range(1)) == want
-        spark.conf.set("spark.spaceparts.shareSubtrees", "tru")
-        import spaceparts_data_pipeline_spark.operators.lineage as lineage
-
-        logger = logging.getLogger(lineage.__name__)
-        records: list[logging.LogRecord] = []
-
-        class _Cap(logging.Handler):
-            def emit(self, record):
-                records.append(record)
-
-        h = _Cap()
-        logger.addHandler(h)
-        try:
-            assert share_mode(spark.range(1)) == "auto"
-        finally:
-            logger.removeHandler(h)
-        assert any("unrecognized" in r.getMessage() for r in records)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.spaceparts.shareSubtrees")
-        else:
-            spark.conf.set("spark.spaceparts.shareSubtrees", prev)
+    d = tmp_path / "dir with space"
+    d.mkdir()
+    pq.write_table(pa.table({"x": list(range(cores * 10))}),
+                   str(d / "part.parquet"), row_group_size=10)
+    df = spark.read.parquet(str(d))
+    assert len(df.inputFiles()) == 1
+    assert scale_share(df) is True
 
 
 def test_share_once_reliable_routes_through_checkpoint_dir(spark, tmp_path):
@@ -715,10 +609,8 @@ def test_share_once_reliable_routes_through_checkpoint_dir(spark, tmp_path):
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     df = spark.range(10).selectExpr("id", "id * id AS sq")
-    local = _share_once(df, share=True)
-    rel = _share_once(df, share=True, reliable=True)
-    noop = _share_once(df, share=False)
-    assert noop is df                              # no-op when unshared
+    local = _share_once(df)
+    rel = _share_once(df, reliable=True)
     want = sorted(map(tuple, df.collect()))
     assert sorted(map(tuple, rel.collect())) == want
     assert sorted(map(tuple, local.collect())) == want
