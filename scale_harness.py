@@ -367,8 +367,8 @@ def _gated_docs(spark, base: str, scale: str, factor: int) -> str:
 
 
 def run_funnel(spark, base: str, scale: str, n_batches: int = 5,
-               backend: str = "path", quality: str = "off",
-               factor: int = 8, semdedup: bool = False) -> list[dict]:
+               quality: str = "off", factor: int = 8,
+               semdedup: bool = False) -> list[dict]:
     """Round-6 verdict next-round #3: measure the COMPOSED
     plans.corpus.run_corpus_ingest funnel — persist boundaries, store
     read-modify-write cycle, five chained stages — over a multi-batch
@@ -402,11 +402,6 @@ def run_funnel(spark, base: str, scale: str, n_batches: int = 5,
     counts at both scales). The gate is a scan-bound pure projection
     whose scaling d04/d17 measure standalone; disabling it here keeps
     the dedup/contamination/store stages at honest 8x volume.
-
-    backend='table' runs the SAME sequence on the catalog-table screen
-    stores (store_table_prefix; compaction = atomic view repoint) —
-    the round-7 verdict #8 soak. Store growth is then reported from the
-    table's resolved storage stats instead of the path listing.
 
     quality='gopher'|'c4' (round-8 verdict #3) runs the funnel WITH the
     quality gate doing real work at every scale: the input switches to
@@ -444,22 +439,15 @@ def run_funnel(spark, base: str, scale: str, n_batches: int = 5,
     """
     import pyspark.sql.functions as F
 
-    from spaceparts_data_pipeline_spark.operators import dedup, maintenance
+    from spaceparts_data_pipeline_spark.operators import dedup
     from spaceparts_data_pipeline_spark.operators import text as text_ops
     from spaceparts_data_pipeline_spark.plans.corpus import run_corpus_ingest
 
     sf_dir = os.path.join(base, scale)
-    out = os.path.join(base, f"funnel_{backend}_{quality}_{scale}"
-                       if quality != "off" else f"funnel_{backend}_{scale}")
+    out = os.path.join(base, f"funnel_{quality}_{scale}"
+                       if quality != "off" else f"funnel_{scale}")
     if os.path.isdir(out):
         shutil.rmtree(out)
-    table_prefix = None
-    if backend == "table":
-        table_prefix = f"scale_funnel_{scale}"
-        for t in spark.catalog.listTables():
-            if t.name.startswith(table_prefix):
-                kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                spark.sql(f"DROP {kind} IF EXISTS {t.name}")
     if quality != "off":
         docs = spark.read.parquet(_gated_docs(spark, base, scale, factor))
     else:
@@ -513,33 +501,22 @@ def run_funnel(spark, base: str, scale: str, n_batches: int = 5,
                                   contamination_threshold=30,
                                   quality_gate=(quality != "off"),
                                   quality_rules=quality if quality != "off" else "basic",
-                                  store_table_prefix=table_prefix,
                                   **charlm_kwargs, **sem_kwargs)
         wall = time.perf_counter() - t0
         after = _stage_totals(spark)
         row = {
-            "scale": scale, "backend": backend, "batch": b, "sec": round(wall, 3),
+            "scale": scale, "batch": b, "sec": round(wall, 3),
             **{k: stats[k] for k in stats},
             "shuffle_read_mb": round((after["shuffle_read"] - before["shuffle_read"]) / 1e6, 2),
             "shuffle_write_mb": round((after["shuffle_write"] - before["shuffle_write"]) / 1e6, 2),
         }
         for store in ("fp_store", "band_store"):
-            if table_prefix:
-                tbl = f"{table_prefix}_{store}"
-                sdf = dedup.read_store_table(spark, tbl)  # None until first admit
-                row[f"{store}_files"] = (
-                    maintenance.file_stats(spark, tbl)["n_files"] if sdf is not None else 0)
-            else:
-                p = os.path.join(out, store)
-                sdf = dedup.read_store(spark, p)  # None until first admit
-                row[f"{store}_files"] = dedup.data_file_count(spark, p) if sdf is not None else 0
+            p = os.path.join(out, store)
+            sdf = dedup.read_store(spark, p)  # None until first admit
+            row[f"{store}_files"] = dedup.data_file_count(spark, p) if sdf is not None else 0
             row[f"{store}_rows"] = sdf.count() if sdf is not None else 0
         if semdedup:
-            from spaceparts_data_pipeline_spark.operators import vector_store
-
-            sem_prefix = table_prefix if table_prefix else os.path.join(out, "sem_store")
-            sdf = vector_store.read_semdedup_store(
-                spark, sem_prefix, table_backend=bool(table_prefix))
+            sdf = dedup.read_store(spark, os.path.join(out, "sem_store"))
             row["sem_store_rows"] = sdf.count() if sdf is not None else 0
         results.append(row)
         print(json.dumps(row), flush=True)
@@ -824,155 +801,6 @@ def measure_semdedup_megacell(spark, base: str, factor: int) -> list[dict]:
                    "dups": dups, **_task_straggler(spark, since)}
             rows.append(row)
             print(json.dumps(row), flush=True)
-    return rows
-
-
-def measure_semdedup_store(spark, base: str, factor: int) -> list[dict]:
-    """Round 13 (r12 verdict #2 + #6): the PRODUCTIONIZED semantic-dedup
-    vector store measured on its two claims.
-
-    (a) SCREEN COST vs STORE SIZE — a fixed probe batch (shard 0's
-    embeddings) is screened against the id-bucketed table-backend store
-    as it grows from 1 to factor−1 appended shards. The shipped screen
-    (map-side signature explode + BROADCAST batch bands + id-bucketed
-    verify) keeps the store side of both joins exchange-free, so screen
-    shuffle should stay ~flat while the store grows; the same screen
-    with broadcast_screen=False (both band sides exchanged — the full
-    store×n_bands shuffle the r12 verdict flagged) is measured at the
-    largest store as the comparison row. This mode is also where the
-    (band, sig)-bucketed pre-exploded index was FALSIFIED in r13:
-    29M collision candidates at a 14k store (the 4-plane profile has a
-    16-value signature space) scattered across bucket partitions cost
-    1.7 GB of dedup shuffle vs 45 MB in scan order.
-
-    (b) SCREEN RECALL on planted cross-batch duplicates — copies of
-    stored vectors under fresh ids (half exact, half perturbed but kept
-    ≥ threshold cosine): recall-of-screen = rejected fraction; the miss
-    rate is the 4×16 banding miss rate, the same bound e03c pins
-    within-batch. Exact copies must screen at 1.0 (identical vectors
-    share every band signature)."""
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    from spaceparts_data_pipeline_spark.operators import similarity as S
-    from spaceparts_data_pipeline_spark.operators import vector_store as VS
-
-    sf_dir = os.path.join(base, f"x{factor}")
-    embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    shard_of = F.floor(F.col("vec_id") / F.lit(ID_STRIDE))
-    probe = embs.filter(shard_of == 0)
-    spark.sql("CREATE DATABASE IF NOT EXISTS semstore_scale")
-    spark.sql("DROP TABLE IF EXISTS semstore_scale.grow_sem_store")
-    pfx = "semstore_scale.grow"
-    rows = []
-
-    def _screen(store, label, store_rows, broadcast=True):
-        spark.catalog.clearCache()
-        before = _stage_totals(spark)
-        times, admitted = [], None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            adm, _surv = S.incremental_semdedup(
-                probe, store, broadcast_screen=broadcast)
-            admitted = adm.count()
-            times.append(round(time.perf_counter() - t0, 3))
-        after = _stage_totals(spark)
-        row = {"check": "semdedup_store", "layout": label,
-               "store_rows": store_rows, "probe_rows": probe.count(),
-               "sec": min(times), "sec_all": times, "admitted": admitted,
-               "shuffle_read_mb": round(
-                   (after["shuffle_read"] - before["shuffle_read"]) / 1e6 / 3, 2),
-               "shuffle_write_mb": round(
-                   (after["shuffle_write"] - before["shuffle_write"]) / 1e6 / 3, 2)}
-        rows.append(row)
-        print(json.dumps(row), flush=True)
-        return row
-
-    measure_at = {1, max(2, (factor - 1) // 2), factor - 1}
-    for s in range(1, factor):
-        batch = embs.filter(shard_of == s)
-        sig = S.det_lsh_signatures(batch)
-        VS.append_semdedup_store(spark, sig, pfx, table_backend=True)
-        if s in measure_at:
-            store = VS.read_semdedup_store(spark, pfx, table_backend=True)
-            _screen(store, "broadcast_bucketed", store.count())
-
-    # comparison at the largest store: both band sides exchanged — the
-    # store×n_bands shuffle per screen the r12 verdict flagged
-    store = VS.read_semdedup_store(spark, pfx, table_backend=True)
-    _screen(store, "smj_full_shuffle", store.count(), broadcast=False)
-
-    # (a2) the profile IS the selectivity knob: the 4×16 default is a
-    # HIGH-RECALL profile for threshold-0.35 pair generation (16-value
-    # band space → ~64% of random pairs collide somewhere). Production
-    # semantic-dup screens run at high thresholds, where longer bands
-    # buy exponential selectivity at the same recall: measure the same
-    # store re-signed at 8 planes × 32 bands / threshold 0.7
-    # (recall ≈ 0.96 at 0.7 by the banding law) and report candidate
-    # mass + screen wall next to the default profile's.
-    def _cand_mass(store_df, probe_df, n_planes, n_bands):
-        sigp = S.det_lsh_signatures(probe_df, n_planes=n_planes,
-                                    n_bands=n_bands)
-        pbands = sigp.select(F.posexplode("sigs").alias("band", "sig")) \
-            .groupBy("band", "sig").count().withColumnRenamed("count", "pc")
-        sbands = store_df.select(F.posexplode("sigs").alias("band", "sig")) \
-            .groupBy("band", "sig").count().withColumnRenamed("count", "sc")
-        row = pbands.join(sbands, ["band", "sig"]) \
-            .select(F.sum(F.col("pc") * F.col("sc"))).collect()[0][0]
-        return int(row or 0)
-
-    store = VS.read_semdedup_store(spark, pfx, table_backend=True)
-    spark.sql("DROP TABLE IF EXISTS semstore_scale.p8_sem_store")
-    for s in range(1, factor):
-        batch = embs.filter(shard_of == s)
-        VS.append_semdedup_store(
-            spark, S.det_lsh_signatures(batch, n_planes=8, n_bands=32),
-            "semstore_scale.p8", table_backend=True)
-    store8 = VS.read_semdedup_store(spark, "semstore_scale.p8",
-                                    table_backend=True)
-    for label, st, np_, nb, thr in (
-            ("default_4x16_t0.35", store, 4, 16, 0.35),
-            ("screen_8x32_t0.70", store8, 8, 32, 0.70)):
-        cand = _cand_mass(st, probe, np_, nb)
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        adm, _surv = S.incremental_semdedup(
-            probe, st, n_planes=np_, n_bands=nb, threshold=thr)
-        n_adm = adm.count()
-        sec = round(time.perf_counter() - t0, 3)
-        row = {"check": "semdedup_store_profile", "profile": label,
-               "store_rows": st.count(), "collision_rows": cand,
-               "sec": sec, "admitted": n_adm}
-        rows.append(row)
-        print(json.dumps(row), flush=True)
-
-    # (b) recall of the screen on planted cross-batch duplicates
-    sv = store
-    stored = sv.orderBy("vec_id").limit(200).collect()
-    rng = np.random.RandomState(13)
-    planted, exact_ids = [], set()
-    for i, r in enumerate(stored):
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        if i % 2 == 0:
-            dup = v.copy()
-            exact_ids.add(900_000_000 + i)
-        else:
-            dup = v + rng.normal(0, 0.02 * np.linalg.norm(v) / 8.0, v.shape)
-            cos = float(np.dot(dup, v) / (np.linalg.norm(dup) * np.linalg.norm(v)))
-            if cos < 0.35:
-                continue
-        planted.append((900_000_000 + i, [float(x) for x in dup]))
-    pb = spark.createDataFrame(planted, "vec_id long, embedding array<double>")
-    adm, _ = S.incremental_semdedup(pb, sv)
-    admitted_ids = {r["vec_id"] for r in adm.collect()}
-    caught = sum(1 for pid, _ in planted if pid not in admitted_ids)
-    rrow = {"check": "semdedup_store_recall", "planted": len(planted),
-            "caught": caught, "recall": round(caught / len(planted), 4),
-            "exact_missed": len(exact_ids & admitted_ids)}
-    rows.append(rrow)
-    print(json.dumps(rrow), flush=True)
-    spark.sql("DROP DATABASE IF EXISTS semstore_scale CASCADE")
     return rows
 
 
@@ -1301,9 +1129,9 @@ def measure_substring_pass(spark, base: str, factor: int, n_batches: int = 5) ->
 
     rows = []
     for scale in ("x1", f"x{factor}"):
-        out = os.path.join(base, f"funnel_path_{scale}")
+        out = os.path.join(base, f"funnel_{scale}")
         if not os.path.isdir(os.path.join(out, "corpus")):
-            run_funnel(spark, base, scale, n_batches, backend="path", factor=factor)
+            run_funnel(spark, base, scale, n_batches, factor=factor)
         # clear any prior pass output so the overwrite cost is identical
         clean = os.path.join(out, "corpus_clean")
         if os.path.isdir(clean):
@@ -1398,10 +1226,6 @@ def main() -> None:
     ap.add_argument("--ops", nargs="*", default=OPS)
     ap.add_argument("--funnel", action="store_true",
                     help="measure the composed corpus-ingest funnel instead of the op list")
-    ap.add_argument("--funnel-backend", choices=["path", "table"], default="path",
-                    help="screen-store backend for --funnel: path-backed parquet dirs "
-                         "(rename-swap compaction) or catalog tables (view-repoint "
-                         "compaction, the object-store-safe backend)")
     ap.add_argument("--funnel-quality",
                     choices=["off", "gopher", "c4", "charlm", "charlm+dsir"],
                     default="off",
@@ -1443,12 +1267,6 @@ def main() -> None:
                          "sixth live stage (embeddings vec_id-aligned with "
                          "doc_id; threshold 0.70 on this fixture — see "
                          "run_funnel's docstring); needs --funnel-quality off")
-    ap.add_argument("--semdedup-store", action="store_true",
-                    help="measure the productionized d26 vector store at Nx: "
-                         "screen cost of a fixed probe batch as the bucketed "
-                         "store grows (should stay ~flat), the legacy one-frame "
-                         "layout as the comparison row, and the screen's recall "
-                         "on planted cross-batch duplicates")
     ap.add_argument("--silver-profile", action="store_true",
                     help="step-attribute a silver pass (transform/cache, "
                          "quarantine append, bucket write, swap overhead, "
@@ -1516,10 +1334,6 @@ def main() -> None:
         measure_semdedup(spark, base, args.factor)
         return
 
-    if args.semdedup_store:
-        measure_semdedup_store(spark, base, args.factor)
-        return
-
     if args.wide_layer:
         measure_wide_layer_log(spark, args.wide_tables)
         return
@@ -1536,7 +1350,6 @@ def main() -> None:
         per_scale = {}
         for scale in ("x1", f"x{args.factor}"):
             per_scale[scale] = run_funnel(spark, base, scale, args.batches,
-                                          backend=args.funnel_backend,
                                           quality=args.funnel_quality,
                                           factor=args.factor,
                                           semdedup=args.funnel_semdedup)

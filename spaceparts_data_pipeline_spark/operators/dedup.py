@@ -126,12 +126,9 @@ def update_fingerprint_store(
     fingerprint appearing twice (e.g. a retried run that appended before
     failing) changes nothing — re-running the same batch is idempotent
     by construction (its fingerprints are all in the store, so zero
-    survivors, so zero new appends). No MERGE/compaction needed on the
-    hot path; compact with a periodic distinct-rewrite if file count
-    grows. Completes any interrupted compaction first (an append into a
-    half-swapped store directory would otherwise be lost with it).
+    survivors, so zero new appends). No MERGE on the hot path; file
+    count growth is bounded by :func:`maybe_compact_store`.
     """
-    recover_store(spark, store_path)
     survivors.select(fp_col).write.mode("append").parquet(store_path)
 
 
@@ -140,10 +137,7 @@ def read_store(spark, store_path: str) -> DataFrame | None:
     only state that legitimately means an empty screen) from any other
     read failure (→ raised). A bare try/except around the read is the
     bug this exists to prevent: a transient FS fault or corrupt footer
-    would silently read as 'empty store' and re-admit every duplicate.
-    Runs :func:`recover_store` first so an interrupted compaction can't
-    masquerade as a missing store."""
-    recover_store(spark, store_path)
+    would silently read as 'empty store' and re-admit every duplicate."""
     fs, jvm = _hadoop_fs(spark, store_path)
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(store_path)):
         return None
@@ -156,195 +150,73 @@ def _hadoop_fs(spark, path: str):
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
 
 
+def _data_files(spark, path: str):
+    """Yield the Hadoop paths of the data files under ``path``
+    (recursive, so partitioned layouts yield their leaf files). A file
+    is metadata, not data, when any component of its path below
+    ``path`` starts with ``_`` or ``.`` — the ``_SUCCESS`` / ``.crc``
+    markers and a killed job's ``_temporary`` tree, which Spark's own
+    readers skip as well."""
+    fs, jvm = _hadoop_fs(spark, path)
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.exists(root):
+        return
+    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        p = it.next().getPath()
+        rel = p.toString()[len(prefix):]
+        if not any(part.startswith(("_", ".")) for part in rel.split("/")):
+            yield p
+
+
 def has_data_files(spark, path: str) -> bool:
-    """True iff ``path`` exists AND holds at least one non-hidden data
-    file (recursively, so partitioned layouts count their leaf files).
+    """True iff ``path`` exists AND holds at least one data file.
 
     ``fs.exists`` alone cannot stand in for "data was ever written": an
     empty dynamic-partition overwrite still creates the directory (plus
     a ``_SUCCESS`` marker), and reading that empty-but-created dir
     raises ``UNABLE_TO_INFER_SCHEMA`` — so a first-ever run that admits
     zero rows would crash any caller that gated a read on ``exists``.
-    Underscore/dot-prefixed files (_SUCCESS, .crc, _started markers)
-    are metadata, not data, and don't count.
     """
-    fs, jvm = _hadoop_fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return False
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return True
-    return False
+    return next(_data_files(spark, path), None) is not None
 
 
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop ``FileSystem.rename`` reports failure (destination exists,
-    source missing, cross-FS move) by returning FALSE, not by raising —
-    an unchecked call on the crash-safety path can silently leave the
-    next rename moving ``__compact`` INSIDE a still-existing store dir,
-    corrupting the layout. Every swap rename goes through here."""
-    if not fs.rename(src, dst):
-        raise IOError(f"filesystem rename failed (returned false): {src} -> {dst}")
-
-
-def recover_store(spark, store_path: str) -> str | None:
-    """Finish or roll back an interrupted :func:`compact_store`. Returns
-    the action taken (or None). Safe to call unconditionally before any
-    store read — each leftover state has exactly one correct resolution:
-
-    - store present + ``__old``/``__compact`` leftovers → the swap
-      completed (or never started); leftovers are stale → delete them.
-    - store missing + complete ``__compact`` (has ``_SUCCESS``) → the
-      crash hit between the two renames → finish: promote the compacted
-      copy.
-    - store missing + incomplete ``__compact`` → the compaction write
-      itself died after the old store was renamed (impossible in the
-      documented order, but cheap to handle) → roll ``__old`` back.
-    """
-    fs, jvm = _hadoop_fs(spark, store_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    main, old, comp = P(store_path), P(store_path + "__old"), P(store_path + "__compact")
-    if fs.exists(main):
-        acted = None
-        for stale in (old, comp):
-            if fs.exists(stale):
-                fs.delete(stale, True)
-                acted = "deleted stale leftovers"
-        return acted
-    if fs.exists(comp) and fs.exists(P(store_path + "__compact/_SUCCESS")):
-        _rename_or_raise(fs, comp, main)
-        if fs.exists(old):
-            fs.delete(old, True)
-        return "promoted compacted store"
-    if fs.exists(old):
-        if fs.exists(comp):
-            fs.delete(comp, True)
-        _rename_or_raise(fs, old, main)
-        return "rolled back to pre-compaction store"
-    return None
+def data_file_count(spark, path: str) -> int:
+    """Number of data files under ``path`` — the growth signal
+    append-only stores are compacted on: every ingest run appends a few
+    files, so count grows linearly with runs regardless of row volume."""
+    return sum(1 for _ in _data_files(spark, path))
 
 
 def compact_store(spark, store_path: str) -> dict:
     """Distinct-rewrite of an append-only screen store (the md5
     fingerprint store of :func:`incremental_dedup`, the MinHash band
-    store of ``dedup_fuzzy.incremental_near_dedup``): every ingest run
-    appends a few files, so file count and duplicate rows grow without
-    bound; the screen's DISTINCT semantics make a periodic rewrite
-    exactness-preserving at any moment.
+    store of ``dedup_fuzzy.incremental_near_dedup``, the vector store of
+    ``similarity.incremental_semdedup``) IN PLACE: list the store's data
+    files F, append ``distinct(read F)`` into the same directory, then
+    delete F. Every ingest run appends a few files, so without this
+    file count and duplicate rows grow without bound.
 
-    Ordered-rename swap (write ``__compact`` + _SUCCESS → rename away →
-    promote → delete old) with :func:`recover_store` resolving every
-    crash window — the path-store analog of
-    ``maintenance.overwrite_via_staging``. Single-writer by contract
-    (the ingest job compacts between its own runs); on object stores
-    whose rename is copy+delete, prefer a catalog-table store and
-    ``maintenance.compact_table``.
+    No rename and no second directory: the screens are existence tests
+    over DISTINCT rows, so every crash point leaves a superset of the
+    store with the same distinct set — the distinct rows landed in full,
+    in part or not at all, and all of F, part of F or none of it still
+    present. A crashed compaction therefore changes no decision, and
+    the next one folds its leftovers in. Single-writer by contract (the
+    ingest job compacts between its own runs).
     """
-    recover_store(spark, store_path)
-    before = spark.read.parquet(store_path)
+    fs, _ = _hadoop_fs(spark, store_path)
+    files = list(_data_files(spark, store_path))
+    before = spark.read.parquet(*(p.toString() for p in files))
     n_before = before.count()
     # distinct's shuffle output is AQE-coalesced, so the rewrite lands
     # in few well-sized files without any .rdd partition probe
-    before.distinct().write.mode("overwrite").parquet(store_path + "__compact")
-    fs, jvm = _hadoop_fs(spark, store_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    _rename_or_raise(fs, P(store_path), P(store_path + "__old"))
-    _rename_or_raise(fs, P(store_path + "__compact"), P(store_path))
-    fs.delete(P(store_path + "__old"), True)
+    before.distinct().write.mode("append").parquet(store_path)
+    for p in files:
+        fs.delete(p, False)
     return {"rows_before": n_before,
             "rows_after": spark.read.parquet(store_path).count()}
-
-
-# -- catalog-table-backed screen stores --------------------------------------
-#
-# The path-backed store above gets its crash safety from an ordered
-# directory-rename swap — correct on HDFS/local FS, but object stores
-# without atomic rename (S3-style copy+delete) widen its crash windows.
-# This variant keeps the SAME store semantics (append-only under a
-# DISTINCT screen) on a catalog table whose swap is
-# ``maintenance.overwrite_via_staging``'s versioned view repoint — one
-# atomic catalog operation, no directory rename anywhere — so object
-# stores get the guarantees the path state machine gives local FS.
-# A crashed append can leave a PARTIAL fingerprint set durable; that is
-# the documented replay window of every store here: callers order
-# durable outputs before store appends, so the replay's screen misses
-# exactly the unfinished fingerprints and re-appends them.
-# (Imports of ``maintenance`` are function-local: maintenance → merge →
-# dedup would otherwise be a module cycle.)
-
-def read_store_table(spark, table: str) -> DataFrame | None:
-    """Table-backed :func:`read_store`: None iff the store table was
-    never created (the only state meaning an empty screen); any other
-    resolution failure raises. Recovers an interrupted compaction swap
-    first via ``maintenance.recover_staged_swap`` — the catalog twin of
-    :func:`recover_store`."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    maintenance.recover_staged_swap(spark, table)
-    if not spark.catalog.tableExists(table):
-        return None
-    return spark.table(table)
-
-
-def update_store_table(spark, rows: DataFrame, table: str) -> None:
-    """Table-backed :func:`update_fingerprint_store`: append ``rows`` to
-    the store table, creating it version-managed (view over
-    ``{table}__v1``) on first use so every later compaction swap is a
-    pure catalog operation. Appends address the resolved physical
-    version table — a view accepts no appends."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    maintenance.recover_staged_swap(spark, table)
-    if not spark.catalog.tableExists(table):
-        maintenance.overwrite_via_staging(spark, table, rows)
-        return
-    rows.write.mode("append").saveAsTable(maintenance.resolve_physical(spark, table))
-
-
-def compact_store_table(spark, table: str) -> dict:
-    """Table-backed :func:`compact_store`: distinct-rewrite through the
-    versioned-view swap. The previous version is retained as a reader
-    grace copy and pruned by later swaps (``retain_versions``); no step
-    renames a directory, so the crash windows are exactly
-    ``recover_staged_swap``'s — all catalog-resolvable on any store."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    maintenance.recover_staged_swap(spark, table)
-    n_before = spark.table(table).count()
-    maintenance.overwrite_via_staging(spark, table, spark.table(table).distinct())
-    return {"rows_before": n_before,
-            "rows_after": spark.table(table).count()}
-
-
-def maybe_compact_store_table(spark, table: str, max_files: int) -> dict | None:
-    """Table-backed :func:`maybe_compact_store` (file count via the
-    table's resolved storage location)."""
-    from spaceparts_data_pipeline_spark.operators import maintenance
-
-    if maintenance.file_stats(spark, table)["n_files"] <= max_files:
-        return None
-    return compact_store_table(spark, table)
-
-
-def data_file_count(spark, path: str) -> int:
-    """Number of non-hidden data files under ``path`` (recursive) — the
-    growth signal append-only stores are compacted on: every ingest run
-    appends a few files, so count grows linearly with runs regardless
-    of row volume. Underscore/dot-prefixed metadata files don't count."""
-    fs, jvm = _hadoop_fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return 0
-    n = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            n += 1
-    return n
 
 
 def maybe_compact_store(spark, store_path: str, max_files: int) -> dict | None:
@@ -354,9 +226,8 @@ def maybe_compact_store(spark, store_path: str, max_files: int) -> dict | None:
     after its store appends (the reference runs its table maintenance
     on every load — Silver_full_load.ipynb:1 cell 16 OPTIMIZE; we gate
     on file count so steady-state runs pay one cheap listing, not a
-    full rewrite). Exactness-preserving at any moment: the screen reads
-    DISTINCT fingerprints, and compaction is a distinct-rewrite behind
-    a crash-safe swap (:func:`recover_store`)."""
+    full rewrite). Exactness-preserving at any moment, crashes included:
+    the screens read DISTINCT rows."""
     if data_file_count(spark, store_path) <= max_files:
         return None
     return compact_store(spark, store_path)

@@ -179,14 +179,14 @@ def _clear_orphan_location(spark: SparkSession, table: str, *,
     every subsequent overwrite. Returns True if a directory was removed.
 
     The safety invariant is ENFORCED, not assumed: the bare table name
-    must look like a swap artifact (``__compact`` / ``__old`` /
-    ``__v{N}``) or the call raises — a future caller cannot
-    accidentally point this at a legitimate unmanaged directory.
+    must look like a swap artifact (``__old`` / ``__v{N}``) or the call
+    raises — a future caller cannot accidentally point this at a
+    legitimate unmanaged directory.
     ``force=True`` waives the name check for :func:`safe_save_as_table`,
     whose own precondition (a just-raised LOCATION_ALREADY_EXISTS on a
     catalog-less table) proves the directory is the same kind of crumb."""
     _, bare = _split_db(table)
-    if not force and not re.search(r"(__compact|__old|__v\d+)$", bare):
+    if not force and not re.search(r"(__old|__v\d+)$", bare):
         raise ValueError(
             f"_clear_orphan_location refuses non-artifact table name {table!r}; "
             "use safe_save_as_table for plain sinks")
@@ -339,7 +339,7 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
     except Exception:
         return []
     # IGNORECASE: the metastore lowercases identifiers while callers may
-    # pass mixed case (store_table_prefix is caller-supplied) — a
+    # pass mixed case (table names are caller-supplied) — a
     # case-sensitive match saw zero versions, so retention never pruned
     # and crash recovery skipped the versioned branch entirely.
     # SHOW TABLES LIKE itself matches case-insensitively, so the rows

@@ -38,13 +38,11 @@ def write_bucketed(
     Hardened against the crash-orphan wedge exactly like
     ``maintenance.safe_save_as_table`` (which cannot express
     ``bucketBy``): a SIGKILL mid-``saveAsTable`` leaves a catalog-less
-    warehouse directory, and every later create of the same table —
-    the vector store's compaction targets and first-ever creates route
-    here — would die with LOCATION_ALREADY_EXISTS until manual cleanup,
-    because the catalog-only ``recover_store_table`` sweep cannot see
-    it (r16 review). Recovery is reactive and narrowly gated on the
-    structural error condition + the catalog NOT knowing the table,
-    with the same freshness grace against racing first creates."""
+    warehouse directory, and every later create of the same table
+    would die with LOCATION_ALREADY_EXISTS until manual cleanup.
+    Recovery is reactive and narrowly gated on the structural error
+    condition + the catalog NOT knowing the table, with the same
+    freshness grace against racing first creates."""
     from spaceparts_data_pipeline_spark.operators import maintenance as mt
 
     spark = df.sparkSession

@@ -684,7 +684,6 @@ def incremental_semdedup(
     threshold: float = 0.35,
     seed: int = 12,
     n_hint: int | None = None,
-    broadcast_screen: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Cross-run SEMANTIC dedup — the embedding-space member of the
     incremental-screen family (``dedup.incremental_dedup`` screens
@@ -720,7 +719,7 @@ def incremental_semdedup(
     within-batch pair generation, ADVICE r12); within-batch pairs are
     the e03c plan (bucket-grouped verify, Σ bucket² work). The store
     screen is built around a MEASURED property of the high-recall 4×16
-    profile: a band signature has only 2^4 = 16 values, so ~每 (band,
+    profile: a band signature has only 2^4 = 16 values, so each (band,
     sig) bucket holds ~1/16 of each side and the collision join yields
     ~|batch|·|store| rows (29M for a 2k-batch × 14k-store at the 8×
     harness — a (band, sig)-bucketed store layout was tried in r13 and
@@ -729,16 +728,13 @@ def incremental_semdedup(
     pair collapse). The shipped shape instead keeps the store in scan
     order: the store's signatures explode MAP-SIDE (one narrow
     projection, a store row's bands stay adjacent), the batch's band
-    triples BROADCAST onto them (``broadcast_screen=True``, the
-    default — a batch×n_bands×24 B table; disable for multi-million-row
-    batches and AQE picks the join), so duplicate (batch, store) pairs
-    collapse in the partial aggregate BEFORE any exchange — the only
-    shuffled data is the ~distinct-pair set (45 MB where the bucketed
-    layout moved 1.7 GB). The exact verify then joins batch vectors
-    (broadcast) and store vectors (id-bucketed table backend → store
-    side exchange-free; :mod:`operators.vector_store`). Compact the
-    store by plain distinct-rewrite if its file count grows
-    (:func:`operators.vector_store.maybe_compact_semdedup_store`).
+    triples BROADCAST onto them (a batch×n_bands×24 B table), so
+    duplicate (batch, store) pairs collapse in the partial aggregate
+    BEFORE any exchange — the only shuffled data is the ~distinct-pair
+    set (45 MB where the bucketed layout moved 1.7 GB). The exact
+    verify then joins the broadcast batch vectors with the store
+    vectors. Compact the store by distinct-rewrite if its file count
+    grows (:func:`operators.dedup.maybe_compact_store`).
     """
     sig = det_lsh_signatures(batch, id_col=id_col, vec_col=vec_col, dim=dim,
                              n_planes=n_planes, n_bands=n_bands, seed=seed,
@@ -756,12 +752,10 @@ def incremental_semdedup(
         # multi-band collisions before any exchange (see docstring)
         sb = store.select(F.col(id_col).alias("__sid"),
                           F.posexplode("sigs").alias("band", "sig"))
-        bb = surv.select(
+        bb = F.broadcast(surv.select(
             F.col(id_col), F.posexplode("sigs").alias("band", "sig"),
-        ).select(id_col, "band", "sig")
-        bvecs = surv.select(F.col(id_col), F.col(vec_col))
-        if broadcast_screen:
-            bb, bvecs = F.broadcast(bb), F.broadcast(bvecs)
+        ).select(id_col, "band", "sig"))
+        bvecs = F.broadcast(surv.select(F.col(id_col), F.col(vec_col)))
         cand = (
             sb.join(bb, ["band", "sig"])
             .select(id_col, "__sid")

@@ -12,8 +12,8 @@ run first over the full batch; each dedup stage shrinks the set the
 next (more expensive) stage sees; contamination — the only stage that
 touches a second dataset — sees only final candidates.
 
-Exactness and replay: both stores are append-only with DISTINCT screen
-semantics (see ``operators.dedup`` / ``dedup_fuzzy``), so re-running a
+Exactness and replay: the screen stores are append-only with DISTINCT
+screen semantics (see ``operators.dedup``), so re-running a
 batch after any crash admits nothing and appends nothing effective; the
 corpus itself is written under a per-run directory, so a re-run
 overwrites its own output only.
@@ -69,7 +69,6 @@ def run_corpus_ingest(
     rows_per_band: int = 2,
     jaccard_threshold: float = 0.5,
     compact_files_threshold: int | None = 64,
-    store_table_prefix: str | None = None,
     shuffle_seed: str | None = None,
     shuffle_shards: int = 8,
 ) -> dict:
@@ -80,6 +79,7 @@ def run_corpus_ingest(
         manifest/run_id=<run_id>/ sequence-packing placements
         fp_store/                 md5 fingerprint store (append-only)
         band_store/               MinHash band store (append-only)
+        sem_store/                vector store (append-only, semdedup only)
 
     ``near_dedup=False`` skips the LSH stage (and its band store) for
     exact-only ingestion — cheaper, fully deterministic, and the shape
@@ -87,11 +87,11 @@ def run_corpus_ingest(
 
     ``compact_files_threshold``: after the store appends, each store
     whose data-file count exceeds the threshold is distinct-rewritten
-    via the crash-safe :func:`operators.dedup.compact_store` swap —
-    append-only stores otherwise grow one file set per run forever (the
-    reference runs its OPTIMIZE maintenance on every load). Compaction
-    never changes admit/reject decisions: the screens read DISTINCT
-    fingerprints. ``None`` disables.
+    in place by :func:`operators.dedup.compact_store` — append-only
+    stores otherwise grow one file set per run forever (the reference
+    runs its OPTIMIZE maintenance on every load). Compaction never
+    changes admit/reject decisions, not even when it crashes: the
+    screens read DISTINCT rows. ``None`` disables.
 
     ``quality_rules`` selects the gate ``quality_gate=True`` applies —
     the three rule modes are single-projection, shuffle-free, JVM-side
@@ -158,13 +158,6 @@ def run_corpus_ingest(
     manifest keeps the original ``id_col`` as a passthrough column;
     change the seed per epoch for an independent order.
 
-    ``store_table_prefix``: store the screens in CATALOG TABLES
-    ``{prefix}_fp_store`` / ``{prefix}_band_store`` instead of
-    path-backed parquet dirs — the object-store-safe backend, whose
-    compaction swap is an atomic catalog view repoint instead of a
-    directory rename (``operators.dedup.read_store_table`` family).
-    Same semantics, same replay guarantees; pick per deployment.
-
     ``semdedup_embeddings``: when given (an embeddings frame whose
     ``semdedup_vec_id_col`` values are this corpus's ``id_col`` values),
     a cross-run SEMANTIC dedup screen (d26,
@@ -173,35 +166,17 @@ def run_corpus_ingest(
     ``semdedup_threshold`` against a LOWER-id doc of the same batch or
     anything a prior run admitted — candidates from the deterministic
     banded LSH, every rejection verified with the exact cosine. The
-    vector store lives beside the other screen stores (the
-    ``sem_store/`` dir path-backed; the ``{prefix}_sem_store`` table —
-    BUCKETED by id — with ``store_table_prefix``; the store side of
-    both screen joins is exchange-free: map-side signature explode +
-    broadcast batch bands, id-bucketed verify — see
-    :mod:`operators.vector_store` for why a pre-exploded (band, sig)
-    index measured WORSE). Docs
-    WITHOUT an embedding row pass the screen (no evidence, no
-    rejection). Same crash ordering as the other stores: appends
-    derive from the durable corpus, after it lands.
+    vector store is one ``(id, vector, sigs)`` row per admitted vector
+    under ``sem_store/``, beside the other screen stores; the screen's
+    band join reads it exchange-free (map-side signature explode,
+    broadcast batch bands). Docs WITHOUT an embedding row pass the
+    screen (no evidence, no rejection). Same crash ordering as the
+    other stores: appends derive from the durable corpus, after it
+    lands.
     """
-    if store_table_prefix:
-        fp_store_path = f"{store_table_prefix}_fp_store"
-        band_store_path = f"{store_table_prefix}_band_store"
-        sem_store_prefix = store_table_prefix
-        read_store = dedup.read_store_table
-        append_store = dedup.update_store_table
-        maybe_compact = dedup.maybe_compact_store_table
-    else:
-        fp_store_path = os.path.join(out_dir, "fp_store")
-        band_store_path = os.path.join(out_dir, "band_store")
-        sem_store_prefix = os.path.join(out_dir, "sem_store")
-        read_store = dedup.read_store
-
-        def append_store(spark_, rows, path):
-            dedup.recover_store(spark_, path)
-            rows.write.mode("append").parquet(path)
-
-        maybe_compact = dedup.maybe_compact_store
+    fp_store_path = os.path.join(out_dir, "fp_store")
+    band_store_path = os.path.join(out_dir, "band_store")
+    sem_store_path = os.path.join(out_dir, "sem_store")
     # Per-stage wall clock rides along as float "sec_<stage>" keys (the
     # persist+count at each stage boundary materializes that stage, so
     # the deltas are honest stage costs — SCALING.md's funnel table
@@ -311,10 +286,10 @@ def run_corpus_ingest(
 
         # 3. cross-run exact dedup on redacted text (redaction first, so two
         # docs differing only in a phone number dedup as the same doc).
-        # read_store recovers interrupted compactions and raises on any
-        # failure other than "never created" — a transient fault must NOT
-        # read as an empty screen (it would re-admit every duplicate).
-        fp_store = read_store(spark, fp_store_path)
+        # read_store raises on any failure other than "never created" —
+        # a transient fault must NOT read as an empty screen (it would
+        # re-admit every duplicate).
+        fp_store = dedup.read_store(spark, fp_store_path)
         exact_ids = dedup.incremental_dedup(staged, fp_store,
                                             id_col=id_col, text_col=text_col)
         exact_survivors = staged.join(exact_ids.select(id_col), id_col, "left_semi")
@@ -325,7 +300,7 @@ def run_corpus_ingest(
 
         # 4. cross-run near-dup dedup (within-batch LSH + band-store screen)
         if near_dedup:
-            band_store = read_store(spark, band_store_path)
+            band_store = dedup.read_store(spark, band_store_path)
             # bands are recomputed from the durable corpus in step 6, so
             # the band half of the return is unused here
             admitted, _ = dedup_fuzzy.incremental_near_dedup(
@@ -348,16 +323,14 @@ def run_corpus_ingest(
         if semdedup_embeddings is not None:
             from pyspark.sql.types import NumericType
 
-            from spaceparts_data_pipeline_spark.operators import (
-                similarity, vector_store)
+            from spaceparts_data_pipeline_spark.operators import similarity
 
             if not isinstance(admitted.schema[id_col].dataType, NumericType):
                 raise ValueError(
                     "semdedup_embeddings needs a numeric id_col — the screen's "
                     "min-id survivor decision and its Arrow kernels key on long "
                     f"ids (got {admitted.schema[id_col].dataType.simpleString()!r})")
-            sem_store = vector_store.read_semdedup_store(
-                spark, sem_store_prefix, table_backend=bool(store_table_prefix))
+            sem_store = dedup.read_store(spark, sem_store_path)
             bvecs = semdedup_embeddings.select(
                 F.col(semdedup_vec_id_col), F.col(semdedup_vec_col),
             ).join(admitted.select(F.col(id_col).alias(semdedup_vec_id_col)),
@@ -457,52 +430,39 @@ def run_corpus_ingest(
             "run_id").parquet(manifest_root)
         stats["sec_write_pack"] = _tick()
 
-        append_store(
-            spark, durable.select(F.md5(text_col).alias("fingerprint")), fp_store_path)
+        durable.select(F.md5(text_col).alias("fingerprint")).write.mode(
+            "append").parquet(fp_store_path)
+        store_paths = [fp_store_path]
         if near_dedup:
-            append_store(
-                spark,
-                dedup_fuzzy.band_table(
-                    durable, id_col=id_col, text_col=text_col,
-                    num_perm=num_perm, rows_per_band=rows_per_band),
-                band_store_path)
+            dedup_fuzzy.band_table(
+                durable, id_col=id_col, text_col=text_col,
+                num_perm=num_perm, rows_per_band=rows_per_band,
+            ).write.mode("append").parquet(band_store_path)
+            store_paths.append(band_store_path)
         if semdedup_embeddings is not None:
             # derive from the DURABLE corpus like the other stores —
             # one signature pass over the admitted ids' embeddings
-            from spaceparts_data_pipeline_spark.operators import (
-                similarity, vector_store)
+            from spaceparts_data_pipeline_spark.operators import similarity
 
             dvecs = semdedup_embeddings.select(
                 F.col(semdedup_vec_id_col), F.col(semdedup_vec_col),
             ).join(durable.select(F.col(id_col).alias(semdedup_vec_id_col)),
                    semdedup_vec_id_col, "left_semi")
-            vector_store.append_semdedup_store(
-                spark,
-                similarity.det_lsh_signatures(
-                    dvecs, id_col=semdedup_vec_id_col,
-                    vec_col=semdedup_vec_col, dim=semdedup_dim,
-                    n_planes=semdedup_n_planes, n_bands=semdedup_n_bands),
-                sem_store_prefix, table_backend=bool(store_table_prefix),
-                id_col=semdedup_vec_id_col)
+            similarity.det_lsh_signatures(
+                dvecs, id_col=semdedup_vec_id_col,
+                vec_col=semdedup_vec_col, dim=semdedup_dim,
+                n_planes=semdedup_n_planes, n_bands=semdedup_n_bands,
+            ).write.mode("append").parquet(sem_store_path)
+            store_paths.append(sem_store_path)
         stats["sec_store_append"] = _tick()
         # 7. store maintenance: append-only stores grow a file set per
         # run; compact past the file-count threshold (decisions are
-        # invariant — the screens read DISTINCT fingerprints)
+        # invariant — the screens read DISTINCT rows)
         if compact_files_threshold is not None:
-            store_paths = [fp_store_path] + ([band_store_path] if near_dedup else [])
             for sp in store_paths:
-                c = maybe_compact(spark, sp, compact_files_threshold)
+                c = dedup.maybe_compact_store(spark, sp, compact_files_threshold)
                 if c is not None:
                     stats[f"compacted_{os.path.basename(sp)}"] = c["rows_after"]
-            if semdedup_embeddings is not None:
-                from spaceparts_data_pipeline_spark.operators import vector_store
-
-                sc = vector_store.maybe_compact_semdedup_store(
-                    spark, sem_store_prefix, compact_files_threshold,
-                    table_backend=bool(store_table_prefix),
-                    id_col=semdedup_vec_id_col)
-                for loc, c in (sc or {}).items():
-                    stats[f"compacted_{os.path.basename(loc)}"] = c["rows_after"]
             stats["sec_compact"] = _tick()
     finally:
         for df in persisted:

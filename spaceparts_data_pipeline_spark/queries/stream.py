@@ -470,7 +470,7 @@ def s06_stream_ingest_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import shutil
 
-    from spaceparts_data_pipeline_spark.operators import similarity, vector_store
+    from spaceparts_data_pipeline_spark.operators import similarity
     from spaceparts_data_pipeline_spark.queries.llm import _D26_SPLIT, _E03C
     from spaceparts_data_pipeline_spark.sources.parquet import load_table
     from spaceparts_data_pipeline_spark.streaming.structured import (
@@ -489,7 +489,7 @@ def s06_stream_ingest_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = os.path.join(tempfile.gettempdir(), f"s06_{tag}")
     shutil.rmtree(work, ignore_errors=True)
-    sem_prefix = os.path.join(work, "sem_store")
+    sem_store = os.path.join(work, "sem_store")
     corpus_path = os.path.join(work, "corpus")
 
     # seed the store exactly as d26's round 1 leaves it
@@ -497,14 +497,14 @@ def s06_stream_ingest_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = e.filter(F.col("vec_id") < _D26_SPLIT)
     _, store_rows = similarity.incremental_semdedup(
         b1, None, threshold=_E03C["threshold"])
-    vector_store.append_semdedup_store(spark, store_rows, sem_prefix)
+    store_rows.write.mode("append").parquet(sem_store)
 
     stream = (
         spark.readStream.schema(schema).parquet(stream_dir)
         .filter(F.col("vec_id") >= _D26_SPLIT)
     )
     q = stream_ingest_semdedup(
-        spark, stream, sem_prefix, corpus_path,
+        spark, stream, sem_store, corpus_path,
         checkpoint_dir=os.path.join(work, "ckpt"),
         threshold=_E03C["threshold"],
     )

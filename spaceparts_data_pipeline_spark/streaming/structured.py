@@ -309,9 +309,9 @@ def stream_ingest_dedup(
             # first batch runs, not necessarily when the query is built
             tag_cell["v"] = _run_tag(spark, checkpoint_dir)
         run_tag = tag_cell["v"]
-        # read_store recovers interrupted compactions and raises on any
-        # failure other than "never created" — a transient read fault
-        # must NOT silently screen against an empty store.
+        # read_store raises on any failure other than "never created" —
+        # a transient read fault must NOT silently screen against an
+        # empty store.
         store = dedup.read_store(spark, store_path)
         batch_df = batch_df.persist()
         try:
@@ -354,7 +354,6 @@ def stream_ingest_dedup(
                 # bands recomputed from the DURABLE corpus, same replay
                 # argument as the fingerprints; appends are idempotent
                 # under the band screen's semi-join
-                dedup.recover_store(spark, band_store_path)
                 dedup_fuzzy.band_table(
                     admitted, id_col=id_col, text_col=text_col,
                     num_perm=num_perm, rows_per_band=rows_per_band,
@@ -373,7 +372,7 @@ def stream_ingest_dedup(
 def stream_ingest_semdedup(
     spark: SparkSession,
     stream: DataFrame,
-    sem_store_prefix: str,
+    sem_store_path: str,
     corpus_path: str,
     checkpoint_dir: str,
     id_col: str = "vec_id",
@@ -408,8 +407,7 @@ def stream_ingest_semdedup(
     contract). ``run_tag`` defaults to the checkpoint-instance scope of
     :func:`_run_tag`.
     """
-    from spaceparts_data_pipeline_spark.operators import (
-        dedup, similarity, vector_store)
+    from spaceparts_data_pipeline_spark.operators import dedup, similarity
 
     tag_cell = {"v": run_tag}
 
@@ -417,7 +415,7 @@ def stream_ingest_semdedup(
         if tag_cell["v"] is None:
             tag_cell["v"] = _run_tag(spark, checkpoint_dir)
         run_tag = tag_cell["v"]
-        store = vector_store.read_semdedup_store(spark, sem_store_prefix)
+        store = dedup.read_store(spark, sem_store_path)
         batch_df = batch_df.persist()
         try:
             admitted, _ = similarity.incremental_semdedup(
@@ -437,12 +435,10 @@ def stream_ingest_semdedup(
                 (F.col("ingest_run").cast("string") == run_tag)
                 & (F.col("ingest_batch_id") == batch_id)
             )
-            vector_store.append_semdedup_store(
-                spark,
-                similarity.det_lsh_signatures(
-                    durable, id_col=id_col, vec_col=vec_col, dim=dim,
-                    n_planes=n_planes, n_bands=n_bands, seed=seed),
-                sem_store_prefix, id_col=id_col)
+            similarity.det_lsh_signatures(
+                durable, id_col=id_col, vec_col=vec_col, dim=dim,
+                n_planes=n_planes, n_bands=n_bands, seed=seed,
+            ).write.mode("append").parquet(sem_store_path)
         finally:
             batch_df.unpersist()
 

@@ -817,12 +817,10 @@ class TestSimilarity:
             assert witnesses, rid
 
     def test_semdedup_store_backend_parity(self, spark, sf_small, tmp_path):
-        """r13 (VERDICT r12 next-round #2): the productionized store —
-        path-backed parquet dir vs id-BUCKETED catalog table — must
-        make byte-identical screen decisions, equal to screening
-        against the in-memory store frame, and compaction must change
-        nothing."""
-        from spaceparts_data_pipeline_spark.operators import vector_store
+        """r13 (VERDICT r12 next-round #2): the path-backed vector store
+        must make screen decisions equal to screening against the
+        in-memory store frame, and compaction must change nothing."""
+        from spaceparts_data_pipeline_spark.operators import dedup
 
         e = spark.read.parquet(f"{sf_small}/embeddings.parquet")
         b1 = e.filter("vec_id % 2 = 0")
@@ -831,67 +829,21 @@ class TestSimilarity:
         adm_ref, _ = similarity.incremental_semdedup(b2, rows1)
         ref = sorted(r["vec_id"] for r in adm_ref.select("vec_id").collect())
 
-        prefix = str(tmp_path / "sem")
-        vector_store.append_semdedup_store(spark, rows1, prefix)
-        adm_p, _ = similarity.incremental_semdedup(
-            b2, vector_store.read_semdedup_store(spark, prefix))
+        path = str(tmp_path / "sem_store")
+        rows1.write.mode("append").parquet(path)
+        adm_p, _ = similarity.incremental_semdedup(b2, dedup.read_store(spark, path))
         assert sorted(r["vec_id"] for r in adm_p.select("vec_id").collect()) == ref
 
-        spark.sql("CREATE DATABASE IF NOT EXISTS semstore_db")
-        tpfx = "semstore_db.par"
-        vector_store.append_semdedup_store(spark, rows1, tpfx,
-                                           table_backend=True, num_buckets=8)
-        adm_t, _ = similarity.incremental_semdedup(
-            b2, vector_store.read_semdedup_store(spark, tpfx,
-                                                 table_backend=True))
-        assert sorted(r["vec_id"] for r in adm_t.select("vec_id").collect()) == ref
-
         # duplicate append + forced compaction: decisions invariant
-        vector_store.append_semdedup_store(spark, rows1, prefix)
-        vector_store.append_semdedup_store(spark, rows1, tpfx,
-                                           table_backend=True, num_buckets=8)
-        assert vector_store.maybe_compact_semdedup_store(spark, prefix, 0)
-        assert vector_store.maybe_compact_semdedup_store(
-            spark, tpfx, 0, table_backend=True, num_buckets=8)
-        for pfx, tb in ((prefix, False), (tpfx, True)):
-            st3 = vector_store.read_semdedup_store(spark, pfx,
-                                                   table_backend=tb)
-            adm3, _ = similarity.incremental_semdedup(b2, st3)
-            got = sorted(r["vec_id"] for r in adm3.select("vec_id").collect())
-            assert got == ref, f"backend {pfx} diverged after compaction"
-        # post-compaction stores are duplicate-free
+        rows1.write.mode("append").parquet(path)
+        assert dedup.maybe_compact_store(spark, path, 0)
+        st3 = dedup.read_store(spark, path)
+        adm3, _ = similarity.incremental_semdedup(b2, st3)
+        assert sorted(r["vec_id"] for r in adm3.select("vec_id").collect()) == ref
+        # the post-compaction store is duplicate-free
         assert st3.count() == rows1.count()
         # never-created store reads as None (empty screen), not an error
-        assert vector_store.read_semdedup_store(
-            spark, str(tmp_path / "nope")) is None
-
-    def test_semdedup_store_table_swap_recovery(self, spark):
-        """Interrupted table-backend compaction swaps resolve from
-        every crash window — the catalog twin of dedup.recover_store's
-        path state machine."""
-        from spaceparts_data_pipeline_spark.operators import vector_store
-
-        spark.sql("CREATE DATABASE IF NOT EXISTS semstore_db")
-        t = "semstore_db.swap_t"
-        df = spark.createDataFrame([(1, 2, 3)], "band int, sig long, vec_id long")
-        # crash between "rename main away" and "promote __compact":
-        # a complete compacted copy exists, main is gone
-        df.write.saveAsTable(f"{t}__compact")
-        assert vector_store.recover_store_table(spark, t) == \
-            "promoted compacted store"
-        assert spark.table(t).count() == 1
-        # crash after "rename main away" with the compact write itself
-        # lost: only __old remains -> roll back
-        spark.sql(f"ALTER TABLE {t} RENAME TO {t}__old")
-        assert vector_store.recover_store_table(spark, t) == \
-            "rolled back to pre-compaction store"
-        assert spark.table(t).count() == 1
-        # stale leftovers beside a live main are deleted
-        df.write.saveAsTable(f"{t}__compact")
-        assert vector_store.recover_store_table(spark, t) == \
-            "deleted stale leftovers"
-        assert not spark.catalog.tableExists(f"{t}__compact")
-        spark.sql(f"DROP TABLE {t}")
+        assert dedup.read_store(spark, str(tmp_path / "nope")) is None
 
     def test_semdedup_screen_recall_planted(self, spark, sf_small):
         """VERDICT r12 next-round #6: the store screen's recall named
@@ -1681,52 +1633,10 @@ class TestStoreCompaction:
         # idempotent
         assert dedup.compact_store(spark, path)["rows_after"] == 3
 
-    def test_recover_every_crash_window(self, spark, tmp_path):
-        import os
-        from spaceparts_data_pipeline_spark.operators import dedup
-        path = str(tmp_path / "store")
-        self._seed(spark, path, [["a", "a", "b"]])
-
-        # window 1: compact written, store not yet renamed away -> stale
-        spark.read.parquet(path).distinct().write.parquet(path + "__compact")
-        assert dedup.recover_store(spark, path) == "deleted stale leftovers"
-        assert not os.path.exists(path + "__compact")
-
-        # window 2: between the two renames (store gone, compact complete)
-        spark.read.parquet(path).distinct().write.parquet(path + "__compact")
-        os.rename(path, path + "__old")
-        assert dedup.recover_store(spark, path) == "promoted compacted store"
-        assert spark.read.parquet(path).count() == 2
-        assert not os.path.exists(path + "__old")
-
-        # window 3: store renamed away, compact incomplete -> roll back
-        os.rename(path, path + "__old")
-        os.makedirs(path + "__compact")
-        assert dedup.recover_store(spark, path) == "rolled back to pre-compaction store"
-        assert spark.read.parquet(path).count() == 2
-
-        # clean state: no-op
-        assert dedup.recover_store(spark, path) is None
-
-    def test_failed_rename_raises(self, spark, tmp_path):
-        """ADVICE r06 (low): Hadoop FileSystem.rename signals failure by
-        returning FALSE — an unchecked swap rename would let the next
-        rename move __compact INSIDE a still-existing store dir. Every
-        swap rename must raise on a false return."""
-        from spaceparts_data_pipeline_spark.operators import dedup
-
-        src = tmp_path / "src_dir"
-        src.mkdir()
-        dst = tmp_path / "dst_file"
-        dst.write_text("occupied")  # rename dir -> existing FILE returns false
-        fs, jvm = dedup._hadoop_fs(spark, str(src))
-        P = jvm.org.apache.hadoop.fs.Path
-        with pytest.raises(IOError, match="rename failed"):
-            dedup._rename_or_raise(fs, P(str(src)), P(str(dst)))
-
     def test_has_data_files(self, spark, tmp_path):
         """Empty-but-created dirs (the empty dynamic-overwrite shape,
-        incl. a lone _SUCCESS marker) read as 'no data yet'; a real leaf
+        incl. a lone _SUCCESS marker, or a killed job's _temporary
+        tree) read as 'no data yet'; a real leaf
         data file — even nested under a partition dir — reads as data."""
         import os
 
@@ -1737,6 +1647,10 @@ class TestStoreCompaction:
         os.makedirs(os.path.join(path, "run_id=r1"))
         open(os.path.join(path, "_SUCCESS"), "w").close()
         assert not dedup.has_data_files(spark, path)          # markers only
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+        with open(os.path.join(path, "_temporary", "0", "part-9.parquet"), "wb") as f:
+            f.write(b"x")
+        assert not dedup.has_data_files(spark, path)          # killed job's tree
         with open(os.path.join(path, "run_id=r1", "part-0.parquet"), "wb") as f:
             f.write(b"x")
         assert dedup.has_data_files(spark, path)              # nested leaf
@@ -1819,113 +1733,6 @@ class TestReadStore:
             f.write(b"this is not parquet")
         with pytest.raises(Exception):
             dedup.read_store(spark, path).collect()
-
-
-class TestTableStore:
-    """The catalog-table-backed screen-store variant (VERDICT r06
-    next-round #4): same property suite as the path store, with crash
-    safety from the versioned-view swap instead of directory renames —
-    the object-store-safe deployment shape."""
-
-    def _cleanup(self, spark, table):
-        for t in spark.catalog.listTables():
-            if t.name == table or t.name.startswith(table + "__"):
-                kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                spark.sql(f"DROP {kind} IF EXISTS {t.name}")
-
-    def test_roundtrip_idempotent(self, spark):
-        from spaceparts_data_pipeline_spark.operators import dedup
-        table = "fp_store_tbl_rt"
-        self._cleanup(spark, table)
-        try:
-            assert dedup.read_store_table(spark, table) is None  # never created
-
-            docs = lambda rows: spark.createDataFrame(rows, ["doc_id", "text"])  # noqa: E731
-            s1 = dedup.incremental_dedup(docs([(1, "alpha"), (2, "beta")]), None)
-            dedup.update_store_table(spark, s1.select("fingerprint"), table)
-
-            b2 = docs([(3, "beta"), (4, "gamma")])
-            s2 = dedup.incremental_dedup(b2, dedup.read_store_table(spark, table))
-            assert {r["doc_id"] for r in s2.collect()} == {4}
-            dedup.update_store_table(spark, s2.select("fingerprint"), table)
-
-            # replay of batch 2 admits nothing and appends nothing new
-            assert dedup.incremental_dedup(
-                b2, dedup.read_store_table(spark, table)).count() == 0
-            assert dedup.read_store_table(spark, table).count() == 3
-        finally:
-            self._cleanup(spark, table)
-
-    def test_compaction_dedups_preserves_screen_idempotent(self, spark):
-        from spaceparts_data_pipeline_spark.operators import dedup
-        table = "fp_store_tbl_cp"
-        self._cleanup(spark, table)
-        try:
-            for run in (["a", "b"], ["b", "c"], ["c", "a"]):
-                dedup.update_store_table(
-                    spark,
-                    spark.createDataFrame([(x,) for x in run], ["fingerprint"]),
-                    table)
-            stats = dedup.compact_store_table(spark, table)
-            assert stats == {"rows_before": 6, "rows_after": 3}
-            got = {r["fingerprint"] for r in dedup.read_store_table(spark, table).collect()}
-            assert got == {"a", "b", "c"}
-            assert dedup.compact_store_table(spark, table)["rows_after"] == 3
-            # appends keep working after a compaction swap
-            dedup.update_store_table(
-                spark, spark.createDataFrame([("d",)], ["fingerprint"]), table)
-            assert dedup.read_store_table(spark, table).count() == 4
-        finally:
-            self._cleanup(spark, table)
-
-    def test_interrupted_swap_recovered_on_read(self, spark):
-        """Crash windows are recover_staged_swap's: a complete but
-        unpromoted __v{N} is promoted on the next read — the read never
-        resolves a half-swapped store (which would silently widen the
-        screen)."""
-        from spaceparts_data_pipeline_spark.operators import dedup, maintenance
-        table = "fp_store_tbl_cr"
-        self._cleanup(spark, table)
-        try:
-            dedup.update_store_table(
-                spark, spark.createDataFrame([("a",), ("a",), ("b",)], ["fingerprint"]),
-                table)
-            # version table complete, view not yet repointed
-            cur = maintenance.current_version(spark, table)
-            spark.table(table).distinct().write.saveAsTable(f"{table}__v{cur + 1}")
-            store = dedup.read_store_table(spark, table)
-            assert store.count() == 2                      # promote finished
-            assert maintenance.current_version(spark, table) == cur + 1
-        finally:
-            self._cleanup(spark, table)
-
-    def test_band_store_screen_on_table(self, spark):
-        """The MinHash band store runs on the table backend unchanged:
-        incremental_near_dedup takes the store as a DataFrame, so the
-        backend is the caller's choice per deployment."""
-        from spaceparts_data_pipeline_spark.operators import dedup
-        table = "band_store_tbl"
-        self._cleanup(spark, table)
-        try:
-            base = "the quick brown fox jumps over the lazy dog near the river bank today"
-            docs = lambda rows: spark.createDataFrame(rows, ["doc_id", "text"])  # noqa: E731
-            _, bands1 = dedup_fuzzy.incremental_near_dedup(docs([(1, base)]), None)
-            dedup.update_store_table(spark, bands1, table)
-            b2 = docs([(2, base.replace("dog", "cat")),
-                       (3, "fresh unseen document text entirely")])
-            a2, bands2 = dedup_fuzzy.incremental_near_dedup(
-                b2, dedup.read_store_table(spark, table))
-            assert {r["doc_id"] for r in a2.collect()} == {3}
-            dedup.update_store_table(spark, bands2, table)
-            a3, _ = dedup_fuzzy.incremental_near_dedup(
-                b2, dedup.read_store_table(spark, table))
-            assert a3.count() == 0
-            dedup.compact_store_table(spark, table)
-            a4, _ = dedup_fuzzy.incremental_near_dedup(
-                b2, dedup.read_store_table(spark, table))
-            assert a4.count() == 0                         # screen invariant
-        finally:
-            self._cleanup(spark, table)
 
 
 class TestQualityFilters:

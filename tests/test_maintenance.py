@@ -546,7 +546,7 @@ def test_safe_save_as_table_does_not_clobber_live_tables(spark, maint_db):
 
 def test_clear_orphan_location_refuses_plain_names(spark, maint_db):
     """The proactive sweep only ever deletes swap-artifact names
-    (__compact/__old/__v{N}); a plain name raises (ADVICE
+    (__old/__v{N}); a plain name raises (ADVICE
     r11) — the reactive force path is reserved for safe_save_as_table's
     proven-wedge precondition."""
     from spaceparts_data_pipeline_spark.operators.maintenance import (
@@ -554,6 +554,8 @@ def test_clear_orphan_location_refuses_plain_names(spark, maint_db):
 
     with pytest.raises(ValueError):
         _clear_orphan_location(spark, "totally_normal_table")
+    with pytest.raises(ValueError):   # no swap writes __compact tables
+        _clear_orphan_location(spark, "nope__compact")
     # artifact names pass the check (nothing to delete → False)
     assert _clear_orphan_location(spark, "nope__old") is False
     assert _clear_orphan_location(spark, "nope__v3") is False

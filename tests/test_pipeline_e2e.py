@@ -344,46 +344,25 @@ class TestCorpusIngestPipeline:
             [(11, doc(11), "s"), (12, doc(9), "s")],              # exact dup of 9
         ]
 
-        prefix = "c_tbl_seq_e2e"
-
-        def _drop_store_tables():
-            for t in spark.catalog.listTables():
-                if t.name.startswith(prefix):
-                    kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                    spark.sql(f"DROP {kind} IF EXISTS {t.name}")
-
-        _drop_store_tables()
         results = {}
-        try:
-            # third sequence: the CATALOG-TABLE store backend at the same
-            # mid-sequence-compacting threshold (round-7 verdict #8 —
-            # the table backend soaked over the accumulating sequence,
-            # not just two runs)
-            for label, threshold, kw in (
-                ("compacted", 2, {}),
-                ("plain", None, {}),
-                ("table", 2, {"store_table_prefix": prefix}),
-            ):
-                out = str(tmp_path / label)
-                raw_seq, stats_seq = [], []
-                for i, rows in enumerate(batches):
-                    s = run_corpus_ingest(
-                        spark, self._batch(spark, rows), out, f"r{i}",
-                        compact_files_threshold=threshold, **kw)
-                    raw_seq.append(s)
-                    # decisions only: drop maintenance bookkeeping and the
-                    # per-stage wall-clock keys (timings differ run to run)
-                    stats_seq.append({k: v for k, v in s.items()
-                                      if not k.startswith(("compacted_", "sec_"))})
-                corpus = {(r["doc_id"], r["text"])
-                          for r in spark.read.parquet(out + "/corpus").collect()}
-                results[label] = (raw_seq, stats_seq, corpus)
-        finally:
-            _drop_store_tables()
+        for label, threshold in (("compacted", 2), ("plain", None)):
+            out = str(tmp_path / label)
+            raw_seq, stats_seq = [], []
+            for i, rows in enumerate(batches):
+                s = run_corpus_ingest(
+                    spark, self._batch(spark, rows), out, f"r{i}",
+                    compact_files_threshold=threshold)
+                raw_seq.append(s)
+                # decisions only: drop maintenance bookkeeping and the
+                # per-stage wall-clock keys (timings differ run to run)
+                stats_seq.append({k: v for k, v in s.items()
+                                  if not k.startswith(("compacted_", "sec_"))})
+            corpus = {(r["doc_id"], r["text"])
+                      for r in spark.read.parquet(out + "/corpus").collect()}
+            results[label] = (raw_seq, stats_seq, corpus)
 
         comp_raw, comp_stats, comp_corpus = results["compacted"]
         _, plain_stats, plain_corpus = results["plain"]
-        tbl_raw, tbl_stats, tbl_corpus = results["table"]
         # compaction DID trigger mid-sequence (not only on the last run)
         triggered = [i for i, s in enumerate(comp_raw)
                      if any(k.startswith("compacted_") for k in s)]
@@ -391,23 +370,14 @@ class TestCorpusIngestPipeline:
         assert comp_stats == plain_stats          # every funnel decision identical
         assert comp_corpus == plain_corpus        # final corpus identical
         assert {d for d, _ in comp_corpus} == {1, 2, 3, 4, 7, 9, 11}
-        # the table backend makes byte-identical decisions batch for
-        # batch, with ITS compaction also triggering mid-sequence
-        assert tbl_stats == plain_stats
-        assert tbl_corpus == plain_corpus
-        tbl_triggered = [i for i, s in enumerate(tbl_raw)
-                         if any(k.startswith("compacted_") for k in s)]
-        assert tbl_triggered and tbl_triggered[0] < len(batches) - 1
         # the compacted run's stores hold fewer files than the plain run's
         assert dedup.data_file_count(spark, str(tmp_path / "compacted") + "/fp_store") < \
             dedup.data_file_count(spark, str(tmp_path / "plain") + "/fp_store")
 
-    def test_table_backed_stores_match_path_stores(self, spark, tmp_path):
-        """The funnel on catalog-table screen stores (the object-store-
-        safe backend: compaction swaps are atomic view repoints, no
-        directory renames) makes the SAME admit/reject decisions as the
-        path backend, run for run — including a crash replay and a
-        forced compaction between runs."""
+    def test_compaction_every_run_matches_never(self, spark, tmp_path):
+        """The funnel with a forced in-place compaction of every store
+        after every run makes the SAME admit/reject decisions as a
+        never-compacted twin, run for run — including a crash replay."""
         from spaceparts_data_pipeline_spark.plans.corpus import run_corpus_ingest
 
         b1 = self._batch(spark, [
@@ -422,40 +392,29 @@ class TestCorpusIngestPipeline:
                  "of unique content about catalyst optimizers and execution", "s2"),
         ])
 
-        prefix = "c_tbl_store_e2e"
-        for t in spark.catalog.listTables():
-            if t.name.startswith(prefix):
-                kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                spark.sql(f"DROP {kind} IF EXISTS {t.name}")
-        try:
-            out_t = str(tmp_path / "tbl")
-            # threshold 0 forces a compaction after every run — the
-            # swap must be invisible to the next run's screens
-            kw = dict(store_table_prefix=prefix, compact_files_threshold=0)
-            s1 = run_corpus_ingest(spark, b1, out_t, "r1", **kw)
-            s2 = run_corpus_ingest(spark, b2, out_t, "r2", **kw)
-            s2b = run_corpus_ingest(spark, b2, out_t, "r2", **kw)  # replay
+        out_c = str(tmp_path / "compacted")
+        # threshold 0 forces a compaction after every run — it must be
+        # invisible to the next run's screens
+        kw = dict(compact_files_threshold=0)
+        s1 = run_corpus_ingest(spark, b1, out_c, "r1", **kw)
+        s2 = run_corpus_ingest(spark, b2, out_c, "r2", **kw)
+        s2b = run_corpus_ingest(spark, b2, out_c, "r2", **kw)  # replay
 
-            out_p = str(tmp_path / "path")
-            p1 = run_corpus_ingest(spark, b1, out_p, "r1")
-            p2 = run_corpus_ingest(spark, b2, out_p, "r2")
+        out_p = str(tmp_path / "plain")
+        p1 = run_corpus_ingest(spark, b1, out_p, "r1", compact_files_threshold=None)
+        p2 = run_corpus_ingest(spark, b2, out_p, "r2", compact_files_threshold=None)
 
-            strip = lambda s: {k: v for k, v in s.items()  # noqa: E731
-                               if not k.startswith(("compacted_", "sec_"))}
-            assert strip(s1) == strip(p1)
-            assert strip(s2) == strip(p2)
-            assert s2b["admitted"] == 0                   # replay idempotent
-            assert "compacted_" + prefix + "_fp_store" in s1
-            tbl_corpus = {(r["doc_id"], r["text"])
-                          for r in spark.read.parquet(out_t + "/corpus").collect()}
-            path_corpus = {(r["doc_id"], r["text"])
-                           for r in spark.read.parquet(out_p + "/corpus").collect()}
-            assert tbl_corpus == path_corpus
-        finally:
-            for t in spark.catalog.listTables():
-                if t.name.startswith(prefix):
-                    kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                    spark.sql(f"DROP {kind} IF EXISTS {t.name}")
+        strip = lambda s: {k: v for k, v in s.items()  # noqa: E731
+                           if not k.startswith(("compacted_", "sec_"))}
+        assert strip(s1) == strip(p1)
+        assert strip(s2) == strip(p2)
+        assert s2b["admitted"] == 0                   # replay idempotent
+        assert "compacted_fp_store" in s1
+        comp_corpus = {(r["doc_id"], r["text"])
+                       for r in spark.read.parquet(out_c + "/corpus").collect()}
+        plain_corpus = {(r["doc_id"], r["text"])
+                        for r in spark.read.parquet(out_p + "/corpus").collect()}
+        assert comp_corpus == plain_corpus
 
     def test_first_run_admits_zero(self, spark, tmp_path):
         """ADVICE r06 (medium): a first-ever run admitting ZERO docs —
@@ -526,45 +485,6 @@ class TestCorpusIngestPipeline:
         # the vector store holds exactly the admitted-with-embedding ids
         vecs = spark.read.parquet(out + "/sem_store")
         assert {r["vec_id"] for r in vecs.collect()} == {1, 3}
-
-    def test_semdedup_screen_table_backend_matches_path(self, spark, tmp_path):
-        """The funnel's semantic screen with store_table_prefix (the
-        id-bucketed catalog store) must admit exactly what the
-        path-backed run admits, and must land the {prefix}_sem_store
-        table beside the fp/band store tables."""
-        from spaceparts_data_pipeline_spark.plans.corpus import run_corpus_ingest
-
-        t2 = ("completely different prose about distributed query engines "
-              "and the optimizer choosing broadcast joins over sort merge "
-              "when one side of the relation is small enough to replicate")
-        v = [float((i * 37) % 19 - 9) for i in range(64)]
-        novel = [0.0] * 64
-        novel[3] = 11.0
-        embs = spark.createDataFrame(
-            [(1, v), (2, [x * 1.001 for x in v]), (3, novel)],
-            "vec_id long, embedding array<double>")
-        b1 = self._batch(spark, [(1, self.LONG, "s1")])
-        b2 = self._batch(
-            spark, [(2, t2, "s1"), (3, t2.replace("prose", "essay"), "s1")])
-        results = {}
-        spark.sql("CREATE DATABASE IF NOT EXISTS funnel_semdb")
-        for name, prefix in (("path", None), ("table", "funnel_semdb.fx")):
-            out = str(tmp_path / f"corpus_{name}")
-            run_corpus_ingest(spark, b1, out, "r1",
-                              semdedup_embeddings=embs,
-                              store_table_prefix=prefix)
-            run_corpus_ingest(spark, b2, out, "r2",
-                              semdedup_embeddings=embs,
-                              store_table_prefix=prefix,
-                              jaccard_threshold=0.95)
-            results[name] = sorted(
-                r["doc_id"] for r in
-                spark.read.parquet(out + "/corpus").select("doc_id").collect())
-        assert results["path"] == results["table"] == [1, 3]
-        assert spark.catalog.tableExists("funnel_semdb.fx_sem_store")
-        assert {r["vec_id"] for r in
-                spark.table("funnel_semdb.fx_sem_store").collect()} == {1, 3}
-        spark.sql("DROP DATABASE funnel_semdb CASCADE")
 
     def test_semdedup_requires_numeric_id(self, spark, tmp_path):
         from spaceparts_data_pipeline_spark.plans.corpus import run_corpus_ingest
@@ -1040,8 +960,8 @@ def test_funnel_shuffled_manifest(spark, tmp_path):
 
 def test_funnel_all_options_composed(spark, tmp_path):
     """Kitchen-sink composition: gopher gate + NEAR-dup screening +
-    catalog-TABLE stores + contamination screen + epoch-shuffled
-    manifest, across two runs and a crash replay — the configuration a
+    contamination screen + epoch-shuffled manifest, across two runs
+    and a crash replay — the configuration a
     real deployment turns on all at once, pinned as one path rather
     than per-feature."""
     from spaceparts_data_pipeline_spark.plans.corpus import run_corpus_ingest
@@ -1071,39 +991,27 @@ def test_funnel_all_options_composed(spark, tmp_path):
          (12, NEW, "s2")],                              # genuinely fresh
         "doc_id long, text string, source string")
 
-    prefix = "c_allopt_e2e"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix):
-            kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-            spark.sql(f"DROP {kind} IF EXISTS {t.name}")
-    try:
-        out = str(tmp_path / "allopt")
-        kw = dict(benchmark=bench, quality_rules="gopher",
-                  store_table_prefix=prefix, shuffle_seed="epoch0",
-                  contamination_threshold=30)
-        s1 = run_corpus_ingest(spark, b1, out, "r1", **kw)
-        assert s1["after_quality"] == 3            # doc 3 gopher-gated
-        assert s1["after_near_dedup"] == 2         # 2 collapsed into 1
-        assert s1["admitted"] == 2                 # threshold 30: none contaminated
-        s2 = run_corpus_ingest(spark, b2, out, "r2", **kw)
-        assert s2["after_exact_dedup"] == 2        # 10 screened by fp table
-        assert s2["after_near_dedup"] == 1         # 11 screened by band table
-        assert s2["admitted"] == 1                 # 12 fresh -> admitted
-        corpus = spark.read.parquet(out + "/corpus")
-        ids = {r["doc_id"] for r in corpus.collect()}
-        assert 1 in ids and 4 in ids and len(ids) == 3
-        man = spark.read.parquet(out + "/manifest")
-        assert set(man.columns) >= {"doc_id", "shard", "position",
-                                    "n_tokens", "start_seq", "run_id"}
-        # replay run 2: table stores retained -> admits nothing, corpus stable
-        s2b = run_corpus_ingest(spark, b2, out, "r2", **kw)
-        assert s2b["admitted"] == 0
-        assert spark.read.parquet(out + "/corpus").count() == 3
-    finally:
-        for t in spark.catalog.listTables():
-            if t.name.startswith(prefix):
-                kind = "VIEW" if (t.tableType or "").upper() == "VIEW" else "TABLE"
-                spark.sql(f"DROP {kind} IF EXISTS {t.name}")
+    out = str(tmp_path / "allopt")
+    kw = dict(benchmark=bench, quality_rules="gopher",
+              shuffle_seed="epoch0", contamination_threshold=30)
+    s1 = run_corpus_ingest(spark, b1, out, "r1", **kw)
+    assert s1["after_quality"] == 3            # doc 3 gopher-gated
+    assert s1["after_near_dedup"] == 2         # 2 collapsed into 1
+    assert s1["admitted"] == 2                 # threshold 30: none contaminated
+    s2 = run_corpus_ingest(spark, b2, out, "r2", **kw)
+    assert s2["after_exact_dedup"] == 2        # 10 screened by fp store
+    assert s2["after_near_dedup"] == 1         # 11 screened by band store
+    assert s2["admitted"] == 1                 # 12 fresh -> admitted
+    corpus = spark.read.parquet(out + "/corpus")
+    ids = {r["doc_id"] for r in corpus.collect()}
+    assert 1 in ids and 4 in ids and len(ids) == 3
+    man = spark.read.parquet(out + "/manifest")
+    assert set(man.columns) >= {"doc_id", "shard", "position",
+                                "n_tokens", "start_seq", "run_id"}
+    # replay run 2: stores retained -> admits nothing, corpus stable
+    s2b = run_corpus_ingest(spark, b2, out, "r2", **kw)
+    assert s2b["admitted"] == 0
+    assert spark.read.parquet(out + "/corpus").count() == 3
 
 
 def test_line_dedup_pass_over_assembled_corpus(spark, tmp_path):

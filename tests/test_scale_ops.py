@@ -296,12 +296,10 @@ def test_zorder_bits_capped_to_sign_bit(spark, sf_small):
 
 
 def test_write_bucketed_recovers_crash_orphan(spark):
-    """r16 review: the vector store's bucketed writes (compaction
-    targets, first-ever creates) went through a bare saveAsTable — a
-    SIGKILL mid-write leaves a catalog-less warehouse directory the
-    catalog-only recover_store_table sweep cannot heal, and every later
-    create dies with LOCATION_ALREADY_EXISTS. write_bucketed now
-    recovers the wedge the safe_save_as_table way."""
+    """r16 review: bucketed writes went through a bare saveAsTable — a
+    SIGKILL mid-write leaves a catalog-less warehouse directory, and
+    every later create dies with LOCATION_ALREADY_EXISTS. write_bucketed
+    now recovers the wedge the safe_save_as_table way."""
     import os
     import time
 

@@ -386,7 +386,7 @@ def test_stream_ingest_semdedup_multibatch_and_replay(spark, tmp_path):
 
     schema = "vec_id long, embedding array<float>"
     src = str(tmp_path / "embs_src")
-    sem_prefix = str(tmp_path / "sem_store")
+    sem_store = str(tmp_path / "sem_store")
     corpus = str(tmp_path / "corpus")
     # batch 1: two copies on axis 0 (collapse to min id 1) + one on axis 1
     spark.createDataFrame(
@@ -403,7 +403,7 @@ def test_stream_ingest_semdedup_multibatch_and_replay(spark, tmp_path):
             .option("maxFilesPerTrigger", 1).parquet(src)
         )
         q = structured.stream_ingest_semdedup(
-            spark, stream, sem_prefix, corpus,
+            spark, stream, sem_store, corpus,
             checkpoint_dir=str(tmp_path / ck), threshold=0.35)
         q.awaitTermination(120)
 
@@ -411,8 +411,8 @@ def test_stream_ingest_semdedup_multibatch_and_replay(spark, tmp_path):
     admitted = {r["vec_id"] for r in spark.read.parquet(corpus).collect()}
     assert admitted == {1, 3, 11}   # 2 collapsed within-batch; 10 store-screened
     # store holds (id, vector, sigs) rows for exactly the admitted ids
-    from spaceparts_data_pipeline_spark.operators import vector_store
-    store = vector_store.read_semdedup_store(spark, sem_prefix)
+    from spaceparts_data_pipeline_spark.operators import dedup
+    store = dedup.read_store(spark, sem_store)
     assert {r["vec_id"] for r in store.select("vec_id").distinct().collect()} == {1, 3, 11}
 
     # redeploy-replay: fresh checkpoint, store retained -> admits nothing
