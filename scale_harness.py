@@ -899,7 +899,7 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                         # throwaway table — attributes the swap overhead
                         out = clean.withColumn(
                             silver_plan.PARTITION_COL,
-                            silver_plan._bucket_expr(keys, silver_plan.DEFAULT_N_BUCKETS))
+                            silver_plan._bucket_expr(keys))
                         out = (out.repartition(F.col(silver_plan.PARTITION_COL))
                                .sortWithinPartitions(silver_plan.PARTITION_COL, *keys))
                         t0 = time.perf_counter()
@@ -910,8 +910,7 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                         spark.sql(f"DROP TABLE plainw_{t}")
                         t0 = time.perf_counter()
                         silver_plan._write_partitioned(
-                            clean, f"silver_{t}", keys,
-                            silver_plan.DEFAULT_N_BUCKETS, sort_by=keys)
+                            clean, f"silver_{t}", keys, sort_by=keys)
                         steps["bucket_shuffle_sort_write"] += time.perf_counter() - t0
                     finally:
                         parent.unpersist()

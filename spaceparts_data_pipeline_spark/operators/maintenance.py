@@ -1,7 +1,10 @@
 """Table maintenance: small-file compaction (the plain-Parquet analog of
 the reference's Delta ``OPTIMIZE`` / ``optimizeWrite`` / ``autoCompact``
 — Silver_full_load.ipynb:1 cells 6 and 16) and the versioned swap that
-every full overwrite goes through.
+every table the engine may rewrite is written through, from its first
+write on (Delta versions a table from its first commit the same way).
+Append-only sinks that nothing rewrites stay plain tables: execution
+logs, ``*_incremental_control`` and ``landing_quarantine_*``.
 
 Append-flavored incremental layers (bronze K2, quarantine side-sinks)
 add a few files per run; after N runs a scan pays N file-open costs and
@@ -60,12 +63,11 @@ _PYSPARK_ANALYSIS_EXCEPTIONS = _pyspark_analysis_exception_types()
 
 DEFAULT_TARGET_FILE_MB = 128
 
-#: TBLPROPERTIES marker stamped on every physical artifact the versioned
-#: swap creates (``__v{N}``, and ``__old`` during a legacy migration).
-#: The catalog-wide recovery sweep acts ONLY on bases showing this
-#: marker (or a live version view), so a user's legitimately-named
-#: ``report__old`` or ``foo__v1`` is never renamed/dropped by a pipeline
-#: it doesn't belong to.
+#: TBLPROPERTIES marker stamped on every ``__v{N}`` the versioned swap
+#: creates. The catalog-wide recovery sweep acts ONLY on bases showing
+#: this marker (or a live version view), so a user's legitimately-named
+#: ``foo__v1`` is never dropped by a pipeline it doesn't belong to, while
+#: a first write killed before its view is still owned and promoted.
 MANAGED_PROP = "spaceparts.pipeline.managed"
 
 
@@ -83,50 +85,6 @@ def is_managed(spark: SparkSession, table: str) -> bool:
     except Exception:
         return False
     return bool(rows) and str(rows[0][-1]).lower() == "true"
-
-
-def get_pipeline_prop(spark: SparkSession, table: str, key: str) -> str | None:
-    """One ``spaceparts.*`` table property of ``table`` (a PHYSICAL
-    table — views don't keep properties across CREATE OR REPLACE), or
-    None when absent/unreadable."""
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {table}('{key}')").collect()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    val = str(rows[0][-1])
-    # Spark renders a MISSING property as a "does not have property"
-    # message in the value slot rather than an empty result
-    return None if "does not have" in val else val
-
-
-def set_pipeline_prop(spark: SparkSession, table: str, key: str, value) -> None:
-    """Stamp a ``spaceparts.*`` property on a physical table. Durable
-    across versioned swaps and compactions: :func:`overwrite_via_staging`
-    carries every ``spaceparts.*`` property (except the managed marker,
-    re-stamped fresh) from the outgoing physical version onto the new
-    one."""
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ('{key}'='{value}')")
-
-
-def _copy_pipeline_props(spark: SparkSession, src_table: str, dst_table: str) -> None:
-    """Carry custom ``spaceparts.*`` properties across a versioned swap —
-    a property stamped on one physical version (e.g. silver's bucket
-    count) must survive overwrites and compactions of the table, which
-    create a fresh physical table each time."""
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {src_table}").collect()
-    except Exception:
-        return
-    props = {r["key"]: r["value"] for r in rows
-             if r["key"].startswith("spaceparts.") and r["key"] != MANAGED_PROP}
-    if props:
-        kv = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
-        try:
-            spark.sql(f"ALTER TABLE {dst_table} SET TBLPROPERTIES ({kv})")
-        except Exception:
-            pass  # advisory metadata; the swap itself must not fail on it
 
 
 #: How many complete generations (current + predecessors) the versioned
@@ -179,14 +137,14 @@ def _clear_orphan_location(spark: SparkSession, table: str, *,
     every subsequent overwrite. Returns True if a directory was removed.
 
     The safety invariant is ENFORCED, not assumed: the bare table name
-    must look like a swap artifact (``__old`` / ``__v{N}``) or the call
+    must look like a swap artifact (``__v{N}``) or the call
     raises — a future caller cannot accidentally point this at a
     legitimate unmanaged directory.
     ``force=True`` waives the name check for :func:`safe_save_as_table`,
     whose own precondition (a just-raised LOCATION_ALREADY_EXISTS on a
     catalog-less table) proves the directory is the same kind of crumb."""
     _, bare = _split_db(table)
-    if not force and not re.search(r"(__old|__v\d+)$", bare):
+    if not force and not re.search(r"__v\d+$", bare):
         raise ValueError(
             f"_clear_orphan_location refuses non-artifact table name {table!r}; "
             "use safe_save_as_table for plain sinks")
@@ -275,7 +233,7 @@ def safe_save_as_table(df, table: str, mode: str = "overwrite",
     leaves a catalog-less warehouse directory, and every LATER create of
     the same table dies with LOCATION_ALREADY_EXISTS. The versioned swap
     writes each ``__v{N}`` through here, and so do the plain
-    control/log/bronze sinks.
+    append-only sinks (logs, control, landing quarantine).
 
     Recovery is reactive, not proactive: we attempt the write first and
     only clear the location after Spark itself raises the
@@ -369,7 +327,8 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
 
 def current_version(spark: SparkSession, table: str) -> int | None:
     """The version the ``table`` view points at, or None when ``table``
-    is absent or still a legacy real table. The view definition is the
+    is absent or is not a version view (a plain table, which
+    :func:`overwrite_via_staging` refuses). The view definition is the
     single source of truth — never inferred from which ``__v{N}`` tables
     happen to exist (a crash can leave a complete-but-unpromoted newer
     version)."""
@@ -393,7 +352,7 @@ def current_version(spark: SparkSession, table: str) -> int | None:
 
 def resolve_physical(spark: SparkSession, table: str) -> str:
     """The real storage table behind a version-managed view (or
-    ``table`` itself for legacy/plain tables). Every write-path consumer
+    ``table`` itself for plain tables). Every write-path consumer
     (append, dynamic-partition ``insertInto``, compaction, file stats)
     must address the physical table — views accept none of those."""
     v = current_version(spark, table)
@@ -529,98 +488,48 @@ def recover_staged_swap(
 ) -> str | None:
     """Repair any crash state a previous :func:`overwrite_via_staging`
     left behind, restoring the invariant "``table`` exists and is
-    complete". Returns a short action tag (or None if nothing to do).
+    complete". Returns ``"promoted_version"``, ``"pruned_versions"`` or
+    None when there was nothing to do.
 
-    Crash states of the VERSIONED layout (physical ``{table}__v{N}`` +
-    ``{table}`` view; see :func:`overwrite_via_staging`). A ``__v{N}``
-    table is complete as soon as it exists: ``saveAsTable`` writes every
-    file before it creates the catalog entry.
+    A ``__v{N}`` table is complete as soon as it exists: ``saveAsTable``
+    writes every file before it creates the catalog entry. So there are
+    two crash states:
 
-    - versions exist, view missing → crash mid-migration between
-      ``live → __old`` and the view create: recreate the view at the
-      max version and drop ``__old``.
-    - versions exist, the legacy real table still live → a migration
-      died after writing its first version: that version is
-      unreferenced, so drop it (the next swap migrates again).
-    - view behind the max version → crash between the version write and
-      the view repoint: finish the promote (mark + carry properties,
-      then repoint).
-    - ``__old`` / versions ≤ current−``retain_versions`` lying around →
-      drop (the most recent ``retain_versions`` generations are retained
-      deliberately — grace copies for in-flight readers; see
+    - *promote*: the newest version is ahead of the view, or no view
+      exists because a first write was killed before its view → repair
+      the version's partitions (MSCK: a kill between ``saveAsTable``'s
+      catalog create and its own partition registration leaves a
+      partitioned version that reads empty), mark it managed and repoint
+      the view at it;
+    - *prune*: versions ≤ current−``retain_versions`` lying around →
+      drop them (the most recent ``retain_versions`` generations are
+      retained deliberately — grace copies for in-flight readers; see
       :data:`DEFAULT_RETAIN_VERSIONS`).
 
-    A version is partition-repaired (MSCK) before it is promoted: a kill
-    between ``saveAsTable``'s catalog create and its own partition
-    registration leaves a partitioned version that reads empty.
-
-    Crash states of the pre-versioned real-table layout:
-
-    - only ``__old`` exists, live missing → restore old.
-    - ``__old`` exists, live exists → crash before the final drop:
-      repair partitions (MSCK is idempotent) and drop old.
+    When a plain table (or a view that is not a version view) holds the
+    name, recovery leaves it and its neighbours alone and returns None.
     """
-    old = f"{table}__old"
-    keep = max(1, retain_versions)
-    has = spark.catalog.tableExists
-
-    def _msck(t):
-        # Registers the partitions of a version saveAsTable was killed
-        # before registering. Also REQUIRED before dropping a renamed
-        # partitioned table: a rename moves the data directory but
-        # partition entries keep their pre-rename locations, so an
-        # un-repaired DROP would delete directories that now belong to
-        # the renamed table.
-        if physical_partition_cols(spark, t):
-            spark.sql(f"MSCK REPAIR TABLE {t}")
-
-    def _drop_old():
-        if not has(old):
-            return None
-        _msck(old)
-        spark.sql(f"DROP TABLE {old}")
-        return "dropped_old"
-
     versions = list_versions(spark, table)
-    if versions:
-        cur = current_version(spark, table)
-        if cur is None and not has(table):
-            vmax = versions[-1]
-            _msck(f"{table}__v{vmax}")
-            spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{vmax}")
-            _drop_old()
-            for v in versions[:-keep]:  # keep the newest ``keep`` generations
-                spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
-            return "recreated_view"
-        if cur is None:
-            # without this drop the next swap's saveAsTable(__v1,
-            # "overwrite") would silently reuse the unreferenced name
-            for v in versions:
-                spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
-            return "dropped_unreferenced_versions"
-        acted = None
-        vmax = versions[-1]
-        if vmax > cur:
-            nxt = f"{table}__v{vmax}"
-            _msck(nxt)
-            _mark_managed(spark, nxt)
-            _copy_pipeline_props(spark, f"{table}__v{cur}", nxt)
-            spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {nxt}")
-            cur, acted = vmax, "promoted_version"
-        dropped = _drop_old()
-        stale = [v for v in versions if v <= cur - keep]
-        for v in stale:
-            spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
-        return acted or dropped or ("pruned_versions" if stale else None)
-
-    if has(old):
-        if has(table):
-            _msck(table)
-            return _drop_old()
-        spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
-        _msck(table)
-        return "restored_old"
-    return None
+    if not versions:
+        return None
+    cur = current_version(spark, table)
+    if cur is None:
+        if spark.catalog.tableExists(table):
+            return None
+        cur = 0
+    acted = None
+    vmax = versions[-1]
+    if vmax > cur:
+        nxt = f"{table}__v{vmax}"
+        if physical_partition_cols(spark, nxt):
+            spark.sql(f"MSCK REPAIR TABLE {nxt}")
+        _mark_managed(spark, nxt)
+        spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {nxt}")
+        cur, acted = vmax, "promoted_version"
+    stale = [v for v in versions if v <= cur - max(1, retain_versions)]
+    for v in stale:
+        spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
+    return acted or ("pruned_versions" if stale else None)
 
 
 def overwrite_via_staging(
@@ -638,20 +547,24 @@ def overwrite_via_staging(
     the old or the new version, never a missing table (the reference
     gets the same property from Delta snapshot isolation,
     Gold_incremental_load.ipynb:1 cell 10 MERGE INTO; this is the
-    view-indirection stand-in for plain Parquet). Steps:
+    view-indirection stand-in for plain Parquet). Every table the engine
+    may rewrite is written through here from its FIRST write, so a table
+    is either absent or a version view. Steps:
 
     1. recover any prior crash state (:func:`recover_staged_swap`);
-    2. write ``{table}__v{N+1}`` in place (crash → current version
-       untouched; ``saveAsTable`` creates the catalog entry only after
-       every file is written and registers the partitions itself, so
-       "version exists" always implies "version complete", and a kill
-       mid-write leaves only a catalog-less directory, cleared by
-       :func:`safe_save_as_table`'s retry);
-    3. mark it managed and carry the outgoing version's ``spaceparts.*``
-       properties onto it;
-    4. ``CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{N+1}``
+    2. refuse a plain table holding the name (``ValueError``, before
+       anything is written);
+    3. write ``{table}__v{N+1}`` in place (N = 0 for a first write;
+       crash → current version untouched; ``saveAsTable`` creates the
+       catalog entry only after every file is written and registers the
+       partitions itself, so "version exists" always implies "version
+       complete", and a kill mid-write leaves only a catalog-less
+       directory, cleared by :func:`safe_save_as_table`'s retry);
+    4. mark it managed (so :func:`recover_all` owns a first write killed
+       before its view);
+    5. ``CREATE OR REPLACE VIEW {table} AS SELECT * FROM {table}__v{N+1}``
        — the atomic promote, and the swap's only commit step;
-    5. drop versions ≤ N+1−``retain_versions``. The most recent
+    6. drop versions ≤ N+1−``retain_versions``. The most recent
        ``retain_versions`` generations (default 2: the new version plus
        one grace copy) are RETAINED for readers that resolved the view
        before the repoint; a reader can span ``retain_versions − 1``
@@ -676,42 +589,30 @@ def overwrite_via_staging(
     or read through :func:`read_with_retry`, which re-resolves the view
     and re-runs the action when the race's failure signature fires.
 
-    No step ever leaves zero complete copies, no step ever makes
-    ``{table}`` unresolvable, and no step renames a data directory. A
+    No step ever leaves zero complete copies, no step ever makes an
+    existing ``{table}`` unresolvable, and no step renames anything. A
     crash anywhere is repaired by :func:`recover_staged_swap` on the
-    next run. Legacy real tables migrate on their first overwrite: the
-    live table is renamed to ``{table}__old`` just before the view takes
-    its name — the only rename window, once per table.
-    Write paths must address :func:`resolve_physical` — appends,
-    ``insertInto`` and compaction don't work against a view.
+    next run. Write paths must address :func:`resolve_physical` —
+    appends, ``insertInto`` and compaction don't work against a view.
     """
-    old = f"{table}__old"
-    keep = max(1, retain_versions)
     pcols = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     recover_staged_swap(spark, table, retain_versions=retain_versions)
+    cur = current_version(spark, table)
+    if cur is None and spark.catalog.tableExists(table):
+        raise ValueError(
+            f"overwrite_via_staging refuses {table!r}: a table that is not a"
+            " version view holds the name; rename it and write its rows back"
+            " through overwrite_via_staging")
     if pcols and align_writers:
         df = df.repartition(*pcols)
-    cur = current_version(spark, table)
-    legacy = cur is None and spark.catalog.tableExists(table)
     nxt = (cur or 0) + 1
     vt = f"{table}__v{nxt}"
     # single writer of vt: a colliding directory is always a crash crumb
     safe_save_as_table(df, vt, mode="overwrite", partition_by=pcols or None,
                        orphan_grace_s=0.0)
     _mark_managed(spark, vt)
-    if cur is not None or legacy:
-        _copy_pipeline_props(spark, f"{table}__v{cur}" if cur is not None else table, vt)
-    if legacy:
-        # one-time migration from the legacy real-table layout: move the
-        # old table aside so the view can take its name
-        was_partitioned = bool(physical_partition_cols(spark, table))
-        spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-        _mark_managed(spark, old)
-        if was_partitioned:
-            spark.sql(f"MSCK REPAIR TABLE {old}")
     spark.sql(f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM {vt}")
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    for v in [v for v in list_versions(spark, table) if v <= nxt - keep]:
+    for v in [v for v in list_versions(spark, table) if v <= nxt - max(1, retain_versions)]:
         spark.sql(f"DROP TABLE IF EXISTS {table}__v{v}")
 
 
@@ -807,16 +708,16 @@ def compact_table(
 
 def recover_all(spark: SparkSession, db: str | None = None) -> dict[str, str]:
     """Catalog-wide crash-state sweep: find every base table with swap
-    leftovers (``__old`` / ``__v{N}`` entries) and run
+    leftovers (``__v{N}`` entries) and run
     :func:`recover_staged_swap` on it. Returns {table: action} for the
     tables where recovery acted.
 
     The write path self-heals each table on its NEXT overwrite, but a
     table that is only READ after a crash (e.g. gold consumers of a
     silver table whose loader is paused) would otherwise wait
-    indefinitely — most visibly in the mid-migration "view missing"
-    state, where the table name doesn't resolve at all until recovery
-    recreates it. Pipeline entrypoints call this once at startup:
+    indefinitely — most visibly a first write killed before its view,
+    whose table name doesn't resolve at all until recovery promotes its
+    ``__v1``. Pipeline entrypoints call this once at startup:
     O(catalog listing) + O(1) catalog ops per crashed table, no data
     reads.
 
@@ -824,8 +725,8 @@ def recover_all(spark: SparkSession, db: str | None = None) -> dict[str, str]:
     created: at least one suffix table carries :data:`MANAGED_PROP`
     (stamped by :func:`overwrite_via_staging`), or the base resolves as
     a live ``__v{N}`` version view. A user table that merely *matches*
-    the naming convention is left alone — renaming it or dropping its
-    neighbor would be destructive.
+    the naming convention is left alone — dropping it or putting a view
+    over it would be destructive.
     """
     try:
         tables = spark.catalog.listTables(db) if db else spark.catalog.listTables()
@@ -833,7 +734,7 @@ def recover_all(spark: SparkSession, db: str | None = None) -> dict[str, str]:
         return {}
     names = {t.name for t in tables}
     suspects: dict[str, list[str]] = {}
-    pat = re.compile(r"^(?P<base>.+?)(?:__old|__v\d+)$")
+    pat = re.compile(r"^(?P<base>.+?)__v\d+$")
     for n in names:
         m = pat.match(n)
         if m:

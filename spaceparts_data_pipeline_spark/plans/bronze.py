@@ -4,7 +4,9 @@
 Full mode: overwrite `bronze_<table>` with sanitized column names and
 (load_date, source_system) metadata. Incremental mode: watermark scan
 with 1-hour overlap + APPEND (the bronze upsert flavor, K2) + control
-row (K6). Source here is any DataFrame (parquet stand-in for the
+row (K6). Both modes create `bronze_<table>` through the versioned swap
+(`maintenance.overwrite_via_staging`); appends address its physical
+version. Source here is any DataFrame (parquet stand-in for the
 reference's JDBC; `sources.jdbc` builds real JDBC readers).
 """
 
@@ -79,7 +81,9 @@ def run_incremental(
         if spark.catalog.tableExists(target):
             maintenance.append_with_evolution(spark, incoming, target)
         else:
-            maintenance.safe_save_as_table(incoming, target, mode="overwrite")
+            # versioned from the first write: a later schema-drift
+            # rewrite or compaction is then an ordinary swap
+            maintenance.overwrite_via_staging(spark, target, incoming)
         stats = incoming.agg(
             F.count(F.lit(1)).alias("n"), watermark_max(ts_col).alias("mx")
         ).collect()[0]

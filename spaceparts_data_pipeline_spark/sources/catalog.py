@@ -17,14 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 #: (Silver_full_load.ipynb:1 cell 8; silver_processor.py:398)
 DENYLIST_SUFFIXES = ("_execution_log", "_notebook_execution_summary", "_incremental_control")
 
-#: versioned-swap machinery artifacts (operators/maintenance.py reserves
-#: these suffixes: `{t}__v{N}` physical versions behind the `{t}` view,
-#: `{t}__old` while a legacy table migrates). They match layer globs like
-#: ``bronze_*`` — without this exclusion run_silver_layer processed every
+#: versioned-swap physical versions (operators/maintenance.py reserves
+#: the suffix: `{t}__v{N}` tables behind the `{t}` view). They match
+#: layer globs like ``bronze_*`` — without this exclusion
+#: run_silver_layer processed every
 #: bronze table TWICE (once via its view, once via its physical version
 #: table), doubling the layer's work and littering the catalog with
 #: ``silver_{t}__v1`` outputs (found by the r15 log-batching test).
-_MAINT_ARTIFACT = re.compile(r"__(v\d+|old)$")
+_MAINT_ARTIFACT = re.compile(r"__v\d+$")
 
 
 def discover_tables(spark: SparkSession, pattern: str = "bronze_*", database: str | None = None) -> list[str]:

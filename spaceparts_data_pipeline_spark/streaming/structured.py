@@ -213,23 +213,23 @@ def stream_upsert(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not spark.catalog.tableExists(target_table):
-            # Create the target with the physical partitioning the merge
-            # path expects — a plain saveAsTable here would leave the
-            # table unpartitioned and every later batch on the O(table)
-            # full-rewrite fallback instead of O(touched partitions).
-            # Keep-latest dedup FIRST: the merge path dedups its source
-            # to one row per key, and a batch-0 carrying two versions of
-            # one key must not create a target that permanently violates
-            # that invariant (keys never updated again would stay
-            # duplicated forever).
+            # Create the target through the versioned swap, with the
+            # physical partitioning the merge path expects — an
+            # unpartitioned target would put every later batch on the
+            # O(table) full-rewrite fallback instead of O(touched
+            # partitions). Keep-latest dedup FIRST: the merge path dedups
+            # its source to one row per key, and a batch-0 carrying two
+            # versions of one key must not create a target that
+            # permanently violates that invariant (keys never updated
+            # again would stay duplicated forever).
             from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest
             from spaceparts_data_pipeline_spark.operators.maintenance import (
-                safe_save_as_table,
+                overwrite_via_staging,
             )
 
-            safe_save_as_table(dedup_latest(batch_df, order_col=order_col, keys=keys),
-                               target_table, mode="overwrite",
-                               partition_by=partition_col)
+            overwrite_via_staging(spark, target_table,
+                                  dedup_latest(batch_df, order_col=order_col, keys=keys),
+                                  partition_by=partition_col)
             return
         target = spark.table(target_table)
         merge_into_table(spark, target_table, batch_df.select(*target.columns), keys,

@@ -147,34 +147,6 @@ def test_quarantine_identity_distinguishes_null_positions(spark, inc_db):
     assert spark.table(sink).count() == 2
 
 
-def test_quarantine_legacy_sink_migrates_to_identity_hash(spark, inc_db):
-    """A pre-identity sink (no identity_hash column) is backfilled once,
-    then stays exactly-once."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-    qschema = "order_number string, order_value double, dwcreateddate timestamp"
-    sink = "silver_quarantine_fact_leg"
-    run_incremental_pipeline(
-        spark,
-        {"fact_leg": spark.createDataFrame([("oBAD", 9e9, T0), ("o1", 1.0, T0)], qschema)},
-    )
-    # simulate the pre-identity layout: same sink, column stripped
-    overwrite_via_staging(
-        spark, sink, spark.table(sink).drop("identity_hash").localCheckpoint(eager=True)
-    )
-    assert "identity_hash" not in spark.table(sink).columns
-
-    # overlap rescan re-derives oBAD → migration backfills, then anti-joins
-    run_incremental_pipeline(
-        spark,
-        {"fact_leg": spark.createDataFrame([("oBAD", 9e9, T0), ("o2", 2.0, T1)], qschema)},
-    )
-    q = spark.table(sink)
-    assert "identity_hash" in q.columns
-    assert q.count() == 1
-    assert q.filter(q.order_number == "oBAD").count() == 1
-
-
 def test_bronze_schema_evolution(spark, inc_db):
     from spaceparts_data_pipeline_spark.plans import bronze
     src1 = spark.createDataFrame([("o1", 10.0, T0)], SCHEMA)
@@ -217,7 +189,7 @@ def test_silver_incremental_rewrites_only_touched_buckets(spark, inc_db):
     files byte-for-byte alone (same paths, same mtimes) — O(delta
     buckets) I/O, not a full-table rewrite."""
     from spaceparts_data_pipeline_spark.plans import bronze, silver
-    from spaceparts_data_pipeline_spark.plans.silver import DEFAULT_N_BUCKETS, PARTITION_COL
+    from spaceparts_data_pipeline_spark.plans.silver import N_BUCKETS, PARTITION_COL
 
     rows = [(f"o{i}", float(i), T0) for i in range(200)]
     bronze.run_full(spark, spark.createDataFrame(rows, SCHEMA), "fact_part")
@@ -232,7 +204,7 @@ def test_silver_incremental_rewrites_only_touched_buckets(spark, inc_db):
 
     t = spark.table("silver_fact_part")
     touched = t.filter(F.col("order_number") == "o5").select(PARTITION_COL).collect()[0][0]
-    assert 0 <= touched < DEFAULT_N_BUCKETS
+    assert 0 <= touched < N_BUCKETS
     got = {r["order_number"]: r["amount"] for r in t.collect()}
     assert got["o5"] == 999.0 and len(got) == 200
     after = _parquet_files(tdir)
@@ -426,7 +398,9 @@ def test_merge_fallback_preserves_physical_partitioning(spark, inc_db):
 
     from pyspark.sql import functions as F
 
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+    from spaceparts_data_pipeline_spark.operators.maintenance import (
+        overwrite_via_staging, resolve_physical,
+    )
     from spaceparts_data_pipeline_spark.operators.merge import (
         merge_into_table, physical_partition_cols,
     )
@@ -436,7 +410,7 @@ def test_merge_fallback_preserves_physical_partitioning(spark, inc_db):
         F.to_date(F.lit("2025-01-15")).alias("billing_date"),
         (F.col("id") * 1.0).alias("v"),
     ).withColumn("p_month", F.trunc("billing_date", "month"))
-    base.write.mode("overwrite").partitionBy("p_month").saveAsTable("gold_fb")
+    overwrite_via_staging(spark, "gold_fb", base, partition_by="p_month")
 
     delta = spark.createDataFrame(
         [(3, dtm.date(2025, 1, 20), 333.0)], "k long, billing_date date, v double"
@@ -445,7 +419,7 @@ def test_merge_fallback_preserves_physical_partitioning(spark, inc_db):
     merge_into_table(spark, "gold_fb", delta, ["k"])
 
     phys = resolve_physical(spark, "gold_fb")
-    assert phys != "gold_fb"                        # staged swap promoted a version
+    assert phys == "gold_fb__v2"                    # staged swap promoted a version
     assert physical_partition_cols(spark, phys) == ["p_month"]
     t = spark.table("gold_fb")
     assert t.count() == 10
@@ -578,35 +552,3 @@ def test_bronze_incremental_append_reads_one_snapshot(spark, inc_db, monkeypatch
     out = bronze.run_incremental(spark, src2, "snapfact", overlap=dt.timedelta(0))
     assert seen == [True]            # append path saw a persisted frame
     assert out["records"] == 1 and out["watermark"] == T1
-
-
-def test_silver_incremental_honors_table_bucket_count(spark, inc_db):
-    """r16 review finding: run_incremental hardcoded DEFAULT_N_BUCKETS
-    while run_full takes n_buckets — a table written with a different
-    bucket count got its incoming keys routed to DIFFERENT partitions
-    than their current rows, so the stale copies survived the merge and
-    silver returned two rows per updated key. The count is now stamped
-    as a physical-table property (durable across staged swaps AND
-    compaction via the spaceparts.* carry-forward) and read back by the
-    merge."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import compact_table
-    from spaceparts_data_pipeline_spark.plans import silver
-
-    rows = [(f"ob{i}", float(i), T0) for i in range(8)]
-    spark.createDataFrame(rows, SCHEMA).write.mode("overwrite") \
-        .saveAsTable("bronze_bk")
-    silver.run_full(spark, "bk", n_buckets=4)        # NON-default count
-
-    # property must survive a compaction (fresh physical version)
-    compact_table(spark, "silver_bk")
-
-    upd = spark.createDataFrame(
-        [(f"ob{i}", float(i) + 100.0, T1) for i in range(8)], SCHEMA)
-    silver.run_incremental(spark, "bk", upd)
-
-    t = spark.table("silver_bk")
-    assert t.count() == 8                            # no stale duplicates
-    got = {r["order_number"]: r["amount"] for r in t.collect()}
-    assert got == {f"ob{i}": float(i) + 100.0 for i in range(8)}
-    # and every row sits in a bucket consistent with the stamped count
-    assert t.agg(F.max("p_bucket")).collect()[0][0] <= 3

@@ -98,47 +98,6 @@ def test_partition_scoped_compaction(spark, maint_db):
     assert spark.table("part_c").count() == n
 
 
-def test_staged_overwrite_swaps_and_cleans_up(spark, maint_db):
-    """Full-load writes go through the versioned swap: the table holds
-    the new data, even when the new data is derived from the table
-    being replaced, and the migrated legacy table is gone."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-    spark.range(10).write.mode("overwrite").saveAsTable("swap_t")
-    # overwrite with a plan READING the table being replaced (doubled)
-    doubled = spark.table("swap_t").withColumn("id", F.col("id") * 2)
-    overwrite_via_staging(spark, "swap_t", doubled)
-    vals = sorted(r["id"] for r in spark.table("swap_t").collect())
-    assert vals == [i * 2 for i in range(10)]
-    assert not spark.catalog.tableExists("swap_t__old")
-
-
-class TestStagedSwapCrashRecovery:
-    """Crash states of the pre-versioned real-table layout (the versioned
-    swap's own kill points live in test_swap_kill_points.py)."""
-
-    def _fresh(self, spark, name, vals):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"DROP TABLE IF EXISTS {name}__old")
-        spark.createDataFrame([(v,) for v in vals], "id long") \
-            .write.mode("overwrite").saveAsTable(name)
-
-    def _ids(self, spark, name):
-        return sorted(r["id"] for r in spark.table(name).collect())
-
-    def test_crash_before_old_dropped(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import recover_staged_swap
-
-        self._fresh(spark, "cr_t", [1, 2])
-        spark.sql("ALTER TABLE cr_t RENAME TO cr_t__old")
-        spark.createDataFrame([(10,), (20,)], "id long") \
-            .write.mode("overwrite").saveAsTable("cr_t")
-        # crash state: swap done, orphan __old remains
-        assert recover_staged_swap(spark, "cr_t") == "dropped_old"
-        assert self._ids(spark, "cr_t") == [10, 20]
-        assert not spark.catalog.tableExists("cr_t__old")
-
-
 def test_compact_partition_values_on_unpartitioned_raises(spark, maint_db):
     spark.range(5).write.mode("overwrite").saveAsTable("flat_t")
     with pytest.raises(ValueError, match="not partitioned"):
@@ -194,19 +153,6 @@ class TestVersionedSwap:
             assert resolve_physical(spark, "vt") == f"vt__v{i}"
         # current + one grace generation, nothing older
         assert list_versions(spark, "vt") == [2, 3]
-
-    def test_legacy_table_migrates_on_first_overwrite(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            current_version, overwrite_via_staging,
-        )
-
-        spark.sql("DROP TABLE IF EXISTS leg_t")
-        spark.range(5).write.mode("overwrite").saveAsTable("leg_t")
-        assert current_version(spark, "leg_t") is None
-        overwrite_via_staging(spark, "leg_t", spark.createDataFrame([(9,)], "id long"))
-        assert current_version(spark, "leg_t") == 1
-        assert [r["id"] for r in spark.table("leg_t").collect()] == [9]
-        assert not spark.catalog.tableExists("leg_t__old")
 
     def test_concurrent_reader_never_fails_during_swaps(self, spark, maint_db):
         """A reader loop in another thread across repeated swaps — zero
@@ -338,130 +284,6 @@ class TestVersionedSwap:
         overwrite_via_staging(spark, "ret_t", spark.range(40), retain_versions=3)
         assert list_versions(spark, "ret_t") == [2, 3, 4]
 
-    def test_recovery_prunes_when_retain_depth_lowered(self, spark, maint_db):
-        """The recovery sweep honors ``retain_versions`` too: versions
-        kept at depth 3 are pruned to depth 2 on the next recovery
-        pass that asks for 2."""
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            list_versions, overwrite_via_staging, recover_staged_swap,
-        )
-
-        spark.sql("DROP VIEW IF EXISTS retc_t")
-        for i in range(1, 5):
-            overwrite_via_staging(spark, "retc_t", spark.range(i * 10),
-                                  retain_versions=3)
-        assert list_versions(spark, "retc_t") == [2, 3, 4]
-        assert recover_staged_swap(spark, "retc_t", retain_versions=2) \
-            == "pruned_versions"
-        assert list_versions(spark, "retc_t") == [3, 4]
-
-    def test_crash_between_rename_and_repoint_promotes(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            current_version, overwrite_via_staging, recover_staged_swap,
-        )
-
-        spark.sql("DROP VIEW IF EXISTS crv_t")
-        overwrite_via_staging(spark, "crv_t", spark.createDataFrame([(1,)], "id long"))
-        # crash state: v2 complete (rename happened) but view still at v1
-        spark.createDataFrame([(2,)], "id long") \
-            .write.mode("overwrite").saveAsTable("crv_t__v2")
-        assert recover_staged_swap(spark, "crv_t") == "promoted_version"
-        assert current_version(spark, "crv_t") == 2
-        assert [r["id"] for r in spark.table("crv_t").collect()] == [2]
-
-    def test_crash_with_view_missing_recreates_at_max_version(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            current_version, recover_staged_swap,
-        )
-
-        spark.sql("DROP VIEW IF EXISTS crm_t")
-        spark.createDataFrame([(1,)], "id long") \
-            .write.mode("overwrite").saveAsTable("crm_t__v1")
-        spark.createDataFrame([(2,)], "id long") \
-            .write.mode("overwrite").saveAsTable("crm_t__v2")
-        assert recover_staged_swap(spark, "crm_t") == "recreated_view"
-        assert current_version(spark, "crm_t") == 2
-        assert [r["id"] for r in spark.table("crm_t").collect()] == [2]
-
-
-class TestRecoverAll:
-    """Catalog-wide startup sweep: crash states on tables a run only
-    READS are repaired without waiting for that table's next write."""
-
-    def test_sweep_repairs_view_missing_and_prunes(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            _mark_managed, overwrite_via_staging, recover_all,
-        )
-
-        # table A: mid-migration crash — versions exist, view missing.
-        # The swap marks every __v{N} it writes — stamp it here too.
-        spark.createDataFrame([(1,)], "id long") \
-            .write.mode("overwrite").saveAsTable("sw_a__v1")
-        _mark_managed(spark, "sw_a__v1")
-        # table B: versioned table whose next version was written but
-        # the view not yet repointed
-        spark.sql("DROP VIEW IF EXISTS sw_b")
-        overwrite_via_staging(spark, "sw_b", spark.createDataFrame([(2,)], "id long"))
-        spark.createDataFrame([(99,)], "id long") \
-            .write.mode("overwrite").saveAsTable("sw_b__v2")
-
-        actions = recover_all(spark)
-        assert actions.get("sw_a") == "recreated_view"
-        assert actions.get("sw_b") == "promoted_version"
-        assert [r["id"] for r in spark.table("sw_a").collect()] == [1]
-        assert [r["id"] for r in spark.table("sw_b").collect()] == [99]
-
-    def test_pipeline_entry_runs_the_sweep(self, spark, maint_db):
-        from spaceparts_data_pipeline_spark.operators.maintenance import _mark_managed
-        from spaceparts_data_pipeline_spark.plans import runner
-
-        # leave a view-missing crash state, then start a pipeline run
-        spark.createDataFrame([(7,)], "id long") \
-            .write.mode("overwrite").saveAsTable("sw_c__v3")
-        _mark_managed(spark, "sw_c__v3")
-        res = runner.run_pipeline(spark, sources={})
-        assert res.get("recovered", {}).get("sw_c") == "recreated_view"
-        assert [r["id"] for r in spark.table("sw_c").collect()] == [7]
-
-    def test_sweep_never_touches_user_tables_matching_the_convention(self, spark, maint_db):
-        """A user table that merely LOOKS like a swap artifact — no
-        managed marker, no version view — must survive the sweep intact:
-        renaming report__old to report or dropping foo__v1 would be
-        destructive actions on tables the pipeline never managed."""
-        from spaceparts_data_pipeline_spark.operators.maintenance import recover_all
-
-        # user table named like an orphan grace copy, with no base table
-        spark.createDataFrame([(1,)], "id long") \
-            .write.mode("overwrite").saveAsTable("report__old")
-        # user version-convention table next to a real user table
-        spark.range(3).write.mode("overwrite").saveAsTable("foo")
-        spark.createDataFrame([(9,)], "id long") \
-            .write.mode("overwrite").saveAsTable("foo__v1")
-
-        actions = recover_all(spark)
-        assert "report" not in actions and "foo" not in actions
-        assert spark.catalog.tableExists("report__old")
-        assert not spark.catalog.tableExists("report")
-        assert spark.catalog.tableExists("foo__v1")
-        assert [r["id"] for r in spark.table("foo__v1").collect()] == [9]
-
-    def test_sweep_still_acts_on_marked_artifacts(self, spark, maint_db):
-        """The inverse guard: the same crash shapes ARE repaired when the
-        artifacts carry the pipeline marker."""
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            _mark_managed, recover_all,
-        )
-
-        spark.range(4).write.mode("overwrite").saveAsTable("mk")
-        spark.createDataFrame([(9,)], "id long") \
-            .write.mode("overwrite").saveAsTable("mk__old")
-        _mark_managed(spark, "mk__old")
-        actions = recover_all(spark)
-        assert actions.get("mk") == "dropped_old"
-        assert not spark.catalog.tableExists("mk__old")
-        assert spark.table("mk").count() == 4
-
-
 def test_overwrite_survives_orphan_locations(spark, maint_db):
     """A crash between a catalog drop and its location cleanup (or a
     kill mid-saveAsTable) leaves a catalog-less warehouse DIRECTORY
@@ -542,23 +364,6 @@ def test_safe_save_as_table_does_not_clobber_live_tables(spark, maint_db):
         # append with an incompatible schema fails; table must survive
         safe_save_as_table(bad, "live_t", mode="append")
     assert spark.table("live_t").count() == 1
-
-
-def test_clear_orphan_location_refuses_plain_names(spark, maint_db):
-    """The proactive sweep only ever deletes swap-artifact names
-    (__old/__v{N}); a plain name raises (ADVICE
-    r11) — the reactive force path is reserved for safe_save_as_table's
-    proven-wedge precondition."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        _clear_orphan_location)
-
-    with pytest.raises(ValueError):
-        _clear_orphan_location(spark, "totally_normal_table")
-    with pytest.raises(ValueError):   # no swap writes __compact tables
-        _clear_orphan_location(spark, "nope__compact")
-    # artifact names pass the check (nothing to delete → False)
-    assert _clear_orphan_location(spark, "nope__old") is False
-    assert _clear_orphan_location(spark, "nope__v3") is False
 
 
 def test_safe_save_refuses_fresh_collision_dirs(spark, maint_db):
@@ -771,41 +576,6 @@ def test_db_location_always_reflects_current_catalog_state(spark, tmp_path):
     spark.sql(f"CREATE DATABASE defloc_db LOCATION '{loc_a}'")
     assert _strip_scheme(_db_location(spark, "defloc_db")) == loc_a
     spark.sql("DROP DATABASE defloc_db CASCADE")
-
-
-def test_recover_all_scopes_recovery_to_the_given_db(spark, maint_db):
-    """r16 review finding: ``recover_all(db=...)`` probed ownership with
-    db-qualified names but ran ``recover_staged_swap`` on the
-    UNQUALIFIED base — the repair resolved in the CURRENT database,
-    leaving the target db's crashed view missing and mutating any
-    same-named artifacts the current db happened to hold."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        _mark_managed, recover_all,
-    )
-
-    # decoy in the CURRENT db (maint_db): a healthy user layout whose
-    # names collide with the target db's crashed table — an unqualified
-    # recovery would drop this __old table
-    spark.range(3).write.mode("overwrite").saveAsTable("sw_x")
-    spark.createDataFrame([(9,)], "id long").write.mode("overwrite") \
-        .saveAsTable("sw_x__old")
-    spark.sql("CREATE DATABASE IF NOT EXISTS maint_db_other")
-    try:
-        # crashed mid-migration state in the TARGET db: version exists,
-        # view missing
-        spark.createDataFrame([(1,)], "id long").write.mode("overwrite") \
-            .saveAsTable("maint_db_other.sw_x__v1")
-        _mark_managed(spark, "maint_db_other.sw_x__v1")
-
-        actions = recover_all(spark, db="maint_db_other")
-
-        assert actions == {"maint_db_other.sw_x": "recreated_view"}
-        assert [r["id"] for r in spark.table("maint_db_other.sw_x").collect()] == [1]
-        # the current db's same-named tables are untouched
-        assert spark.catalog.tableExists("sw_x__old")
-        assert spark.table("sw_x").count() == 3
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS maint_db_other CASCADE")
 
 
 def test_version_probes_accept_mixed_case_names(spark, maint_db):

@@ -1135,7 +1135,7 @@ def test_cli_opens_with_crash_recovery_sweep(spark, sf_small, tmp_path, capsys):
     prev_db = spark.catalog.currentDatabase()
     spark.sql(f"CREATE DATABASE {db}")
     try:
-        # crashed mid-migration state left by a "previous run"
+        # a "previous run" killed before its view repoint
         spark.createDataFrame([(7,)], "id long").write.saveAsTable(f"{db}.legacy__v2")
         _mark_managed(spark, f"{db}.legacy__v2")
 
@@ -1145,7 +1145,7 @@ def test_cli_opens_with_crash_recovery_sweep(spark, sf_small, tmp_path, capsys):
         rc = main(["--source-dir", str(landing), "--database", db, "--skip-gold"])
         summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert rc == 0
-        assert summary["recovered"] == {"legacy": "recreated_view"}
+        assert summary["recovered"] == {"legacy": "promoted_version"}
         assert "recovered" not in summary["tables"]
         assert [r["id"] for r in spark.table(f"{db}.legacy").collect()] == [7]
     finally:

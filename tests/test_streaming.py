@@ -127,6 +127,7 @@ def test_stream_upsert_creates_partitioned_target(spark, tmp_path):
     back to the O(table) full-rewrite path."""
     from pyspark.sql import functions as F
 
+    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
     from spaceparts_data_pipeline_spark.operators.merge import physical_partition_cols
 
     spark.sql("CREATE DATABASE IF NOT EXISTS stream_db3")
@@ -140,7 +141,10 @@ def test_stream_upsert_creates_partitioned_target(spark, tmp_path):
         q = structured.stream_upsert(spark, stream, "events_cnew", ["event_id"], "ts",
                                      str(tmp_path / "ckpt_c"), partition_col="p_bucket")
         q.awaitTermination(120)
-        assert physical_partition_cols(spark, "events_cnew") == ["p_bucket"]
+        # the target is a version view; the partitioning is the physical version's
+        phys = resolve_physical(spark, "events_cnew")
+        assert phys == "events_cnew__v1"
+        assert physical_partition_cols(spark, phys) == ["p_bucket"]
         assert spark.table("events_cnew").count() == 2
     finally:
         spark.catalog.setCurrentDatabase("default")
