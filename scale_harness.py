@@ -838,26 +838,27 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
     """Round 15 (r14 verdict next-round #4): step-attribute a silver
     pass BEFORE optimizing it — silver is the slowest layer at ~6.5×
     reference (bronze 13.3×, gold 14.6×) and the question is where the
-    wall goes: the standardize→window-dedup compute (materialized at
-    the quarantine count, ONE execution thanks to the cache), the
-    quarantine side-sink append, the bucket-shuffle+sort+staged write,
-    the staged-swap catalog overhead, or the final count.
+    wall goes: the clean write (which also runs the standardize→
+    window-dedup compute, ONE execution thanks to the cache, and the
+    observed row/quarantine counts), the quarantine side-sink append,
+    the staged-swap catalog overhead, or the log append.
 
     Same protocol as bench.layer_throughput's silver leg (bronze runs
     untimed as setup; 1 discarded warm-up + 2 measured passes over
     lineitem/orders/events), but each pass drives silver's REAL
-    internals step by step (transform → quarantined.count() →
-    _append_quarantine_dedup → _write_partitioned → table count — the
-    exact run_full composition, kept in sync with plans/silver.py) with
-    a timer around each step. ``plain_write`` is measured as an EXTRA
-    separately-timed write of the same repartitioned+sorted frame to a
-    throwaway table, so staged-swap overhead ≈ bucket_write −
-    plain_write (the gold r14 method)."""
+    internals step by step (transform → _write_partitioned → observed
+    counts → _append_quarantine_dedup → LogBuffer flush — the exact
+    run_full composition, kept in sync with plans/silver.py) with a
+    timer around each step. ``plain_write`` is an EXTRA separately-timed
+    write of the same repartitioned+sorted frame, read from the cache
+    the clean write built, to a throwaway table: the write cost without
+    the transform or the swap's catalog steps."""
     from pyspark.sql import functions as F
 
     from spaceparts_data_pipeline_spark.operators.dedup import infer_keys
     from spaceparts_data_pipeline_spark.plans import bronze as bronze_plan
     from spaceparts_data_pipeline_spark.plans import silver as silver_plan
+    from spaceparts_data_pipeline_spark.plans.logs import LogBuffer
 
     rows = []
     for scale in ("x1", f"x{factor}"):
@@ -877,26 +878,28 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
             for attempt in range(3):                   # pass 0 = warm-up
                 spark.catalog.clearCache()
                 steps = {k: 0.0 for k in (
-                    "transform_cache_materialize", "quarantine_append",
-                    "bucket_shuffle_sort_write", "plain_write_only",
-                    "final_count", "log_append")}
+                    "clean_write", "quarantine_append", "plain_write_only",
+                    "log_append")}
                 total0 = time.perf_counter()
                 for t in tables:
                     src = spark.table(f"bronze_{t}")
-                    clean, quarantined, parent = silver_plan.transform(
-                        src, t, f"prof-{attempt}", persist=True)
+                    clean, quarantined, parent, counts = silver_plan.transform(
+                        src, t, f"prof-{attempt}")
                     try:
+                        keys = infer_keys(clean.columns, "dwcreateddate")
                         t0 = time.perf_counter()
-                        n_q = quarantined.count()
-                        steps["transform_cache_materialize"] += time.perf_counter() - t0
-                        if n_q:
+                        silver_plan._write_partitioned(
+                            clean, f"silver_{t}", keys, sort_by=keys)
+                        n = counts()
+                        steps["clean_write"] += time.perf_counter() - t0
+                        if n["quarantined"]:
                             t0 = time.perf_counter()
                             silver_plan._append_quarantine_dedup(
                                 spark, f"silver_quarantine_{t}", quarantined)
                             steps["quarantine_append"] += time.perf_counter() - t0
-                        keys = infer_keys(clean.columns, "dwcreateddate")
-                        # extra pass: the same shuffled+sorted frame to a
-                        # throwaway table — attributes the swap overhead
+                        # extra pass from the cache: the same shuffled+sorted
+                        # frame to a throwaway table — attributes the swap
+                        # overhead
                         out = clean.withColumn(
                             silver_plan.PARTITION_COL,
                             silver_plan._bucket_expr(keys))
@@ -908,19 +911,13 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                             .saveAsTable(f"plainw_{t}")
                         steps["plain_write_only"] += time.perf_counter() - t0
                         spark.sql(f"DROP TABLE plainw_{t}")
-                        t0 = time.perf_counter()
-                        silver_plan._write_partitioned(
-                            clean, f"silver_{t}", keys, sort_by=keys)
-                        steps["bucket_shuffle_sort_write"] += time.perf_counter() - t0
                     finally:
                         parent.unpersist()
                     t0 = time.perf_counter()
-                    n = spark.table(f"silver_{t}").count()
-                    steps["final_count"] += time.perf_counter() - t0
-                    t0 = time.perf_counter()
-                    silver_plan.logs.append_log(
-                        spark, "silver_execution_log", "silver", t,
-                        f"prof-{attempt}", "success", n)
+                    log = LogBuffer(spark, "silver_execution_log")
+                    log.add("silver", t, f"prof-{attempt}", "success",
+                            n["rows"] - n["quarantined"])
+                    log.flush()
                     steps["log_append"] += time.perf_counter() - t0
                 # the timed total excludes the extra plain_write pass
                 total = (time.perf_counter() - total0) - steps["plain_write_only"]
@@ -929,10 +926,7 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                 row = {"check": "silver_steps", "scale": scale, "pass": attempt,
                        "rows": n_rows, "total_sec": round(total, 2),
                        "rows_per_hour": round(n_rows / total * 3600),
-                       "steps_sec": {k: round(v, 2) for k, v in steps.items()},
-                       "swap_overhead_sec": round(
-                           steps["bucket_shuffle_sort_write"]
-                           - steps["plain_write_only"], 2)}
+                       "steps_sec": {k: round(v, 2) for k, v in steps.items()}}
                 rows.append(row)
                 print(json.dumps(row), flush=True)
         finally:

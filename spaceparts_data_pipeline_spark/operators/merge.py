@@ -23,6 +23,7 @@ only the (small) source shuffles. AQE skew-join covers hot keys.
 from __future__ import annotations
 
 from functools import reduce
+from itertools import takewhile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,11 +74,21 @@ def physical_partition_cols(spark, table: str) -> list[str]:
     """The table's real partition columns from catalog metadata. A column
     merely *named* like a partition column is not enough: dynamic
     partition overwrite on a physically unpartitioned table would
-    truncate it and insert only the touched slice — data loss."""
+    truncate it and insert only the touched slice — data loss.
+
+    Read from the ``# Partition Information`` block of ``DESCRIBE
+    TABLE``, a command that runs no Spark job (``catalog.listColumns``
+    costs 2)."""
     try:
-        return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+        names = [r["col_name"] for r in spark.sql(f"DESCRIBE TABLE {table}").collect()]
     except Exception:
         return []
+    if "# Partition Information" not in names:
+        return []
+    # past the block's "# col_name" header: one row per partition column,
+    # up to the end or the next blank or "#" row
+    block = names[names.index("# Partition Information") + 2:]
+    return list(takewhile(lambda n: n and not n.startswith("#"), block))
 
 
 # Cardinality CONTRACT for every driver-side touched-partition collect:

@@ -92,15 +92,21 @@ def quarantine_split(
     if not preds:
         empty = df.filter(F.lit(False))
         return df, _tag(empty, F.lit(None).cast("string"), source_table)
-    any_bad = reduce(lambda a, b: a | b, (p for p, _ in preds))
-    # NULL predicate results must count as "not bad" (clean side keeps them).
-    bad = F.coalesce(any_bad, F.lit(False))
+    bad = bad_row(preds)
     reason = F.coalesce(
         *[F.when(F.coalesce(p, F.lit(False)), F.lit(r)) for p, r in preds]
     )
     clean = df.filter(~bad)
     quarantined = _tag(df.filter(bad), reason, source_table)
     return clean, quarantined
+
+
+def bad_row(preds: list[tuple[Column, str]]) -> Column:
+    """True for a row any of ``preds`` flags. NULL predicate results
+    count as "not bad" (the clean side keeps them)."""
+    if not preds:
+        return F.lit(False)
+    return F.coalesce(reduce(lambda a, b: a | b, (p for p, _ in preds)), F.lit(False))
 
 
 def _tag(df: DataFrame, reason: Column, source_table: str) -> DataFrame:

@@ -37,9 +37,10 @@ def prepare(df: DataFrame) -> DataFrame:
 def run_full(spark: SparkSession, source: DataFrame, table: str) -> dict:
     from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
-    overwrite_via_staging(spark, f"bronze_{table}", prepare(source))
-    n = spark.table(f"bronze_{table}").count()
-    return {"table": table, "status": "success", "records": n, "mode": "full"}
+    # the record count rides the write: no re-read of the written table
+    out, metrics = logs.observe(prepare(source), rows=F.count(F.lit(1)))
+    overwrite_via_staging(spark, f"bronze_{table}", out)
+    return {"table": table, "status": "success", "records": metrics()["rows"], "mode": "full"}
 
 
 def run_incremental(
@@ -67,15 +68,17 @@ def run_incremental(
 
     execution_id = execution_id or logs.new_execution_id()
     wm = logs.last_watermark(spark, control_table, table)
-    # ONE materialized snapshot serves both the append and the
-    # count/watermark agg below. Without the persist the agg RE-EXECUTES
-    # the scan after the append — on a live (JDBC) source a row landing
-    # in between is counted into the new watermark but was never
-    # appended, so the next run's scan skips it forever (the overlap
-    # only shields rows within its window); on static parquet it is
-    # still a wasted second full pass of the source.
-    incoming = prepare(watermark_scan(source, ts_col, wm, overlap)) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE materialized snapshot: the count and the new watermark are
+    # observed on it below the persist, so the append that builds the
+    # cache also computes them. They describe exactly the rows appended;
+    # a second scan of a live (JDBC) source could count a row landing in
+    # between into the watermark without appending it, and the next
+    # run's scan would skip that row forever (the overlap only shields
+    # rows within its window).
+    incoming, metrics = logs.observe(
+        prepare(watermark_scan(source, ts_col, wm, overlap)),
+        n=F.count(F.lit(1)), mx=watermark_max(ts_col))
+    incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         target = f"bronze_{table}"
         if spark.catalog.tableExists(target):
@@ -84,9 +87,7 @@ def run_incremental(
             # versioned from the first write: a later schema-drift
             # rewrite or compaction is then an ordinary swap
             maintenance.overwrite_via_staging(spark, target, incoming)
-        stats = incoming.agg(
-            F.count(F.lit(1)).alias("n"), watermark_max(ts_col).alias("mx")
-        ).collect()[0]
+        stats = metrics()
     finally:
         incoming.unpersist()
     new_wm = stats["mx"] or wm

@@ -212,13 +212,14 @@ MODELS: list[GoldModel] = [
 def _full_model(spark: SparkSession, m: GoldModel) -> dict:
     from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
 
-    df = m.builder(spark)
+    # the record count rides the write: no re-read of the written model
+    df, metrics = logs.observe(m.builder(spark), rows=F.count(F.lit(1)))
     if m.partition:
         pcol, pexpr = m.partition
         overwrite_via_staging(spark, m.name, df.withColumn(pcol, pexpr()), partition_by=pcol)
     else:
         overwrite_via_staging(spark, m.name, df)
-    return {"status": "success", "records": spark.table(m.name).count()}
+    return {"status": "success", "records": metrics()["rows"]}
 
 
 def _run_models(spark: SparkSession, models: list[GoldModel] | None, step,
@@ -324,17 +325,19 @@ def _merge_model(spark: SparkSession, m: GoldModel, watermark: dt.datetime,
     if m.partition:
         pcol, pexpr = m.partition
         delta = delta.withColumn(pcol, pexpr())
-    # The delta (bounded: changed keys only) is consumed twice —
-    # once by the merge, once by the record count. Persist +
-    # count FIRST so the merge reads the cache instead of
-    # re-executing the builder joins + semi-join a second time.
+    # The delta (bounded: changed keys only) is read several times by
+    # the merge (touched-partition collect, anti-join, union). Persist
+    # it so the builder joins + semi-join execute once; its record count
+    # is observed below the persist, so the merge's first read computes
+    # it.
+    delta, metrics = logs.observe(delta, rows=F.count(F.lit(1)))
     delta = delta.persist()
     try:
-        n = delta.count()
         if m.partition:
             merge_into_table(spark, m.name, delta, m.merge_keys, partition_col=m.partition[0])
         else:
             merge_into_table(spark, m.name, delta, m.merge_keys)
+        n = metrics()["rows"]
     finally:
         delta.unpersist()
     for key, cur in pending_controls.items():

@@ -2,16 +2,21 @@
 (SURVEY.md §2.2 K5/K6, §2.1 S10/O2).
 
 Explicit StructType schemas (the reference's only fixed schemas) and
-1-row typed appends. Control rows are the single sanctioned driver-side
-collect in the engine (≤1 row per table per run).
+typed appends built from literals, so a log or control append runs no
+Python worker. The record counts and watermarks these rows carry are
+metrics observed on the write that landed the rows (:func:`observe`),
+not a re-read of the written table. Control rows are the single
+sanctioned driver-side collect in the engine (≤1 row per table per
+run).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
@@ -45,32 +50,58 @@ def new_execution_id() -> str:
     return uuid.uuid4().hex
 
 
-def append_log(
-    spark: SparkSession,
-    log_table: str,
-    layer: str,
-    table_name: str,
-    execution_id: str,
-    status: str,
-    record_count: int | None = None,
-    message: str | None = None,
-) -> None:
-    row = [(layer, table_name, execution_id, dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            status, record_count, message)]
-    from spaceparts_data_pipeline_spark.operators.maintenance import safe_save_as_table
+def observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with ``metrics`` (name → aggregate) observed, and a reader
+    for them. The metrics ride the first action that executes the
+    returned frame; call the reader only after that action has returned,
+    and make it one that reads every row (a write, not a ``limit``).
 
-    safe_save_as_table(
-        spark.createDataFrame(row, EXECUTION_LOG_SCHEMA), log_table, mode="append")
+    Adaptive execution replaces a shuffle stage whose output proves
+    empty with an empty relation, and an observe node inside that stage
+    goes with it: the observation then completes with an empty row, or
+    never (``Observation.get`` fails or blocks forever). The reader
+    therefore drains the listener bus (observations complete there,
+    after the action returns) and, when the node did not report,
+    aggregates the same metrics over the returned frame instead: a cache
+    scan when the caller persisted it, a re-read otherwise."""
+    obs = Observation()
+    cols = [c.alias(name) for name, c in metrics.items()]
+    out = df.observe(obs, *cols)
+
+    def read() -> dict:
+        from py4j.protocol import Py4JError
+
+        try:
+            out.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        except Py4JError:  # the bus timed out: the fallback below still answers
+            pass
+        row = obs._jo.getRowOrEmpty()
+        if row.isDefined() and row.get().length() == len(cols):
+            return obs.get
+        return out.agg(*cols).first().asDict()
+
+    return out, read
+
+
+def _literal_rows(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """``rows`` as a typed relation built from literals. Nothing runs in
+    a Python worker: ``spark.createDataFrame`` over a list parallelizes
+    the rows through a Python RDD (4 tasks a flush, the first of them starting
+    the worker daemon), while these literals fold into the JVM-side
+    plan."""
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ])))
 
 
 class LogBuffer:
     """Batch execution-log rows into ONE append per pipeline run.
 
-    ``append_log`` pays a full (tiny) Spark write job per row — ~0.4 s
-    of fixed job latency each, ~2.5 s of a 6-model gold pass (round-13
-    verdict, gold bench at the 2× floor on fixed per-table overhead).
-    Success rows buffer driver-side and land in a single append at
-    ``flush()``; FAILURE rows flush immediately together with anything
+    An append per row pays a full (tiny) Spark write job each — ~0.4 s
+    of fixed job latency, ~2.5 s of a 6-model gold pass. Success rows
+    buffer driver-side and land in a single append at ``flush()``;
+    FAILURE rows flush immediately together with anything
     buffered, so a crash mid-run can lose only success rows whose
     tables are themselves intact and re-derivable — the failure
     diagnosis the log exists for is never deferred."""
@@ -109,7 +140,7 @@ class LogBuffer:
         rows, self._rows = self._rows, []
         try:
             safe_save_as_table(
-                self.spark.createDataFrame(rows, EXECUTION_LOG_SCHEMA),
+                _literal_rows(self.spark, rows, EXECUTION_LOG_SCHEMA),
                 self.log_table, mode="append")
         except BaseException:
             # keep the rows so a later flush (the layer's finally) can
@@ -122,8 +153,7 @@ class LogBuffer:
         runs in :func:`run_tables`' ``finally``, OUTSIDE the per-table
         isolation — an execution-log write failure there must be
         reported in the layer result, not raised, or a log-table
-        problem crashes a run whose data tables all succeeded (the old
-        per-row ``append_log`` failure was caught per table). Returns
+        problem crashes a run whose data tables all succeeded. Returns
         the error string, or None on success."""
         try:
             self.flush()
@@ -182,7 +212,7 @@ def append_control(
     from spaceparts_data_pipeline_spark.operators.maintenance import safe_save_as_table
 
     safe_save_as_table(
-        spark.createDataFrame(row, CONTROL_SCHEMA), control_table, mode="append")
+        _literal_rows(spark, row, CONTROL_SCHEMA), control_table, mode="append")
 
 
 def last_watermark(spark: SparkSession, control_table: str, table_name: str) -> dt.datetime | None:

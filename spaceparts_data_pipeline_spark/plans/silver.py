@@ -11,11 +11,14 @@ their first write (``maintenance.overwrite_via_staging``); later writes
 address the physical version behind the view.
 
 No blind repartition (the reference's `optimize_partitioning` heuristic
-is replaced by AQE coalescing, SURVEY.md §4) and no persist-around-count
-(we count the written table instead of computing the plan twice).
+is replaced by AQE coalescing, SURVEY.md §4) and no barrier count: the
+full load's row and quarantine counts are metrics observed on the
+persisted parent, computed by the write that builds its cache.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +26,7 @@ from pyspark.sql import functions as F
 from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest, infer_keys
 from spaceparts_data_pipeline_spark.operators.merge import physical_partition_cols, upsert_union_dedup
 from spaceparts_data_pipeline_spark.operators.quality import (
-    drop_all_null, quarantine_split, watermark_max,
+    bad_row, drop_all_null, quarantine_predicates, quarantine_split, watermark_max,
 )
 from spaceparts_data_pipeline_spark.operators.standardize import standardize_types
 from spaceparts_data_pipeline_spark.plans import logs
@@ -138,30 +141,36 @@ def transform(
     execution_id: str,
     order_col: str = "dwcreateddate",
     horizon=None,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(clean, quarantined, parent) silver DataFrames for one bronze table.
+) -> tuple[DataFrame, DataFrame, DataFrame, Callable[[], dict]]:
+    """(clean, quarantined, parent, counts) for one bronze table.
 
-    ``persist=True`` caches the split parent (the standardized+deduped
-    table) MEMORY_AND_DISK before the quarantine split, so the heavy
+    The split parent (the standardized+deduped table) is cached
+    MEMORY_AND_DISK before the quarantine split, so the heavy
     standardize→window-dedup lineage executes ONCE no matter how many
-    sinks/counts consume the two sides — the standard two-sink pattern
-    (at scale the cache spills to executor-local disk, still strictly
+    sinks consume the two sides — the standard two-sink pattern (at
+    scale the cache spills to executor-local disk, still strictly
     cheaper than re-running the shuffle per consumer). The caller owns
     ``parent.unpersist()`` after all consumers have run.
+
+    ``counts()`` returns ``{"rows", "quarantined"}`` of the parent. Both
+    are observed below the persist, so the first action that reads the
+    whole parent (the clean write) computes them; call it after that
+    action and before the unpersist.
     """
     from pyspark.storagelevel import StorageLevel
 
     std = standardize_types(df)
     deduped = dedup_latest(std, order_col=order_col) if order_col in std.columns else std
     non_null = drop_all_null(deduped)
-    if persist:
-        non_null = non_null.persist(StorageLevel.MEMORY_AND_DISK)
-    clean, quarantined = quarantine_split(non_null, source_table=table, horizon=horizon)
+    bad = bad_row(quarantine_predicates(non_null, horizon))
+    parent, counts = logs.observe(
+        non_null, rows=F.count(F.lit(1)), quarantined=F.count_if(bad))
+    parent = parent.persist(StorageLevel.MEMORY_AND_DISK)
+    clean, quarantined = quarantine_split(parent, source_table=table, horizon=horizon)
     clean = clean.withColumn("silver_created_date", F.current_timestamp()).withColumn(
         "silver_execution_id", F.lit(execution_id)
     )
-    return clean, quarantined, non_null
+    return clean, quarantined, parent, counts
 
 
 def run_full(
@@ -180,27 +189,29 @@ def run_full(
     keys — the columns downstream merges and lookups filter on."""
     execution_id = execution_id or logs.new_execution_id()
     src = spark.table(source_table or f"bronze_{table}")
-    # persist=True: the standardize→dedup plan runs ONCE (cache
-    # materializes on the quarantine count); the quarantine append and
-    # the clean write are cache scans, not recomputes (round-3 verdict:
-    # run_full executed the transform three times).
-    clean, quarantined, parent = transform(
-        src, table, execution_id, order_col=order_col, horizon=horizon, persist=True
+    # The standardize→dedup plan runs ONCE: the clean write builds the
+    # persisted parent's cache and, with it, the observed row and
+    # quarantine counts; the quarantine append is then a cache scan.
+    # The clean side lands first. A crash between the two writes leaves
+    # the sink short, and a rerun re-derives the missing rows through
+    # the sink's identity anti-join.
+    clean, quarantined, parent, counts = transform(
+        src, table, execution_id, order_col=order_col, horizon=horizon
     )
     try:
-        n_quarantined = quarantined.count()
-        if n_quarantined:
+        keys = infer_keys(clean.columns, order_col)
+        _write_partitioned(clean, f"silver_{table}", keys,
+                           sort_by=sort_by if sort_by is not None else keys)
+        n = counts()
+        if n["quarantined"]:
             # same exactly-once identity path as incremental: a full
             # reload over a populated sink must not duplicate rows prior
             # runs already quarantined
             _append_quarantine_dedup(spark, f"silver_quarantine_{table}", quarantined)
-        keys = infer_keys(clean.columns, order_col)
-        _write_partitioned(clean, f"silver_{table}", keys,
-                           sort_by=sort_by if sort_by is not None else keys)
     finally:
         parent.unpersist()
-    n = spark.table(f"silver_{table}").count()
-    return {"table": table, "status": "success", "records": n, "quarantined": n_quarantined}
+    return {"table": table, "status": "success",
+            "records": n["rows"] - n["quarantined"], "quarantined": n["quarantined"]}
 
 
 def run_incremental(
@@ -221,19 +232,22 @@ def run_incremental(
 
     The CONTROL row (next run's watermark) lands per table, like
     bronze.run_incremental's; the watermark skips rows past the
-    quarantine horizon (they never reach silver)."""
+    quarantine horizon (they never reach silver) and is observed on the
+    incoming slice, so the merge that reads the slice computes it."""
     execution_id = execution_id or logs.new_execution_id()
+    wm_of = None
+    if order_col in incoming.columns:
+        incoming, wm_of = logs.observe(incoming, wm=watermark_max(order_col, horizon))
     # Same single-execution pattern as run_full: the incoming slice's
     # clean side feeds a touched-partition collect AND the merge write,
     # the quarantine side an isEmpty AND an anti-join append — four
     # consumers, one cached transform.
-    clean, quarantined, parent = transform(
-        incoming, table, execution_id, order_col=order_col, horizon=horizon, persist=True
+    clean, quarantined, parent, _ = transform(
+        incoming, table, execution_id, order_col=order_col, horizon=horizon
     )
     try:
         n = _merge_incremental(spark, table, clean, quarantined, order_col)
-        wm = (incoming.agg(watermark_max(order_col, horizon)).collect()[0][0]
-              if order_col in incoming.columns else None)
+        wm = wm_of()["wm"] if wm_of else None
         logs.append_control(spark, control_table, table, execution_id, wm, "success", n)
     finally:
         parent.unpersist()

@@ -27,11 +27,21 @@ DENYLIST_SUFFIXES = ("_execution_log", "_notebook_execution_summary", "_incremen
 _MAINT_ARTIFACT = re.compile(r"__v\d+$")
 
 
+def list_table_names(spark: SparkSession, database: str | None = None) -> list[str]:
+    """Names of the database's tables and views, session temp views
+    excluded. ``SHOW TABLES`` is a command that runs no Spark job;
+    ``catalog.listTables`` pages its answer through ``toLocalIterator``,
+    5 jobs a call."""
+    scope = f" IN {database}" if database else ""
+    return [r["tableName"] for r in spark.sql(f"SHOW TABLES{scope}").collect()
+            if not r["isTemporary"]]
+
+
 def discover_tables(spark: SparkSession, pattern: str = "bronze_*", database: str | None = None) -> list[str]:
     """List catalog tables matching a glob, minus the metadata denylist
     and the versioned-swap artifacts, sorted for deterministic
     processing order (O1)."""
-    tables = [t.name for t in spark.catalog.listTables(database)]
+    tables = list_table_names(spark, database)
     matched = [t for t in tables if fnmatch.fnmatch(t, pattern)]
     allowed = [t for t in matched
                if not any(t.endswith(s) for s in DENYLIST_SUFFIXES)

@@ -44,7 +44,7 @@ def _split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     column of a raw file scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_
     RECORD_COLUMN; the documented pattern is to materialize first), and
     the cache also means the file parse runs once for both sinks — the
-    same two-consumer contract as plans.silver.transform(persist=True).
+    same two-consumer contract as plans.silver.transform.
     The caller owns ``parent.unpersist()`` after both sides are consumed.
     """
     from pyspark.storagelevel import StorageLevel

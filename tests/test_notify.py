@@ -28,6 +28,15 @@ def notify_db(spark):
     spark.sql("DROP DATABASE notify_db CASCADE")
 
 
+def _log(spark, log_table, layer, table_name, execution_id, status,
+         record_count=None, message=None):
+    """One execution-log row, appended at once through the pipeline's
+    own sink."""
+    buf = logs.LogBuffer(spark, log_table)
+    buf.add(layer, table_name, execution_id, status, record_count, message)
+    buf.flush()
+
+
 def _note(**kw):
     base = dict(layer="gold", subject="s", body="b")
     base.update(kw)
@@ -93,12 +102,12 @@ class TestTransports:
 
 class TestLookupChain:
     def test_notifies_from_latest_failure_row(self, spark, notify_db, tmp_path):
-        logs.append_log(spark, "gold_execution_log", "gold", "gold_fact_sales",
-                        "e-old", "failed", None, "older failure")
-        logs.append_log(spark, "gold_execution_log", "gold", "gold_dim_date",
-                        "e-new", "failed", None, "boom: join exploded")
-        logs.append_log(spark, "gold_execution_log", "gold", "gold_dim_customer",
-                        "e-new", "success", 10)
+        _log(spark, "gold_execution_log", "gold", "gold_fact_sales",
+             "e-old", "failed", None, "older failure")
+        _log(spark, "gold_execution_log", "gold", "gold_dim_date",
+             "e-new", "failed", None, "boom: join exploded")
+        _log(spark, "gold_execution_log", "gold", "gold_dim_customer",
+             "e-new", "success", 10)
         path = str(tmp_path / "alerts.jsonl")
         assert notify_on_failure(spark, "gold_execution_log", "gold",
                                  FileNotifier(path))
@@ -110,8 +119,8 @@ class TestLookupChain:
         assert "gold" in alert["subject"]
 
     def test_execution_id_scope_prevents_stale_realert(self, spark, notify_db, tmp_path):
-        logs.append_log(spark, "silver_execution_log", "silver", "events",
-                        "e-old", "failed", None, "yesterday's failure")
+        _log(spark, "silver_execution_log", "silver", "events",
+             "e-old", "failed", None, "yesterday's failure")
         path = str(tmp_path / "alerts.jsonl")
         # a later healthy run scoped to ITS execution id must not re-alert
         assert not notify_on_failure(spark, "silver_execution_log", "silver",
@@ -123,8 +132,8 @@ class TestLookupChain:
     def test_no_failures_or_no_table_sends_nothing(self, spark, notify_db, tmp_path):
         path = str(tmp_path / "alerts.jsonl")
         assert not notify_on_failure(spark, "absent_log", "bronze", FileNotifier(path))
-        logs.append_log(spark, "bronze_execution_log", "bronze", "orders",
-                        "e1", "success", 5)
+        _log(spark, "bronze_execution_log", "bronze", "orders",
+             "e1", "success", 5)
         assert not notify_on_failure(spark, "bronze_execution_log", "bronze",
                                      FileNotifier(path))
         import os
@@ -151,8 +160,8 @@ class TestLookupChain:
 
 
 def test_render_failure_carries_reference_fields(spark, notify_db):
-    logs.append_log(spark, "gold_execution_log", "gold", "t1", "e9",
-                    "failed", None, "why it died")
+    _log(spark, "gold_execution_log", "gold", "t1", "e9",
+         "failed", None, "why it died")
     row = spark.table("gold_execution_log").collect()[0]
     n = render_failure("gold", row, pipeline="p")
     assert n.subject == "ERROR in gold layer — pipeline p"
@@ -331,8 +340,8 @@ class TestNotifyFailedLayers:
         from spaceparts_data_pipeline_spark.plans.notify import notify_failed_layers
 
         # gold HAS a failure row; its delivery dies -> last_error set
-        logs.append_log(spark, "gold_execution_log", "gold", "gold_fact_sales",
-                        "e1", "failed", None, "gold blew up")
+        _log(spark, "gold_execution_log", "gold", "gold_fact_sales",
+             "e1", "failed", None, "gold blew up")
 
         def boom(_d):
             raise RuntimeError("transport down")
@@ -351,8 +360,8 @@ class TestNotifyFailedLayers:
         one error per layer that actually sent."""
         from spaceparts_data_pipeline_spark.plans.notify import notify_failed_layers
 
-        logs.append_log(spark, "bronze_execution_log", "bronze", "landing_x",
-                        "e2", "failed", None, "bad parquet footer")
+        _log(spark, "bronze_execution_log", "bronze", "landing_x",
+             "e2", "failed", None, "bad parquet footer")
         ok = FileNotifier(str(tmp_path / "alerts.jsonl"))
         dead = WebhookNotifier("http://127.0.0.1:9/", timeout_s=2.0)
         dead.last_error = "stale from an earlier run"     # must be cleared

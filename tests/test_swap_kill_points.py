@@ -13,9 +13,10 @@ things must hold:
 - at most ``retain_versions`` physical versions remain, and the one
   the view resolves to carries the managed marker.
 
-The swap's steps are: write ``{t}__v{N+1}`` → mark it managed → repoint
-the view → prune. A table's first swap (N = 0) has no view to fall back
-on, so its kill points get their own tests.
+The swap's steps are: write ``{t}__v{N+1}`` (a CTAS that carries the
+managed marker in its create) → repoint the view → prune. A table's
+first swap (N = 0) has no view to fall back on, so its kill points get
+their own tests.
 
 The recovery tests below them plant the two crash states recovery
 knows — a view behind its newest version (or no view over a marked
@@ -76,11 +77,15 @@ def _kill_sql(spark, m, prefix):
     m.setattr(spark, "sql", sql)
 
 
-def _kill_fn(m, name):
-    def killed(*_args, **_kwargs):
-        raise Kill(name)
+def _kill_after_create(m):
+    """The version's create completes, then the process dies."""
+    real = mt._create_version
 
-    m.setattr(mt, name, killed)
+    def created_then_kill(df, table, **kwargs):
+        real(df, table, **kwargs)
+        raise Kill(table)
+
+    m.setattr(mt, "_create_version", created_then_kill)
 
 
 def _ids(spark, table):
@@ -121,14 +126,15 @@ def test_kill_mid_version_write_leaves_crumb(spark, killpt_db, monkeypatch):
         raise Kill(table)
 
     _crashed_swap(spark, monkeypatch,
-                  lambda m: m.setattr(mt, "safe_save_as_table", crumb_then_kill))
+                  lambda m: m.setattr(mt, "_create_version", crumb_then_kill))
     assert not spark.catalog.tableExists(f"{T}__v3")
     _recover_then_overwrite(spark, OLD, action=None)
 
 
-def test_kill_after_write_before_mark(spark, killpt_db, monkeypatch):
+def test_kill_after_marked_create(spark, killpt_db, monkeypatch):
     _versioned(spark)
-    _crashed_swap(spark, monkeypatch, lambda m: _kill_fn(m, "_mark_managed"))
+    _crashed_swap(spark, monkeypatch, _kill_after_create)
+    assert mt.is_managed(spark, f"{T}__v3")
     _recover_then_overwrite(spark, NEW, action="promoted_version")
 
 
@@ -147,18 +153,15 @@ def test_kill_during_pruning(spark, killpt_db, monkeypatch):
     _recover_then_overwrite(spark, NEW, action="pruned_versions")
 
 
-def test_kill_first_write_before_mark(spark, killpt_db, monkeypatch):
-    """A first swap killed after writing ``__v1`` but before marking it:
-    no view and no marker, so the startup sweep cannot tell the version
-    from a user's ``foo__v1`` and leaves it alone. The next overwrite's
-    own recovery promotes it first, so it is retained as the grace copy."""
-    _crashed_swap(spark, monkeypatch, lambda m: _kill_fn(m, "_mark_managed"))
+def test_kill_first_write_after_marked_create(spark, killpt_db, monkeypatch):
+    """A first swap killed right after its ``__v1`` create: the version
+    carries the marker from the create on, so the startup sweep owns it
+    and promotes it (no state shows an unmarked version that the sweep
+    would have to leave for the next overwrite)."""
+    _crashed_swap(spark, monkeypatch, _kill_after_create)
     assert mt.list_versions(spark, T) == [1]
-    assert mt.recover_all(spark) == {}
     assert not spark.catalog.tableExists(T)
-    _swap(spark, NEXT)
-    _check(spark, NEXT)
-    assert mt.list_versions(spark, T) == [1, 2]
+    _recover_then_overwrite(spark, NEW, action="promoted_version")
     assert _ids(spark, f"{T}__v1") == NEW
 
 
@@ -174,7 +177,7 @@ def test_kill_first_write_before_view(spark, killpt_db, monkeypatch):
 
 
 def test_kill_before_partition_registration(spark, killpt_db, monkeypatch):
-    """saveAsTable of a partitioned version creates the catalog entry,
+    """The CTAS of a partitioned version creates the catalog entry,
     then registers the partitions; a kill in between leaves a version
     that reads empty until recovery repairs it before the promote."""
     _versioned(spark, partitioned=True)
@@ -187,7 +190,7 @@ def test_kill_before_partition_registration(spark, killpt_db, monkeypatch):
         raise Kill(table)
 
     _crashed_swap(spark, monkeypatch,
-                  lambda m: m.setattr(mt, "safe_save_as_table", unregistered_then_kill),
+                  lambda m: m.setattr(mt, "_create_version", unregistered_then_kill),
                   partitioned=True)
     assert spark.table(f"{T}__v3").count() == 0
     _recover_then_overwrite(spark, NEW, partitioned=True, action="promoted_version")
