@@ -847,14 +847,12 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
     untimed as setup; 1 discarded warm-up + 2 measured passes over
     lineitem/orders/events), but each pass drives silver's REAL
     internals step by step (transform → _write_partitioned → observed
-    counts → _append_quarantine_dedup → LogBuffer flush — the exact
-    run_full composition, kept in sync with plans/silver.py) with a
+    counts → _append_quarantine_dedup → LogBuffer flush — run_full's
+    ``_land`` composition, kept in sync with plans/silver.py) with a
     timer around each step. ``plain_write`` is an EXTRA separately-timed
     write of the same repartitioned+sorted frame, read from the cache
     the clean write built, to a throwaway table: the write cost without
     the transform or the swap's catalog steps."""
-    from pyspark.sql import functions as F
-
     from spaceparts_data_pipeline_spark.operators.dedup import infer_keys
     from spaceparts_data_pipeline_spark.plans import bronze as bronze_plan
     from spaceparts_data_pipeline_spark.plans import silver as silver_plan
@@ -888,8 +886,7 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                     try:
                         keys = infer_keys(clean.columns, "dwcreateddate")
                         t0 = time.perf_counter()
-                        silver_plan._write_partitioned(
-                            clean, f"silver_{t}", keys, sort_by=keys)
+                        silver_plan._write_partitioned(clean, f"silver_{t}", keys)
                         n = counts()
                         steps["clean_write"] += time.perf_counter() - t0
                         if n["quarantined"]:
@@ -900,11 +897,8 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                         # extra pass from the cache: the same shuffled+sorted
                         # frame to a throwaway table — attributes the swap
                         # overhead
-                        out = clean.withColumn(
-                            silver_plan.PARTITION_COL,
-                            silver_plan._bucket_expr(keys))
-                        out = (out.repartition(F.col(silver_plan.PARTITION_COL))
-                               .sortWithinPartitions(silver_plan.PARTITION_COL, *keys))
+                        out = silver_plan._aligned(clean.withColumn(
+                            silver_plan.PARTITION_COL, silver_plan.bucket_expr(keys)), keys)
                         t0 = time.perf_counter()
                         out.write.mode("overwrite") \
                             .partitionBy(silver_plan.PARTITION_COL) \

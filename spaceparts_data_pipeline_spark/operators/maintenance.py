@@ -666,12 +666,17 @@ def append_with_evolution(spark: SparkSession, incoming, target: str) -> None:
     """Append with schema evolution (the reference's Delta `mergeSchema`
     semantic, K2, re-expressed for plain Parquet tables).
 
+    - no table yet: created through the versioned swap, so a later
+      schema-drift rewrite or compaction is an ordinary swap.
     - incoming ⊆ existing columns: plain append (missing cols → NULL).
     - incoming adds columns: one-time table rewrite with the union
       schema (existing rows get NULLs), then the append is part of the
       rewrite. On Delta-capable clusters this whole helper collapses to
       `option("mergeSchema", "true")`.
     """
+    if not spark.catalog.tableExists(target):
+        overwrite_via_staging(spark, target, incoming)
+        return
     existing = spark.table(target)
     new_cols = [c for c in incoming.columns if c not in existing.columns]
     if not new_cols:

@@ -70,6 +70,25 @@ def merge_upsert(
     return kept_target.unionByName(source.select(*target.columns))
 
 
+#: Key-hash bucket partitioning (silver tables, gold dims). Because the
+#: bucket is a pure function of the keys, a key NEVER moves partitions
+#: and an upsert can never empty one — so a merge reads and rewrites only
+#: the buckets its incoming keys hash into (dynamic partition overwrite),
+#: O(touched buckets) instead of O(table). The bucket count is a
+#: constant, not a knob: a merge bucketing its incoming keys with a
+#: different count than the table was written with would route a key's
+#: update to a different partition than its current row, leaving both.
+#: 16 suits the tested scales (one bucket should be about
+#: executor-memory-sized); changing it requires a full rewrite of every
+#: bucketed table.
+N_BUCKETS = 16
+
+
+def bucket_expr(keys: list[str]):
+    """The key-hash bucket of ``keys``: ``pmod(xxhash64(keys), N_BUCKETS)``."""
+    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(N_BUCKETS))
+
+
 def physical_partition_cols(spark, table: str) -> list[str]:
     """The table's real partition columns from catalog metadata. A column
     merely *named* like a partition column is not enough: dynamic
@@ -153,14 +172,24 @@ def merge_into_table(
     ``localCheckpoint`` self-overwrite guard then materializes only the
     touched slice, not the table.
 
+    An absent target is created from the source through the versioned
+    swap, partitioned on ``partition_col`` so later merges take the
+    touched-partition path, and deduped keep-latest first when
+    ``order_col`` is given, as every merge dedups its source.
+
     Fallback (no/unknown partitioning): full-table merge + rewrite.
     """
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+    from spaceparts_data_pipeline_spark.operators import maintenance
 
+    if not spark.catalog.tableExists(table):
+        if order_col is not None:
+            source = dedup_latest(source, order_col=order_col, keys=keys)
+        maintenance.overwrite_via_staging(spark, table, source, partition_by=partition_col)
+        return
     # Version-managed tables (reader-isolated versioned swap) store data in
     # `{table}__v{N}` behind a view — the partition-metadata probe and
     # the insertInto must address the physical table.
-    phys = resolve_physical(spark, table)
+    phys = maintenance.resolve_physical(spark, table)
     target = spark.table(phys)
     if (
         partition_col
@@ -175,12 +204,8 @@ def merge_into_table(
         # checkpoint partition writes a file into every touched dir —
         # tasks × dirs small files accumulating run over run until
         # compaction. The same alignment overwrite_via_staging applies.
-        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_partitions
-
-        overwrite_partitions(spark, phys, merged.repartition(partition_col))
+        maintenance.overwrite_partitions(spark, phys, merged.repartition(partition_col))
     else:
-        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
         merged = merge_upsert(target, source.select(*target.columns), keys, order_col=order_col)
         # versioned swap: materializes the merge before the old version drops,
         # so no executor-memory checkpoint and a crash can't lose the table.
@@ -190,8 +215,8 @@ def merge_into_table(
         # not actually partitioned on) — a bare full rewrite would
         # silently promote an UNPARTITIONED new version, and every later
         # merge would permanently take this full-rewrite path.
-        overwrite_via_staging(spark, table, merged,
-                              partition_by=physical_partition_cols(spark, phys) or None)
+        maintenance.overwrite_via_staging(
+            spark, table, merged, partition_by=physical_partition_cols(spark, phys) or None)
 
 
 def scd2_history(

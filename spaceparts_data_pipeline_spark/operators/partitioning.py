@@ -35,17 +35,12 @@ def write_bucketed(
     """Persist hash-bucketed by ``keys`` (and optionally sorted within
     buckets, which also gives parquet min/max skipping on the sort key).
 
-    Hardened against the crash-orphan wedge exactly like
+    Hardened against the crash-orphan wedge by the same crumb retry as
     ``maintenance.safe_save_as_table`` (which cannot express
     ``bucketBy``): a SIGKILL mid-``saveAsTable`` leaves a catalog-less
     warehouse directory, and every later create of the same table
-    would die with LOCATION_ALREADY_EXISTS until manual cleanup.
-    Recovery is reactive and narrowly gated on the structural error
-    condition + the catalog NOT knowing the table, with the same
-    freshness grace against racing first creates."""
+    would die with LOCATION_ALREADY_EXISTS until manual cleanup."""
     from spaceparts_data_pipeline_spark.operators import maintenance as mt
-
-    spark = df.sparkSession
 
     def _write():
         writer = df.write.mode(mode).bucketBy(num_buckets, *keys)
@@ -53,17 +48,7 @@ def write_bucketed(
             writer = writer.sortBy(*sort_by)
         writer.saveAsTable(table)
 
-    try:
-        _write()
-    except Exception as exc:
-        _, bare = mt._split_db(table)
-        if not (mt._is_location_collision(exc, bare)
-                and not spark.catalog.tableExists(table)):
-            raise
-        if not mt._clear_orphan_location(spark, table, force=True,
-                                         min_age_s=mt.DEFAULT_ORPHAN_GRACE_S):
-            raise
-        _write()
+    mt._retry_past_crumb(df.sparkSession, table, _write, mt.DEFAULT_ORPHAN_GRACE_S)
 
 
 def dedup_latest_agg(

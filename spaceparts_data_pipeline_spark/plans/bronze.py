@@ -80,13 +80,8 @@ def run_incremental(
         n=F.count(F.lit(1)), mx=watermark_max(ts_col))
     incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        target = f"bronze_{table}"
-        if spark.catalog.tableExists(target):
-            maintenance.append_with_evolution(spark, incoming, target)
-        else:
-            # versioned from the first write: a later schema-drift
-            # rewrite or compaction is then an ordinary swap
-            maintenance.overwrite_via_staging(spark, target, incoming)
+        # the first run's append creates the table (a version view)
+        maintenance.append_with_evolution(spark, incoming, f"bronze_{table}")
         stats = metrics()
     finally:
         incoming.unpersist()

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spaceparts_data_pipeline_spark.functions.scalars import document_category
-from spaceparts_data_pipeline_spark.operators.merge import merge_into_table
+from spaceparts_data_pipeline_spark.operators.merge import bucket_expr, merge_into_table
 from spaceparts_data_pipeline_spark.plans import logs
 
 
@@ -169,8 +169,9 @@ class GoldModel:
     #: (partition_col, expr_factory): a column *derived from the merge
     #: keys* (so an upsert never moves a row across partitions). Facts
     #: partition by month of the business date — the reference's
-    #: watermark-window access pattern; dims by a 16-way key-hash bucket.
-    #: Incremental merges then rewrite only touched partitions.
+    #: watermark-window access pattern; dims by the key-hash bucket
+    #: (``merge.bucket_expr``). Incremental merges then rewrite only
+    #: touched partitions.
     partition: tuple | None = None
 
 
@@ -178,17 +179,13 @@ def _month_of(col: str):
     return lambda: F.trunc(col, "month")
 
 
-def _bucket_of(col: str, n: int = 16):
-    return lambda: F.pmod(F.xxhash64(col), F.lit(n))
-
-
 MODELS: list[GoldModel] = [
     GoldModel("gold_dim_customer", build_dim_customer, ["customer_key"],
               source_tables=["dim_customers", "dim_regions", "dim_employees"],
-              partition=("p_bucket", _bucket_of("customer_key"))),
+              partition=("p_bucket", lambda: bucket_expr(["customer_key"]))),
     GoldModel("gold_dim_product", build_dim_product, ["product_key"],
               source_tables=["dim_products", "dim_brands"],
-              partition=("p_bucket", _bucket_of("product_key"))),
+              partition=("p_bucket", lambda: bucket_expr(["product_key"]))),
     GoldModel("gold_fact_sales", build_fact_sales,
               ["customer_key", "product_key", "billing_date", "billing_document_number",
                "billing_document_line_item_number"],

@@ -1,10 +1,12 @@
 """Silver layer: the schema-generic cleaning pipeline per table
 (SURVEY.md §3.2 step 3; reference Silver_full_load cell 8).
 
-Per table: standardize types (name/dtype dispatch) → keep-latest dedup
-(inferred keys) → all-null drop → quarantine split (side sink) → silver
-metadata → write. Incremental mode implements the silver upsert flavor:
-union existing+incoming then keep-latest overwrite (U1 + W1/W2).
+Per table, one path for both load modes (``_land``): standardize types
+(name/dtype dispatch) → keep-latest dedup (inferred keys) → all-null
+drop → quarantine split → silver metadata → write → quarantine side
+sink. The modes differ only in the write: a full load overwrites the
+table, an incremental load upserts its slice into the buckets it
+touches (union existing+incoming then keep-latest, U1 + W1/W2).
 
 ``silver_<t>`` and ``silver_quarantine_<t>`` are version views from
 their first write (``maintenance.overwrite_via_staging``); later writes
@@ -12,8 +14,8 @@ address the physical version behind the view.
 
 No blind repartition (the reference's `optimize_partitioning` heuristic
 is replaced by AQE coalescing, SURVEY.md §4) and no barrier count: the
-full load's row and quarantine counts are metrics observed on the
-persisted parent, computed by the write that builds its cache.
+row and quarantine counts are metrics observed on the persisted parent,
+computed by the write that builds its cache.
 """
 
 from __future__ import annotations
@@ -23,53 +25,45 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spaceparts_data_pipeline_spark.operators import maintenance
 from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest, infer_keys
-from spaceparts_data_pipeline_spark.operators.merge import physical_partition_cols, upsert_union_dedup
+from spaceparts_data_pipeline_spark.operators.merge import (  # noqa: F401 - N_BUCKETS re-exported
+    N_BUCKETS, bucket_expr, collect_touched_partitions, physical_partition_cols,
+    upsert_union_dedup,
+)
 from spaceparts_data_pipeline_spark.operators.quality import (
     bad_row, drop_all_null, quarantine_predicates, quarantine_split, watermark_max,
 )
 from spaceparts_data_pipeline_spark.operators.standardize import standardize_types
 from spaceparts_data_pipeline_spark.plans import logs
 
-#: Silver tables are partitioned by a key-hash bucket. Because the bucket
-#: is a pure function of the dedup keys, a key NEVER moves partitions and
-#: an upsert can never empty one — so an incremental merge reads and
-#: rewrites only the buckets its incoming keys hash into (dynamic
-#: partition overwrite), O(touched buckets) instead of O(table). The
-#: bucket count is a constant, not a knob: a merge bucketing its incoming
-#: keys with a different count than the table was written with would
-#: route a key's update to a different partition than its current row,
-#: leaving both. 16 suits the tested scales (one bucket should be about
-#: executor-memory-sized); changing it requires a full rewrite of every
-#: silver table.
+#: Silver tables are partitioned by the key-hash bucket of their dedup
+#: keys (``merge.bucket_expr``), so an incremental merge rewrites only
+#: the buckets its incoming keys hash into.
 PARTITION_COL = "p_bucket"
-N_BUCKETS = 16
 
 
-def _bucket_expr(keys: list[str]):
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(N_BUCKETS))
+def _aligned(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One writer per bucket (AQE coalesces), so each partition dir gets
+    few, large files instead of one per task, and key-sorted files, so
+    parquet row-group min/max statistics prune downstream key lookups
+    (the Parquet analog of the reference's dataSkippingNumIndexedCols +
+    OPTIMIZE clustering, SURVEY.md §4). PARTITION_COL leads the sort:
+    the partitioned file writer requires task rows ordered by the
+    partition columns and injects its OWN sort (destroying this one)
+    unless the incoming ordering already satisfies that requirement as
+    a prefix."""
+    return df.repartition(F.col(PARTITION_COL)).sortWithinPartitions(PARTITION_COL, *keys)
 
 
-def _write_partitioned(clean: DataFrame, target: str, keys: list[str],
-                       sort_by: list[str] | None = None) -> None:
-    from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-    out = clean.withColumn(PARTITION_COL, _bucket_expr(keys))
-    # one shuffle by bucket so each partition dir gets few, large files
-    # (AQE coalesces); without it every task writes a file per bucket.
-    out = out.repartition(F.col(PARTITION_COL))
-    if sort_by:
-        # PARTITION_COL leads the sort: the partitioned file writer
-        # requires task rows ordered by the partition columns and injects
-        # its OWN sort (destroying this one) unless the incoming ordering
-        # already satisfies that requirement as a prefix.
-        out = out.sortWithinPartitions(PARTITION_COL, *sort_by)
+def _write_partitioned(clean: DataFrame, target: str, keys: list[str]) -> None:
     # versioned swap: the new version is written in place and the view
     # repoint commits it, so a crash mid-write leaves the current one intact;
-    # align_writers=False — the bucket repartition + sort above IS the
-    # alignment, and a second repartition would destroy the sort
-    overwrite_via_staging(clean.sparkSession, target, out,
-                          partition_by=PARTITION_COL, align_writers=False)
+    # align_writers=False — _aligned IS the alignment, and a second
+    # repartition would destroy the sort
+    out = _aligned(clean.withColumn(PARTITION_COL, bucket_expr(keys)), keys)
+    maintenance.overwrite_via_staging(clean.sparkSession, target, out,
+                                      partition_by=PARTITION_COL, align_writers=False)
 
 
 #: Per-run stamp columns excluded from the quarantine identity: the same
@@ -112,27 +106,21 @@ def _append_quarantine_dedup(spark: SparkSession, sink: str, quarantined: DataFr
     null-safe conjunction over every column shuffling the whole wide
     sink each run (round-3 verdict "what's wrong" #3); columnar scans
     read just that one column, and at scale the sink can be bucketed by
-    it. The sink's first write goes through the versioned swap, so a
-    later schema-drift rewrite (``append_with_evolution``) is an
-    ordinary swap. Caveats, both bounded: a 64-bit collision
-    would silently drop one bad row from the audit sink (~n²/2⁶⁵ odds on
-    a small table), and additive schema drift changes the hash basis so
-    one overlap window may re-append after a drift.
+    it. The first append creates the sink (a version view). Caveats,
+    both bounded: a 64-bit collision would silently drop one bad row
+    from the audit sink (~n²/2⁶⁵ odds on a small table), and additive
+    schema drift changes the hash basis so one overlap window may
+    re-append after a drift.
     """
-    from spaceparts_data_pipeline_spark.operators.maintenance import append_with_evolution
-
     id_cols = [c for c in quarantined.columns if c not in _QUARANTINE_STAMPS]
     out = quarantined.withColumn("identity_hash", _identity_hash(id_cols))
-    if not spark.catalog.tableExists(sink):
-        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
-        overwrite_via_staging(spark, sink, out)
-        return
-    fresh = out.join(spark.table(sink).select("identity_hash"), ["identity_hash"], "left_anti")
-    if fresh.isEmpty() is False:
-        # schema drift (source grew a column) rewrites the sink once
-        # with the union schema, as bronze's append does
-        append_with_evolution(spark, fresh, sink)
+    if spark.catalog.tableExists(sink):
+        out = out.join(spark.table(sink).select("identity_hash"), ["identity_hash"], "left_anti")
+        if out.isEmpty():
+            return
+    # schema drift (source grew a column) rewrites the sink once with the
+    # union schema, as bronze's append does
+    maintenance.append_with_evolution(spark, out, sink)
 
 
 def transform(
@@ -173,45 +161,51 @@ def transform(
     return clean, quarantined, parent, counts
 
 
+def _land(
+    spark: SparkSession,
+    table: str,
+    src: DataFrame,
+    execution_id: str,
+    order_col: str,
+    horizon,
+    write: Callable[[DataFrame], None],
+) -> dict:
+    """Clean ``src`` into ``silver_<table>`` through ``write(clean)``, then
+    append its quarantined rows to the side sink when there are any.
+
+    The standardize→dedup plan runs ONCE: ``write`` reads every clean
+    row, so it builds the persisted parent's cache and, with it, the
+    observed row and quarantine counts; the quarantine append is then a
+    cache scan. The clean side lands first. A crash between the two
+    writes leaves the sink short, and a rerun re-derives the missing
+    rows through the sink's identity anti-join."""
+    clean, quarantined, parent, counts = transform(
+        src, table, execution_id, order_col=order_col, horizon=horizon
+    )
+    try:
+        write(clean)
+        n = counts()
+        if n["quarantined"]:
+            _append_quarantine_dedup(spark, f"silver_quarantine_{table}", quarantined)
+    finally:
+        parent.unpersist()
+    return {"table": table, "status": "success",
+            "records": n["rows"] - n["quarantined"], "quarantined": n["quarantined"]}
+
+
 def run_full(
     spark: SparkSession,
     table: str,
     execution_id: str | None = None,
     source_table: str | None = None,
     horizon=None,
-    sort_by: list[str] | None = None,
     order_col: str = "dwcreateddate",
 ) -> dict:
-    """``sort_by``: sort rows within each written file so parquet
-    row-group min/max statistics prune downstream key lookups (the
-    Parquet analog of the reference's dataSkippingNumIndexedCols +
-    OPTIMIZE clustering, SURVEY.md §4). Defaults to the inferred dedup
-    keys — the columns downstream merges and lookups filter on."""
-    execution_id = execution_id or logs.new_execution_id()
-    src = spark.table(source_table or f"bronze_{table}")
-    # The standardize→dedup plan runs ONCE: the clean write builds the
-    # persisted parent's cache and, with it, the observed row and
-    # quarantine counts; the quarantine append is then a cache scan.
-    # The clean side lands first. A crash between the two writes leaves
-    # the sink short, and a rerun re-derives the missing rows through
-    # the sink's identity anti-join.
-    clean, quarantined, parent, counts = transform(
-        src, table, execution_id, order_col=order_col, horizon=horizon
-    )
-    try:
-        keys = infer_keys(clean.columns, order_col)
-        _write_partitioned(clean, f"silver_{table}", keys,
-                           sort_by=sort_by if sort_by is not None else keys)
-        n = counts()
-        if n["quarantined"]:
-            # same exactly-once identity path as incremental: a full
-            # reload over a populated sink must not duplicate rows prior
-            # runs already quarantined
-            _append_quarantine_dedup(spark, f"silver_quarantine_{table}", quarantined)
-    finally:
-        parent.unpersist()
-    return {"table": table, "status": "success",
-            "records": n["rows"] - n["quarantined"], "quarantined": n["quarantined"]}
+    """Overwrite ``silver_<table>`` with the cleaned bronze table."""
+    return _land(spark, table, spark.table(source_table or f"bronze_{table}"),
+                 execution_id or logs.new_execution_id(), order_col, horizon,
+                 lambda clean: _write_partitioned(clean, f"silver_{table}",
+                                                  infer_keys(clean.columns, order_col)))
 
 
 def run_incremental(
@@ -223,12 +217,8 @@ def run_incremental(
     control_table: str = "silver_incremental_control",
     horizon=None,
 ) -> dict:
-    """Silver upsert: clean the incoming slice, union with the existing
-    rows OF THE TOUCHED KEY-HASH BUCKETS only, keep-latest per inferred
-    key, dynamic-partition-overwrite those buckets (U1+W1/W2 — the
-    reference's silver merge strategy, at O(touched buckets) I/O).
-    Schema drift (incoming adds columns) falls back to a full rewrite
-    with the union schema, like bronze's append-with-evolution.
+    """Silver upsert of the incoming slice (``_merge_buckets``).
+    ``records`` counts the rows this run landed, not the table.
 
     The CONTROL row (next run's watermark) lands per table, like
     bronze.run_incremental's; the watermark skips rows past the
@@ -238,77 +228,45 @@ def run_incremental(
     wm_of = None
     if order_col in incoming.columns:
         incoming, wm_of = logs.observe(incoming, wm=watermark_max(order_col, horizon))
-    # Same single-execution pattern as run_full: the incoming slice's
-    # clean side feeds a touched-partition collect AND the merge write,
-    # the quarantine side an isEmpty AND an anti-join append — four
-    # consumers, one cached transform.
-    clean, quarantined, parent, _ = transform(
-        incoming, table, execution_id, order_col=order_col, horizon=horizon
-    )
-    try:
-        n = _merge_incremental(spark, table, clean, quarantined, order_col)
-        wm = wm_of()["wm"] if wm_of else None
-        logs.append_control(spark, control_table, table, execution_id, wm, "success", n)
-    finally:
-        parent.unpersist()
-    return {"table": table, "status": "success", "records": n}
+    res = _land(spark, table, incoming, execution_id, order_col, horizon,
+                lambda clean: _merge_buckets(spark, f"silver_{table}", clean, order_col))
+    wm = wm_of()["wm"] if wm_of else None
+    logs.append_control(spark, control_table, table, execution_id, wm, "success", res["records"])
+    return res
 
 
-def _merge_incremental(
-    spark: SparkSession,
-    table: str,
-    clean: DataFrame,
-    quarantined: DataFrame,
-    order_col: str,
-) -> int:
-    """Merge the cleaned slice into ``silver_<table>``, append its
-    quarantined rows; returns the table's row count."""
-    from spaceparts_data_pipeline_spark.operators.maintenance import (
-        overwrite_partitions, resolve_physical,
-    )
-
-    target = f"silver_{table}"
-    if spark.catalog.tableExists(target):
-        # the target is a version view; the partition probe and the
-        # insertInto need the physical table behind it
-        phys = resolve_physical(spark, target)
-        existing = spark.table(phys)
-        keys = infer_keys(existing.columns, order_col)
-        partitioned = (
-            PARTITION_COL in physical_partition_cols(spark, phys)
-            and all(c in existing.columns for c in clean.columns)
-        )
-        if partitioned:
-            from spaceparts_data_pipeline_spark.operators.merge import (
-                collect_touched_partitions,
-            )
-
-            clean_p = clean.withColumn(PARTITION_COL, _bucket_expr(keys))
-            # bounded by contract: PARTITION_COL is a hash bucket
-            # (N_BUCKETS values), never row-like cardinality
-            parts = collect_touched_partitions(clean_p, PARTITION_COL)
-            sub = existing.filter(F.col(PARTITION_COL).isin(parts))
-            merged = upsert_union_dedup(sub, clean_p, keys=keys, order_col=order_col)
-            # align writers to the touched buckets (one file per bucket,
-            # not tasks × buckets) and restore the full-write path's
-            # key-sorted files (parquet min/max pruning) on the
-            # rewritten buckets too
-            merged = (merged.select(*existing.columns)
-                      .repartition(F.col(PARTITION_COL))
-                      .sortWithinPartitions(PARTITION_COL, *keys))
-            # the checkpoint inside materializes only the touched buckets
-            overwrite_partitions(spark, phys, merged)
-        else:
-            # schema drift (incoming adds columns): one full rewrite with
-            # the union schema. No checkpoint needed: the versioned swap
-            # inside _write_partitioned materializes before the old
-            # version drops.
-            base = existing.drop(PARTITION_COL) if PARTITION_COL in existing.columns else existing
-            merged = upsert_union_dedup(base, clean, keys=keys, order_col=order_col)
-            _write_partitioned(merged, target, infer_keys(merged.columns, order_col))
-    else:
-        keys = infer_keys(clean.columns, order_col)
-        _write_partitioned(clean, target, keys, sort_by=keys)
-    if quarantined.isEmpty() is False:
-        _append_quarantine_dedup(spark, f"silver_quarantine_{table}", quarantined)
-    return spark.table(target).count()
+def _merge_buckets(spark: SparkSession, target: str, clean: DataFrame, order_col: str) -> None:
+    """Upsert the cleaned slice into ``target``: union the existing rows
+    OF THE TOUCHED KEY-HASH BUCKETS only, keep-latest per inferred key,
+    dynamic-partition-overwrite those buckets (U1+W1/W2 — the
+    reference's silver merge strategy, at O(touched buckets) I/O). A
+    first write creates the table; schema drift (the slice adds columns)
+    or an unpartitioned version gets one full rewrite with the union
+    schema, like bronze's append-with-evolution."""
+    if not spark.catalog.tableExists(target):
+        _write_partitioned(clean, target, infer_keys(clean.columns, order_col))
+        return
+    # the target is a version view; the partition probe and the
+    # insertInto need the physical table behind it
+    phys = maintenance.resolve_physical(spark, target)
+    existing = spark.table(phys)
+    # keys from the TARGET: a slice may carry a subset of the columns,
+    # and its buckets must be the ones the table was written by
+    keys = infer_keys(existing.columns, order_col)
+    if (PARTITION_COL not in physical_partition_cols(spark, phys)
+            or not set(clean.columns) <= set(existing.columns)):
+        # no checkpoint needed: the versioned swap materializes the
+        # rewrite before the old version drops
+        merged = upsert_union_dedup(existing.drop(PARTITION_COL), clean,
+                                    keys=keys, order_col=order_col)
+        _write_partitioned(merged, target, infer_keys(merged.columns, order_col))
+        return
+    clean_p = clean.withColumn(PARTITION_COL, bucket_expr(keys))
+    # bounded by contract: PARTITION_COL is a hash bucket (N_BUCKETS
+    # values), never row-like cardinality
+    parts = collect_touched_partitions(clean_p, PARTITION_COL)
+    sub = existing.filter(F.col(PARTITION_COL).isin(parts))
+    merged = upsert_union_dedup(sub, clean_p, keys=keys, order_col=order_col)
+    # the checkpoint inside materializes only the touched buckets
+    maintenance.overwrite_partitions(
+        spark, phys, _aligned(merged.select(*existing.columns), keys))

@@ -208,31 +208,13 @@ def stream_upsert(
     ``target_table`` with the engine's keyed merge (dedup-latest source,
     null-safe match). When the target is partitioned on ``partition_col``
     (a function of the keys), each micro-batch rewrites only the touched
-    partitions — O(batch), not O(table), per trigger. Returns the
-    StreamingQuery (availableNow)."""
+    partitions — O(batch), not O(table), per trigger. The first batch
+    creates the target, partitioned on ``partition_col`` and one row per
+    key (``merge_into_table``). Returns the StreamingQuery
+    (availableNow)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not spark.catalog.tableExists(target_table):
-            # Create the target through the versioned swap, with the
-            # physical partitioning the merge path expects — an
-            # unpartitioned target would put every later batch on the
-            # O(table) full-rewrite fallback instead of O(touched
-            # partitions). Keep-latest dedup FIRST: the merge path dedups
-            # its source to one row per key, and a batch-0 carrying two
-            # versions of one key must not create a target that
-            # permanently violates that invariant (keys never updated
-            # again would stay duplicated forever).
-            from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest
-            from spaceparts_data_pipeline_spark.operators.maintenance import (
-                overwrite_via_staging,
-            )
-
-            overwrite_via_staging(spark, target_table,
-                                  dedup_latest(batch_df, order_col=order_col, keys=keys),
-                                  partition_by=partition_col)
-            return
-        target = spark.table(target_table)
-        merge_into_table(spark, target_table, batch_df.select(*target.columns), keys,
+        merge_into_table(spark, target_table, batch_df, keys,
                          partition_col=partition_col, order_col=order_col)
 
     return (

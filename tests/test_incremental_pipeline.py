@@ -287,9 +287,9 @@ def test_silver_full_single_transform_execution(spark, inc_db, monkeypatch):
 
 
 def test_silver_incremental_single_transform_execution(spark, inc_db, monkeypatch):
-    """run_incremental has four consumers of the transform (touched-bucket
-    collect, merge write, quarantine isEmpty, quarantine anti-join append)
-    — same persisted-parent contract as run_full."""
+    """run_incremental has three consumers of the transform (touched-bucket
+    collect, merge write, quarantine anti-join append) — same
+    persisted-parent contract as run_full."""
     from pyspark.storagelevel import StorageLevel
 
     from spaceparts_data_pipeline_spark.plans import bronze, silver
@@ -316,7 +316,7 @@ def test_silver_sorted_write(spark, inc_db):
     from spaceparts_data_pipeline_spark.plans import bronze, silver
     rows = [(f"o{i}", float(i), T0) for i in range(100)]
     bronze.run_full(spark, spark.createDataFrame(rows, SCHEMA), "fact_sorted")
-    silver.run_full(spark, "fact_sorted", sort_by=["order_number"])
+    silver.run_full(spark, "fact_sorted")
     t = spark.table("silver_fact_sorted")
     assert t.count() == 100
     assert t.filter(F.col("order_number") == "o42").count() == 1
@@ -550,5 +550,5 @@ def test_bronze_incremental_append_reads_one_snapshot(spark, inc_db, monkeypatch
     src2 = spark.createDataFrame([("o2", 2.0, T1)], SCHEMA)
     bronze.run_incremental(spark, src1, "snapfact", overlap=dt.timedelta(0))
     out = bronze.run_incremental(spark, src2, "snapfact", overlap=dt.timedelta(0))
-    assert seen == [True]            # append path saw a persisted frame
+    assert seen == [True, True]      # both appends (the first creates) saw a persisted frame
     assert out["records"] == 1 and out["watermark"] == T1

@@ -127,6 +127,37 @@ def test_full_layers_report_the_rows_they_wrote(spark, jb_db):
     assert spark.table("gold_jb").count() == 40
 
 
+def test_silver_incremental_reports_the_rows_it_landed(spark, jb_db):
+    """An incremental tick reports what it landed: ``records`` counts
+    the slice's clean rows (updates and new keys), not the table, and
+    matches the control row; ``quarantined`` counts the slice's bad
+    rows, which the sink gains exactly once."""
+    rows = [(f"o{i}", float(i), T0) for i in range(20)] + [("f0", 0.0, FUTURE)]
+    bronze.run_full(spark, _rows(spark, rows), "inc_land_jb")
+    silver.run_full(spark, "inc_land_jb", horizon=HORIZON)
+    sink = "silver_quarantine_inc_land_jb"
+    before = spark.table(sink).count()
+
+    t1 = T0 + dt.timedelta(hours=1)
+    clean = [("o0", 100.0, t1), ("o1", 101.0, t1), ("o2", 102.0, t1),
+             ("n0", 1.0, t1), ("n1", 2.0, t1)]
+    bad = [("f1", 1.0, FUTURE), ("f2", 2.0, FUTURE)]
+    res = silver.run_incremental(spark, "inc_land_jb", _rows(spark, clean + bad),
+                                 horizon=HORIZON)
+    assert (res["records"], res["quarantined"]) == (len(clean), len(bad))
+    control = spark.table("silver_incremental_control").filter(
+        F.col("table_name") == "inc_land_jb").collect()
+    assert [r["record_count"] for r in control] == [len(clean)]
+    assert control[0]["last_extracted_timestamp"] == t1
+    assert spark.table(sink).count() == before + len(bad)
+    assert spark.table("silver_inc_land_jb").count() == 22
+
+    res = silver.run_incremental(spark, "inc_land_jb", _rows(spark, [("o3", 103.0, t1)]),
+                                 horizon=HORIZON)
+    assert (res["records"], res["quarantined"]) == (1, 0)
+    assert spark.table(sink).count() == before + len(bad)
+
+
 def test_empty_and_unscreened_inputs_finish(spark, jb_db):
     """Observed counts whose node adaptive execution dropped (an empty
     shuffle above it) fall back instead of blocking: an empty source,
