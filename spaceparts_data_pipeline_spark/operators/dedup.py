@@ -19,6 +19,8 @@ bucketed by the same keys so downstream joins/dedups reuse the layout.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -126,8 +128,10 @@ def update_fingerprint_store(
     fingerprint appearing twice (e.g. a retried run that appended before
     failing) changes nothing — re-running the same batch is idempotent
     by construction (its fingerprints are all in the store, so zero
-    survivors, so zero new appends). No MERGE on the hot path; file
-    count growth is bounded by :func:`maybe_compact_store`.
+    survivors, so zero new appends). No MERGE on the hot path. The batch
+    funnel bounds file count growth with :func:`maybe_compact_store`;
+    the streaming ingests do not compact, so their stores grow a file
+    set per micro-batch.
     """
     survivors.select(fp_col).write.mode("append").parquet(store_path)
 
@@ -137,9 +141,13 @@ def read_store(spark, store_path: str) -> DataFrame | None:
     only state that legitimately means an empty screen) from any other
     read failure (→ raised). A bare try/except around the read is the
     bug this exists to prevent: a transient FS fault or corrupt footer
-    would silently read as 'empty store' and re-admit every duplicate."""
-    fs, jvm = _hadoop_fs(spark, store_path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(store_path)):
+    would silently read as 'empty store' and re-admit every duplicate.
+
+    'Never created' means no committed data file, not a missing
+    directory: a first append killed mid-commit leaves only its
+    ``_temporary`` tree, which would otherwise fail every later read
+    with ``UNABLE_TO_INFER_SCHEMA``. A failed listing still raises."""
+    if not has_data_files(spark, store_path):
         return None
     return spark.read.parquet(store_path)
 
@@ -187,6 +195,56 @@ def data_file_count(spark, path: str) -> int:
     append-only stores are compacted on: every ingest run appends a few
     files, so count grows linearly with runs regardless of row volume."""
     return sum(1 for _ in _data_files(spark, path))
+
+
+def land_partition(payload: DataFrame, root: str, part: dict,
+                   id_col: str) -> DataFrame | None:
+    """Land ``payload`` as the partition ``part`` (partition column →
+    value) of the parquet dataset at ``root`` and return the rows the
+    partition durably holds, or None when it holds none. This is the
+    exactly-once corpus commit of the batch funnel and both streaming
+    ingests; their screen-store appends run after it and derive from
+    the returned rows.
+
+    - Dynamic partition overwrite: a replayed run or micro-batch
+      rewrites its own partition instead of appending twice, and an
+      empty payload touches no partition. The mode is a per-write
+      option, not a session conf: foreachBatch runs under a cloned
+      session with isolated conf, where an outer-session conf would
+      silently not apply.
+    - Replay union: when the partition already holds data, its rows are
+      unioned back in before the rewrite. A store append killed
+      mid-commit leaves some of the run's store rows visible, so the
+      replay's screen rejects those docs, and a bare rewrite would
+      delete durable rows whose store rows remain: permanent loss. The
+      rows are deterministic re-derivations of the same docs, so the
+      id-keyed dropDuplicates keeps identical content either way. The
+      probe is a filesystem listing; the read runs only on a replay.
+    - Store appends derive from the returned rows, so a replay whose
+      screens already reject every doc still completes an append that
+      died last time (duplicate store rows change no decision).
+
+    The partition is addressed by its directory, named with Spark's own
+    path escaping, and read back from that directory: no partition-type
+    inference, so run ids ``7`` and ``007`` stay two partitions. The
+    returned rows carry the payload's columns, not the partition
+    columns.
+    """
+    spark = payload.sparkSession
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    part_dir = os.path.join(root, *(f"{escape(c)}={escape(str(v))}" for c, v in part.items()))
+    if has_data_files(spark, part_dir):
+        durable = spark.read.parquet(part_dir).select(
+            *(F.col(f.name).cast(f.dataType).alias(f.name) for f in payload.schema.fields))
+        # materialize BEFORE the overwrite: the union reads the very
+        # files the commit will replace — localCheckpoint finishes the
+        # read and cuts the lineage to a leaf first
+        payload = payload.unionByName(durable).dropDuplicates([id_col]).localCheckpoint()
+    for c, v in part.items():
+        payload = payload.withColumn(c, F.lit(v))
+    payload.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *part).parquet(root)
+    return spark.read.parquet(part_dir) if has_data_files(spark, part_dir) else None
 
 
 def compact_store(spark, store_path: str) -> dict:

@@ -12,11 +12,13 @@ run first over the full batch; each dedup stage shrinks the set the
 next (more expensive) stage sees; contamination — the only stage that
 touches a second dataset — sees only final candidates.
 
-Exactness and replay: the screen stores are append-only with DISTINCT
-screen semantics (see ``operators.dedup``), so re-running a
-batch after any crash admits nothing and appends nothing effective; the
-corpus itself is written under a per-run directory, so a re-run
-overwrites its own output only.
+Exactness and replay: the corpus is committed by
+:func:`operators.dedup.land_partition` into a per-run partition, and
+every store append derives from the rows it returns, so a re-run after
+a crash at any point, a partial store append included, rewrites its own
+partition only and keeps every durable doc. The screen stores are
+append-only with DISTINCT screen semantics, so duplicate appends change
+no decision.
 
 Scale shape: text is never a shuffle key anywhere in the chain — the
 quality/redaction stages are pure projections, both dedup screens move
@@ -387,30 +389,13 @@ def run_corpus_ingest(
             stats["after_budget"] = admitted.count()
             stats["sec_budget"] = _tick()
 
-        # 6. durable outputs FIRST, store updates after — the exact crash
-        # ordering proven in stream_ingest_dedup: the corpus is partitioned
-        # by run_id and written with DYNAMIC overwrite (an empty replay
-        # touches no partition, so a half-finished run's corpus survives),
-        # and BOTH store appends derive from the durable corpus, so a
-        # replay whose screens already find the fingerprints still
-        # completes any store append that crashed last time (duplicate
-        # appends are harmless under the stores' DISTINCT screen semantics).
-        corpus_root = os.path.join(out_dir, "corpus")
-        manifest_root = os.path.join(out_dir, "manifest")
-        admitted.withColumn("run_id", F.lit(run_id)).write.mode(
-            "overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            "run_id").parquet(corpus_root)
-        # "No corpus yet" means NO DATA FILES, not "dir missing":
-        # an all-screened first run's empty dynamic overwrite still
-        # creates the (empty) directory, and reading it would raise
-        # UNABLE_TO_INFER_SCHEMA. has_data_files distinguishes that
-        # from a real read failure, which must still raise — the
-        # store appends below being silently skipped with admitted
-        # docs already durable would be a permanent re-admit split.
-        if not dedup.has_data_files(spark, corpus_root):
+        # 6. durable outputs FIRST, store updates after: land_partition
+        # commits the run's corpus partition (replay-safe under a partial
+        # store append) and every append below derives from what landed
+        durable = dedup.land_partition(
+            admitted, os.path.join(out_dir, "corpus"), {"run_id": run_id}, id_col)
+        if durable is None:
             return stats
-        durable = spark.read.parquet(corpus_root).filter(
-            F.col("run_id") == run_id).drop("run_id")
         if shuffle_seed is not None:
             order = text.corpus_shuffle(
                 durable, shuffle_seed, n_shards=shuffle_shards, id_col=id_col)
@@ -427,7 +412,7 @@ def run_corpus_ingest(
             )
         manifest.withColumn("run_id", F.lit(run_id)).write.mode(
             "overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            "run_id").parquet(manifest_root)
+            "run_id").parquet(os.path.join(out_dir, "manifest"))
         stats["sec_write_pack"] = _tick()
 
         durable.select(F.md5(text_col).alias("fingerprint")).write.mode(
@@ -501,46 +486,22 @@ def run_substring_dedup_pass(
     :func:`..operators.text.substring_dedup`); rerunning the pass
     overwrites ``corpus_clean/`` idempotently.
 
-    Identity: ``doc_id`` is unique only WITHIN a run (the cross-run
-    screens dedupe by text fingerprint, not id), so the dedup and the
-    join back both key on the composite ``(run_id, doc_id)`` — two
-    runs admitting different docs under one doc_id stay two documents
-    with independent cut spans, and the join can never fan out.
+    Identity: the dedup and the join back key on the composite
+    ``(run_id, doc_id)`` (see :func:`_corpus_wide_pass`), so two runs
+    admitting different docs under one doc_id keep independent cut
+    spans.
     """
-    corpus_root = os.path.join(out_dir, "corpus")
-    clean_root = os.path.join(out_dir, "corpus_clean")
-    if not dedup.has_data_files(spark, corpus_root):
-        return {"input": 0, "kept": 0, "tokens_removed": 0, "out": clean_root}
-    # \x01 separator: absent from run_id/doc_id content, so the
-    # composite key cannot collide across (run, doc) pairs
-    corpus = spark.read.parquet(corpus_root).withColumn(
-        "__uid", F.concat_ws("\x01", F.col("run_id"), F.col(id_col)))
-    n_input = corpus.count()
-    cleaned = text.substring_dedup(
-        corpus, id_col="__uid", text_col=text_col, k=k, skew_safe=skew_safe)
-    out = (
-        corpus.drop(text_col)
-        .join(cleaned, "__uid")
-        .drop("__uid")
-        .withColumnRenamed("clean_text", text_col)
-        .filter((F.col("n_tokens") - F.col("n_removed_tokens")) >= min_tokens)
-    )
-    out.write.mode("overwrite").partitionBy("run_id").parquet(clean_root)
-    if not dedup.has_data_files(spark, clean_root):
-        # min_tokens (or empty text everywhere) can drop every row; a
-        # data-file-less directory cannot be read back for stats
-        return {"input": n_input, "kept": 0, "tokens_removed": 0,
-                "out": clean_root}
-    stats_row = spark.read.parquet(clean_root).agg(
-        F.count(F.lit(1)).alias("kept"),
-        F.coalesce(F.sum("n_removed_tokens"), F.lit(0)).alias("tokens_removed"),
-    ).collect()[0]
-    return {
-        "input": n_input,
-        "kept": stats_row["kept"],
-        "tokens_removed": stats_row["tokens_removed"],
-        "out": clean_root,
-    }
+    def rebuild(corpus: DataFrame) -> DataFrame:
+        cleaned = text.substring_dedup(
+            corpus, id_col="__uid", text_col=text_col, k=k, skew_safe=skew_safe)
+        return (
+            corpus.drop(text_col)
+            .join(cleaned.withColumnRenamed("clean_text", text_col), "__uid")
+            .filter((F.col("n_tokens") - F.col("n_removed_tokens")) >= min_tokens)
+        )
+
+    return _corpus_wide_pass(spark, out_dir, "corpus_clean", id_col, rebuild,
+                             "tokens_removed", F.col("n_removed_tokens"))
 
 
 def run_line_dedup_pass(
@@ -566,35 +527,46 @@ def run_line_dedup_pass(
     shuffles raw) + one doc-keyed rebuild agg, both linear (8.95×
     shuffle at 8× data — SCALING.md round 13).
     """
+    def rebuild(corpus: DataFrame) -> DataFrame:
+        rebuilt = text.global_line_dedup(corpus, id_col="__uid", text_col=text_col)
+        # inner join: docs whose lines all lost drop out
+        return corpus.drop(text_col).join(
+            rebuilt.withColumnRenamed("text_dedup", text_col), "__uid")
+
+    return _corpus_wide_pass(spark, out_dir, "corpus_lines_clean", id_col, rebuild,
+                             "lines_removed", F.col("n_lines") - F.col("n_kept"))
+
+
+def _corpus_wide_pass(spark: SparkSession, out_dir: str, name: str, id_col: str,
+                      rebuild, removed_key: str, removed) -> dict:
+    """The body both corpus-wide passes share: read every run's corpus
+    under ``out_dir`` with a composite ``__uid`` key, ``rebuild`` it,
+    overwrite ``out_dir/<name>`` partitioned by run_id, and read back
+    ``{input, kept, <removed_key>: sum(removed), out}``.
+
+    ``doc_id`` is unique only WITHIN a run (the cross-run screens
+    dedupe by text fingerprint, not id), so the rebuild keys on
+    ``(run_id, doc_id)``: two runs admitting different docs under one
+    doc_id stay two documents, and the join back can never fan out."""
     corpus_root = os.path.join(out_dir, "corpus")
-    clean_root = os.path.join(out_dir, "corpus_lines_clean")
+    clean_root = os.path.join(out_dir, name)
     if not dedup.has_data_files(spark, corpus_root):
-        return {"input": 0, "kept": 0, "lines_removed": 0, "out": clean_root}
+        return {"input": 0, "kept": 0, removed_key: 0, "out": clean_root}
+    # \x01 separator: absent from run_id/doc_id content, so the
+    # composite key cannot collide across (run, doc) pairs
     corpus = spark.read.parquet(corpus_root).withColumn(
         "__uid", F.concat_ws("\x01", F.col("run_id"), F.col(id_col)))
     n_input = corpus.count()
-    rebuilt = text.global_line_dedup(corpus, id_col="__uid", text_col=text_col)
-    out = (
-        corpus.drop(text_col)
-        .join(rebuilt, "__uid")          # inner: all-lines-lost docs drop out
-        .drop("__uid")
-        .withColumnRenamed("text_dedup", text_col)
-    )
-    out.write.mode("overwrite").partitionBy("run_id").parquet(clean_root)
+    rebuild(corpus).drop("__uid").write.mode("overwrite").partitionBy(
+        "run_id").parquet(clean_root)
     if not dedup.has_data_files(spark, clean_root):
-        # every document's text was null/whitespace-only (or every line
-        # lost): the rebuild wrote no data files, and reading a
-        # data-file-less directory raises instead of returning 0 rows
-        return {"input": n_input, "kept": 0, "lines_removed": 0,
-                "out": clean_root}
+        # the rebuild can drop every row (every text empty, or every doc
+        # below the pass's keep rule); a data-file-less directory cannot
+        # be read back for stats
+        return {"input": n_input, "kept": 0, removed_key: 0, "out": clean_root}
     stats_row = spark.read.parquet(clean_root).agg(
         F.count(F.lit(1)).alias("kept"),
-        F.coalesce(F.sum(F.col("n_lines") - F.col("n_kept")), F.lit(0))
-        .alias("lines_removed"),
+        F.coalesce(F.sum(removed), F.lit(0)).alias(removed_key),
     ).collect()[0]
-    return {
-        "input": n_input,
-        "kept": stats_row["kept"],
-        "lines_removed": stats_row["lines_removed"],
-        "out": clean_root,
-    }
+    return {"input": n_input, "kept": stats_row["kept"],
+            removed_key: stats_row[removed_key], "out": clean_root}

@@ -52,10 +52,9 @@ def _run_tag(spark: SparkSession, checkpoint_dir: str) -> str:
     (called before query start, exotic FS).
 
     "r" prefix: a digits-only md5 prefix would make Spark's
-    partition-column type inference read ``ingest_run`` back as BIGINT,
-    and a later deployment's non-numeric tag then crashes the ANSI
-    string→bigint cast in the read-back filter (hit by md5 luck in the
-    round-13 suite). A leading letter pins the inferred type to STRING
+    partition-column type inference read ``ingest_run`` back as BIGINT
+    for a reader of the whole corpus, whose filters would then compare
+    tags as numbers. A leading letter pins the inferred type to STRING
     for every corpus this writes."""
     import hashlib
     import json
@@ -69,45 +68,31 @@ def _run_tag(spark: SparkSession, checkpoint_dir: str) -> str:
             os.path.abspath(checkpoint_dir).encode()).hexdigest()[:11]
 
 
-def _write_batch_partition(payload: DataFrame, corpus_path: str,
-                           run_tag: str, batch_id: int, id_col: str) -> None:
-    """Dynamic-overwrite the (run_tag, batch_id) corpus partition with
-    ``payload`` ∪ the partition's EXISTING rows.
+def _ingest_query(spark: SparkSession, stream: DataFrame, checkpoint_dir: str,
+                  run_tag: str | None, body):
+    """Start the availableNow foreachBatch query of a corpus ingest:
+    each micro-batch is persisted for the duration of
+    ``body(batch_df, batch_id, run_tag)``. A None ``run_tag`` resolves
+    lazily INSIDE the first batch: the checkpoint metadata (the query
+    id the tag derives from) exists by the time the first batch runs,
+    not necessarily when the query is built."""
 
-    The union is the replay guard for PARTIALLY-committed store
-    appends: if the fingerprint/band/vector append crashed mid
-    job-commit, a replayed batch's screen rejects the docs whose store
-    rows became visible and would otherwise rewrite the partition
-    WITHOUT them — deleting durable corpus rows whose fingerprints
-    remain in the store, i.e. permanent loss (r16 review). Unioning the
-    already-durable partition back in makes the rewrite byte-equivalent
-    under every partial state; rows are deterministic re-derivations of
-    the same docs, so the id-keyed dropDuplicates picks identical
-    content either way. The existence probe is a pure FS check — the
-    extra pruned read job runs ONLY on the replay path.
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal run_tag
+        if run_tag is None:
+            run_tag = _run_tag(spark, checkpoint_dir)
+        batch_df = batch_df.persist()
+        try:
+            body(batch_df, batch_id, run_tag)
+        finally:
+            batch_df.unpersist()
 
-    Dynamic overwrite is a per-write option, not a session conf:
-    foreachBatch runs under a CLONED session with isolated conf, where
-    an outer-session conf would silently not apply."""
-    from spaceparts_data_pipeline_spark.operators import dedup
-
-    sess = payload.sparkSession
-    part_dir = os.path.join(corpus_path, f"ingest_run={run_tag}",
-                            f"ingest_batch_id={batch_id}")
-    if dedup.has_data_files(sess, part_dir):
-        existing = sess.read.parquet(corpus_path).filter(
-            (F.col("ingest_run").cast("string") == run_tag)
-            & (F.col("ingest_batch_id") == batch_id))
-        for f in payload.schema.fields:
-            existing = existing.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        payload = (payload.unionByName(existing.select(payload.columns))
-                   .dropDuplicates([id_col]))
-        # materialize BEFORE the overwrite: the union reads the very
-        # files the commit will replace — localCheckpoint finishes the
-        # read and cuts the lineage to a leaf first
-        payload = payload.localCheckpoint()
-    payload.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-        "ingest_run", "ingest_batch_id").parquet(corpus_path)
+    return (
+        stream.writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def windowed_counts(
@@ -245,28 +230,17 @@ def stream_ingest_dedup(
     (any prior run OR prior micro-batch), survivors' payloads land in
     the corpus, and their fingerprints extend the store.
 
-    Exactly-once without a transactional sink, from three properties:
-
-    - the corpus is partitioned by (``ingest_run``, ``ingest_batch_id``)
-      and written with DYNAMIC partition overwrite — a replayed
-      micro-batch (same batch_id, per foreachBatch's contract) rewrites
-      its own partition byte-for-byte instead of appending twice, and
-      an empty survivor set touches no partition at all. ``ingest_run``
-      scopes the overwrite to THIS deployment: batch ids restart at 0
-      whenever a job starts with a fresh checkpoint, so without the run
-      scope a redeployment's batch 0 would silently overwrite the prior
-      deployment's batch-0 documents (whose fingerprints stay in the
-      store — permanent loss). ``run_tag`` defaults to a hash of the
-      streaming query id in the checkpoint's metadata (stable across
-      restarts, regenerated on checkpoint wipe — see :func:`_run_tag`);
-    - the store append is idempotent under the screen (the anti join
-      reads DISTINCT fingerprints — see ``update_fingerprint_store``);
-    - corpus lands BEFORE the store append, and a replayed batch's
-      rewrite unions the partition's already-durable rows back in
-      (:func:`_write_batch_partition`) — so both replayable crash
-      windows (corpus written + store not, and corpus written + store
-      PARTIALLY committed) converge to the same partition content
-      instead of dropping rows whose fingerprints became visible.
+    Exactly-once without a transactional sink: each micro-batch's
+    survivors land through :func:`operators.dedup.land_partition` into
+    the corpus partition (``ingest_run``, ``ingest_batch_id``), and the
+    store appends derive from the rows it returns. ``ingest_run`` scopes
+    the partition to THIS deployment: batch ids restart at 0 whenever a
+    job starts with a fresh checkpoint, so without the run scope a
+    redeployment's batch 0 would overwrite the prior deployment's
+    batch-0 documents (whose fingerprints stay in the store — permanent
+    loss). ``run_tag`` defaults to a hash of the streaming query id in
+    the checkpoint's metadata (stable across restarts, regenerated on
+    checkpoint wipe — see :func:`_run_tag`).
 
     The batch is persisted across the two writes: fingerprints shuffle;
     raw text goes scan→corpus without entering any exchange.
@@ -282,73 +256,37 @@ def stream_ingest_dedup(
     fingerprint appends are under theirs)."""
     from spaceparts_data_pipeline_spark.operators import dedup, dedup_fuzzy
 
-    tag_cell = {"v": run_tag}
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if tag_cell["v"] is None:
-            # resolved lazily INSIDE the batch: the checkpoint metadata
-            # (the query id the tag derives from) exists by the time the
-            # first batch runs, not necessarily when the query is built
-            tag_cell["v"] = _run_tag(spark, checkpoint_dir)
-        run_tag = tag_cell["v"]
+    def body(batch_df: DataFrame, batch_id: int, run_tag: str) -> None:
         # read_store raises on any failure other than "never created" —
         # a transient read fault must NOT silently screen against an
         # empty store.
         store = dedup.read_store(spark, store_path)
-        batch_df = batch_df.persist()
-        try:
-            survivors = dedup.incremental_dedup(
-                batch_df, store, id_col=id_col, text_col=text_col
+        survivors = dedup.incremental_dedup(
+            batch_df, store, id_col=id_col, text_col=text_col
+        )
+        # inner join keeps the fingerprint column IN the payload —
+        # the durable corpus is what the fp-store append reads
+        admitted = survivors.join(batch_df, id_col)
+        if band_store_path is not None:
+            band_store = dedup.read_store(spark, band_store_path)
+            admitted, _ = dedup_fuzzy.incremental_near_dedup(
+                admitted, band_store, id_col=id_col, text_col=text_col,
+                num_perm=num_perm, rows_per_band=rows_per_band,
+                threshold=threshold,
             )
-            # inner join keeps the fingerprint column IN the payload —
-            # the durable corpus is what the fp-store append reads
-            admitted_rows = survivors.join(batch_df, id_col)
-            if band_store_path is not None:
-                band_store = dedup.read_store(spark, band_store_path)
-                admitted_rows, _ = dedup_fuzzy.incremental_near_dedup(
-                    admitted_rows, band_store, id_col=id_col, text_col=text_col,
-                    num_perm=num_perm, rows_per_band=rows_per_band,
-                    threshold=threshold,
-                )
-            payload = (
-                admitted_rows
-                .withColumn("ingest_run", F.lit(run_tag))
-                .withColumn("ingest_batch_id", F.lit(batch_id))
-            )
-            _write_batch_partition(payload, corpus_path, run_tag, batch_id,
-                                   id_col=id_col)
-            # Append fingerprints FROM THE DURABLE CORPUS, not the
-            # in-memory survivors: a replay whose screen already finds
-            # the fingerprints (survivors empty) still completes a
-            # store append that crashed mid-way last time. "Nothing was
-            # EVER admitted" means no data files — an all-screened first
-            # micro-batch's empty dynamic overwrite still creates the
-            # (empty) corpus dir, which a bare exists-gated read would
-            # then fail on with UNABLE_TO_INFER_SCHEMA.
-            if not dedup.has_data_files(spark, corpus_path):
-                return
-            admitted = spark.read.parquet(corpus_path).filter(
-                (F.col("ingest_run").cast("string") == run_tag)
-                & (F.col("ingest_batch_id") == batch_id)
-            )
-            dedup.update_fingerprint_store(spark, admitted, store_path)
-            if band_store_path is not None:
-                # bands recomputed from the DURABLE corpus, same replay
-                # argument as the fingerprints; appends are idempotent
-                # under the band screen's semi-join
-                dedup_fuzzy.band_table(
-                    admitted, id_col=id_col, text_col=text_col,
-                    num_perm=num_perm, rows_per_band=rows_per_band,
-                ).write.mode("append").parquet(band_store_path)
-        finally:
-            batch_df.unpersist()
+        durable = dedup.land_partition(
+            admitted, corpus_path,
+            {"ingest_run": run_tag, "ingest_batch_id": batch_id}, id_col)
+        if durable is None:
+            return
+        dedup.update_fingerprint_store(spark, durable, store_path)
+        if band_store_path is not None:
+            dedup_fuzzy.band_table(
+                durable, id_col=id_col, text_col=text_col,
+                num_perm=num_perm, rows_per_band=rows_per_band,
+            ).write.mode("append").parquet(band_store_path)
 
-    return (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest_query(spark, stream, checkpoint_dir, run_tag, body)
 
 
 def stream_ingest_semdedup(
@@ -376,57 +314,31 @@ def stream_ingest_semdedup(
     prior run or micro-batch admitted; survivors land in the corpus
     and their ``(id, vector, sigs)`` rows extend the store.
 
-    Exactly-once by the s04 construction: the corpus is partitioned by
-    (ingest_run, ingest_batch_id) and written with dynamic partition
-    overwrite (a replayed micro-batch rewrites its own partition, with
-    the partition's already-durable rows unioned back in — see
-    :func:`_write_batch_partition` for why a PARTIALLY-committed store
-    append would otherwise lose rows on replay); the store rows are
-    derived FROM THE DURABLE corpus after the corpus write, so every
-    crash window replays to the same decisions; store appends are
-    idempotent under the existence screen (duplicate store rows change
-    no decision — :func:`operators.similarity.incremental_semdedup`'s
-    contract). ``run_tag`` defaults to the checkpoint-instance scope of
+    Exactly-once by the s04 construction: the corpus partition
+    (ingest_run, ingest_batch_id) lands through
+    :func:`operators.dedup.land_partition` and the store rows derive
+    from the rows it returns; store appends are idempotent under the
+    existence screen (duplicate store rows change no decision —
+    :func:`operators.similarity.incremental_semdedup`'s contract).
+    ``run_tag`` defaults to the checkpoint-instance scope of
     :func:`_run_tag`.
     """
     from spaceparts_data_pipeline_spark.operators import dedup, similarity
 
-    tag_cell = {"v": run_tag}
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if tag_cell["v"] is None:
-            tag_cell["v"] = _run_tag(spark, checkpoint_dir)
-        run_tag = tag_cell["v"]
+    def body(batch_df: DataFrame, batch_id: int, run_tag: str) -> None:
         store = dedup.read_store(spark, sem_store_path)
-        batch_df = batch_df.persist()
-        try:
-            admitted, _ = similarity.incremental_semdedup(
-                batch_df, store, id_col=id_col, vec_col=vec_col, dim=dim,
-                n_planes=n_planes, n_bands=n_bands, threshold=threshold,
-                seed=seed)
-            payload = (
-                admitted
-                .withColumn("ingest_run", F.lit(run_tag))
-                .withColumn("ingest_batch_id", F.lit(batch_id))
-            )
-            _write_batch_partition(payload, corpus_path, run_tag, batch_id,
-                                   id_col=id_col)
-            if not dedup.has_data_files(spark, corpus_path):
-                return
-            durable = spark.read.parquet(corpus_path).filter(
-                (F.col("ingest_run").cast("string") == run_tag)
-                & (F.col("ingest_batch_id") == batch_id)
-            )
-            similarity.det_lsh_signatures(
-                durable, id_col=id_col, vec_col=vec_col, dim=dim,
-                n_planes=n_planes, n_bands=n_bands, seed=seed,
-            ).write.mode("append").parquet(sem_store_path)
-        finally:
-            batch_df.unpersist()
+        admitted, _ = similarity.incremental_semdedup(
+            batch_df, store, id_col=id_col, vec_col=vec_col, dim=dim,
+            n_planes=n_planes, n_bands=n_bands, threshold=threshold,
+            seed=seed)
+        durable = dedup.land_partition(
+            admitted, corpus_path,
+            {"ingest_run": run_tag, "ingest_batch_id": batch_id}, id_col)
+        if durable is None:
+            return
+        similarity.det_lsh_signatures(
+            durable, id_col=id_col, vec_col=vec_col, dim=dim,
+            n_planes=n_planes, n_bands=n_bands, seed=seed,
+        ).write.mode("append").parquet(sem_store_path)
 
-    return (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest_query(spark, stream, checkpoint_dir, run_tag, body)

@@ -450,94 +450,6 @@ def test_stream_upsert_create_batch_dedups_keys(spark, tmp_path):
         spark.sql("DROP DATABASE stream_db3 CASCADE")
 
 
-def test_write_batch_partition_union_preserves_durable_rows(spark, tmp_path):
-    """r16 review: a replay after a PARTIALLY-committed store append
-    re-screens to a SMALLER survivor set; the partition rewrite must
-    union the already-durable rows back in instead of deleting them
-    (their fingerprints are in the store — loss would be permanent)."""
-    import pyspark.sql.functions as F
-
-    corpus = str(tmp_path / "corpus_union")
-    full = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    ).withColumn("ingest_run", F.lit("rtest")).withColumn("ingest_batch_id", F.lit(7))
-    structured._write_batch_partition(full, corpus, "rtest", 7, id_col="doc_id")
-    assert spark.read.parquet(corpus).count() == 2
-
-    # replay computes only doc 2 (doc 1's fp became visible in the store)
-    replay = full.filter(F.col("doc_id") == 2)
-    structured._write_batch_partition(replay, corpus, "rtest", 7, id_col="doc_id")
-    out = {r["doc_id"]: r["text"] for r in spark.read.parquet(corpus).collect()}
-    assert out == {1: "alpha", 2: "beta"}               # doc 1 preserved
-
-    # replay with a NEW survivor unions, not replaces
-    extra = spark.createDataFrame(
-        [(3, "gamma")], "doc_id long, text string"
-    ).withColumn("ingest_run", F.lit("rtest")).withColumn("ingest_batch_id", F.lit(7))
-    structured._write_batch_partition(extra, corpus, "rtest", 7, id_col="doc_id")
-    assert spark.read.parquet(corpus).count() == 3
-
-    # a different batch id is a fresh partition — no union across batches
-    other = spark.createDataFrame(
-        [(9, "delta")], "doc_id long, text string"
-    ).withColumn("ingest_run", F.lit("rtest")).withColumn("ingest_batch_id", F.lit(8))
-    structured._write_batch_partition(other, corpus, "rtest", 8, id_col="doc_id")
-    got = spark.read.parquet(corpus)
-    assert got.count() == 4
-    assert got.filter("ingest_batch_id = 8").count() == 1
-
-
-def test_stream_ingest_replay_after_partial_store_append(spark, tmp_path):
-    """End-to-end r16 review scenario: batch N lands {A, B} in the
-    corpus; the fingerprint append partially commits (only A's fp
-    visible); the checkpoint commit never lands, so a restart REPLAYS
-    batch N — whose screen now rejects A. The replayed rewrite must not
-    delete A's corpus row."""
-    import glob as _glob
-    import os as _os
-
-    src = str(tmp_path / "replay_src")
-    store = str(tmp_path / "replay_store")
-    corpus = str(tmp_path / "replay_corpus")
-    ck = str(tmp_path / "replay_ck")
-    docs = "doc_id long, text string"
-    spark.createDataFrame([(1, "alpha"), (2, "beta")], docs) \
-        .coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(docs).option("maxFilesPerTrigger", 1).parquet(src)
-    q = structured.stream_ingest_dedup(spark, stream, store, corpus, checkpoint_dir=ck)
-    q.awaitTermination(120)
-    corpus_rows = spark.read.parquet(corpus).collect()
-    assert len(corpus_rows) == 2
-    fp_by_doc = {r["doc_id"]: r["fingerprint"] for r in corpus_rows}
-    assert spark.read.parquet(store).distinct().count() == 2
-
-    # simulate the crash window: batch 0's checkpoint commit never
-    # landed (delete commits/0 AND its local-FS .crc sibling — a stale
-    # checksum makes the replay's metadata-log rename fail) and the
-    # store append only half-committed (rewrite the store with doc 1's
-    # fp only — the store holds bare fingerprints)
-    for c in _glob.glob(_os.path.join(ck, "commits", "*")) \
-            + _glob.glob(_os.path.join(ck, "commits", ".*.crc")):
-        if _os.path.isfile(c):
-            _os.remove(c)
-    import shutil
-    shutil.rmtree(store)
-    spark.createDataFrame([(fp_by_doc[1],)], "fingerprint string") \
-        .coalesce(1).write.mode("overwrite").parquet(store)
-
-    # restart with the SAME checkpoint: batch 0 replays; its screen now
-    # rejects doc 1 (fp visible) and admits doc 2 — the rewrite must
-    # keep BOTH corpus rows
-    stream2 = spark.readStream.schema(docs).option("maxFilesPerTrigger", 1).parquet(src)
-    q2 = structured.stream_ingest_dedup(spark, stream2, store, corpus, checkpoint_dir=ck)
-    q2.awaitTermination(120)
-    out = {r["doc_id"]: r["text"] for r in spark.read.parquet(corpus).collect()}
-    assert out == {1: "alpha", 2: "beta"}
-    # and the store converged back to both fingerprints
-    assert ({r["fingerprint"] for r in spark.read.parquet(store).distinct().collect()}
-            == set(fp_by_doc.values()))
-
-
 def test_stream_ingest_wiped_checkpoint_reuse_keeps_prior_batches(spark, tmp_path):
     """r16 review: wiping and REUSING the same checkpoint path restarts
     batch ids at 0 — a path-derived run tag would let the new batch 0's
